@@ -553,7 +553,8 @@ def _engine_ranked_filtered(spark: SparkSession, sf: str) -> DataFrame:
     """Metadata-filtered ranked retrieval end-to-end: top-k among the
     docs inside a time window (``where=`` predicate on the docs table's
     ``ts`` column, executed as a cogrouped per-block filter BEFORE
-    top-k truncation — ``engine.py::_cogroup_filtered``)."""
+    top-k truncation — ``engine.py::_block_worker`` over an allow-list
+    side from ``_mask_side``)."""
     import datetime as dt
 
     from search_engine_spark.fixtures import _EPOCH
@@ -612,7 +613,8 @@ def _engine_ranked_boosted(spark: SparkSession, sf: str) -> DataFrame:
     """Role-boosted ranked retrieval end-to-end: assistant turns ×2,
     tool turns ×0.5 (``engine.ranked_query_boosted_df`` — the boost
     multiplies AFTER score normalization and BEFORE top-k truncation,
-    ``engine.py::_cogroup_boosted``)."""
+    ``engine.py::_block_worker`` over a deny-list side from
+    ``_mask_side``)."""
     eng = _contract_engine_mt(spark, sf)
     boost = (
         F.when(F.col("role") == "assistant", BOOST_ASSISTANT)

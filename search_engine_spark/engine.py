@@ -25,7 +25,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -41,119 +41,174 @@ from search_engine_spark.text.normalize import (
 
 JACCARD_THRESHOLD = 0.35  # reference query.py:14
 DEFAULT_K = 10  # reference query.py:25
+RANKED_SCHEMA = "doc_id long, score double"
 
 
-def _block_scorer(k: int | None):
-    """Per-block exhaustive scorer for ``applyInPandas``.
-
-    Input rows: one per (query term, this block) with wqt, qidx and the
-    encoded postings/weights. Output: (doc_id, score) for the block —
-    the block's top-k when ``k`` is set (tie-break doc_id asc, matching
-    ``diskindex.py:98-99``), or every scored doc when ``k`` is None.
-    Blocks partition the doc space, so a doc's score is COMPLETE within
-    its block and the global top-k is a subset of the union of
-    per-block top-ks — every top-k consumer (exhaustive DataFrame path,
-    WAND scoring rounds) passes ``k`` and ships k rows per block, never
-    the block's full doc range.
-    """
-
-    def score(
-        pdf: pd.DataFrame,
-        *,
-        allowed: np.ndarray | None = None,
-        blocked: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        order = np.argsort(pdf["qidx"].to_numpy(), kind="stable")
-        doc_parts, partial_parts, weight_parts = [], [], []
-        for i in order:
-            d, t = codec.decode_postings(bytes(pdf["postings_bin"].iloc[i]))
-            w = np.frombuffer(bytes(pdf["weights_bin"].iloc[i]), dtype="<f8")
-            doc_parts.append(d)
-            partial_parts.append(pdf["wqt"].iloc[i] * (1.0 + np.log(t)))
-            weight_parts.append(w)
-        docs = np.concatenate(doc_parts)
-        partials = np.concatenate(partial_parts)
-        weights = np.concatenate(weight_parts)
-        if allowed is not None:
-            # predicate filtering happens BEFORE top-k truncation — a
-            # filtered-out doc must never occupy a top-k slot
-            keep = np.isin(docs, allowed)
-            docs, partials, weights = docs[keep], partials[keep], weights[keep]
-        if blocked is not None and blocked.size:
-            # tombstone masking, also pre-top-k: a deleted doc must
-            # neither occupy a slot nor inflate the WAND threshold
-            keep = ~np.isin(docs, blocked)
-            docs, partials, weights = docs[keep], partials[keep], weights[keep]
-        uniq, inv = np.unique(docs, return_inverse=True)
-        acc = np.zeros(uniq.size)
-        np.add.at(acc, inv, partials)  # sequential adds in qidx order
-        ld = np.empty(uniq.size)
-        ld[inv] = weights  # every occurrence carries the same L_d
-        scores = acc / ld
-        idx = np.lexsort((uniq, -scores))  # score desc, doc_id asc
-        if k is not None:
-            idx = idx[:k]
-        return pd.DataFrame({"doc_id": uniq[idx], "score": scores[idx]})
-
-    return score
+def block_id_col(block_span: int) -> Column:
+    """``block_id`` of a ``doc_id`` column: exact integer
+    ``CAST(doc_id DIV block_span AS LONG)`` — a double division would
+    mis-bucket doc_ids above 2^53."""
+    return F.expr(f"CAST(doc_id DIV {int(block_span)} AS LONG)").alias("block_id")
 
 
-def _block_scorer_keyed(k: int | None):
-    """``_block_scorer`` for (query_id, block_id) groups — the batch
-    path scores every query's blocks in ONE job; the key's query_id is
-    re-attached to the output rows."""
-    inner = _block_scorer(k)
-
-    def score(key, pdf):
-        out = inner(pdf)
-        out.insert(0, "query_id", int(key[0]))
-        return out
-
-    return score
+def _tfidf_partials(cells: pd.DataFrame):
+    """tf-idf per posting, ``wqt·(1+ln tf)``, normalized by the doc's
+    L_d (``weights_bin`` — it rides inside the block, so scoring needs
+    no doc_stats join). Yields cells in query-term order (qidx), the
+    float-addition order of the reference's term-at-a-time loop
+    (``query.py:78-83``)."""
+    for i in np.argsort(cells["qidx"].to_numpy(), kind="stable"):
+        d, t = codec.decode_postings(bytes(cells["postings_bin"].iloc[i]))
+        w = np.frombuffer(bytes(cells["weights_bin"].iloc[i]), dtype="<f8")
+        yield d, cells["wqt"].iloc[i] * (1.0 + np.log(t)), w
 
 
-def _block_bm25_scorer(k: int | None, k1: float, b: float, avgdl: float):
-    """Per-block BM25 scorer for ``applyInPandas``.
+def _bm25_partials(k1: float, b: float, avgdl: float):
+    """BM25 per posting, ``wqt·tf(k1+1)/(tf + k1(1-b+b·dl/avgdl))``
+    with wqt = idf and no norm; doc lengths ride inside the block
+    (``doclens_bin``). Yields cells in qidx order."""
 
-    partial = wqt * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)) with
-    wqt = idf; doc lengths ride inside the block (``doclens_bin``), so
-    scoring needs no doc_stats join. Accumulation in qidx order,
-    tie-break doc_id asc — same discipline as the tf-idf scorer.
-    """
-
-    def score(
-        pdf: pd.DataFrame,
-        *,
-        allowed: np.ndarray | None = None,
-        blocked: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        order = np.argsort(pdf["qidx"].to_numpy(), kind="stable")
-        doc_parts, partial_parts = [], []
-        for i in order:
-            d, t = codec.decode_postings(bytes(pdf["postings_bin"].iloc[i]))
-            dl = codec.vb_decode(bytes(pdf["doclens_bin"].iloc[i])).astype(
+    def partials(cells: pd.DataFrame):
+        for i in np.argsort(cells["qidx"].to_numpy(), kind="stable"):
+            d, t = codec.decode_postings(bytes(cells["postings_bin"].iloc[i]))
+            dl = codec.vb_decode(bytes(cells["doclens_bin"].iloc[i])).astype(
                 np.float64
             )
             denom = t + k1 * (1.0 - b + b * dl / avgdl)
-            doc_parts.append(d)
-            partial_parts.append(pdf["wqt"].iloc[i] * (t * (k1 + 1.0)) / denom)
-        docs = np.concatenate(doc_parts)
-        partials = np.concatenate(partial_parts)
-        if allowed is not None:
-            keep = np.isin(docs, allowed)
-            docs, partials = docs[keep], partials[keep]
-        if blocked is not None and blocked.size:
-            keep = ~np.isin(docs, blocked)
-            docs, partials = docs[keep], partials[keep]
-        uniq, inv = np.unique(docs, return_inverse=True)
-        acc = np.zeros(uniq.size)
-        np.add.at(acc, inv, partials)
-        idx = np.lexsort((uniq, -acc))
-        if k is not None:
-            idx = idx[:k]
-        return pd.DataFrame({"doc_id": uniq[idx], "score": acc[idx]})
+            yield d, cells["wqt"].iloc[i] * (t * (k1 + 1.0)) / denom, None
 
-    return score
+    return partials
+
+
+def _synonym_partials(cells: pd.DataFrame):
+    """Synonym-group partials (Lucene ``SynonymQuery``): each group of
+    stems — ``qidx`` holds the group id — scores as ONE pseudo-term,
+    ``gtf = sum`` of member tfs per doc, weighted by the group's
+    pre-computed ``wqt`` (from the group's ANY-member df) and
+    normalized by the in-block L_d. Yields groups in ascending id
+    order (a fixed fold, so the float result is reproducible
+    cross-engine)."""
+    per_gid: dict[int, list] = {}
+    wqt_by_gid: dict[int, float] = {}
+    for gid, wqt, pblob, wblob in zip(
+        cells["qidx"], cells["wqt"], cells["postings_bin"], cells["weights_bin"]
+    ):
+        d, t = codec.decode_postings(bytes(pblob))
+        w = np.frombuffer(bytes(wblob), dtype="<f8")
+        per_gid.setdefault(int(gid), []).append((d, t, w))
+        wqt_by_gid[int(gid)] = float(wqt)
+    for gid in sorted(per_gid):
+        docs, tfs, ws = (np.concatenate(c) for c in zip(*per_gid[gid]))
+        uq, inv = np.unique(docs, return_inverse=True)
+        gtf = np.zeros(uq.size)
+        np.add.at(gtf, inv, tfs.astype(np.float64))  # integer tfs: exact
+        ld = np.empty(uq.size)
+        ld[inv] = ws
+        yield uq, wqt_by_gid[gid] * (1.0 + np.log(gtf)), ld
+
+
+def _block_worker(partials, k, keys, allow=False, per_group=None):
+    """The one ranked-scoring worker, for ``applyInPandas`` over a
+    block's query-term cells (optionally cogrouped with the block's
+    mask side, see :meth:`TranscriptSearchEngine._mask_side`).
+
+    Pipeline: decode each cell into per-posting ``partials`` (doc ids,
+    partial scores, optional per-doc norm) → mask → accumulate per doc
+    in qidx/gid order → divide by the norm → multiply by the boost →
+    cap per group → per-block top-k (score desc, doc_id asc, matching
+    ``diskindex.py:98-99``), or every scored doc when ``k`` is None.
+
+    Blocks partition the doc space, so a doc's score is COMPLETE within
+    its block and the global top-k is a subset of the union of
+    per-block top-ks. Masking happens BEFORE truncation: a filtered-out
+    or deleted doc must neither occupy a top-k slot nor (on the WAND
+    scoring rounds) inflate the pruning threshold, and it never changes
+    a surviving doc's accumulation order. An ``allow`` side keeps only
+    its docs; a deny side drops its NULL-boost (deleted) docs. Boosts
+    multiply AFTER normalization and BEFORE truncation, so a boosted
+    doc can displace an unboosted one and vice versa; docs without a
+    boost row keep weight 1.0. Key columns other than block_id (the
+    batch paths' query_id) are re-attached to the output rows.
+
+    Correctness of the per-block cap: order docs by the total order
+    (score desc, doc_id asc). If doc d belongs to the global
+    diversified top-k, then (a) d is among the global top
+    ``per_group`` of its group, hence also among the top ``per_group``
+    of its group's docs WITHIN ITS BLOCK (ranking within a subset can
+    only improve), so d survives the per-(block, group) cap; and (b)
+    for every block-capped survivor e ahead of d, e's group's global
+    top-``per_group`` contains a doc ahead of e (pointwise: the
+    group's global j-th best beats its block-local j-th best), giving
+    an injection from block survivors ahead of d into GLOBAL
+    diversified candidates ahead of d — fewer than k of those exist,
+    so d is inside the block's top-k too. The global re-cap + top-k
+    over the n_blocks*k survivors happens in the DataFrame plan
+    (window + limit over tiny rows)."""
+
+    def run(key, cells: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        docs, vals, norms = np.empty(0, dtype=np.int64), np.empty(0), None
+        dead = None if side is None else np.isnan(side["boost"].to_numpy())
+        if len(cells) and not (allow and side.empty):
+            parts = list(partials(cells))
+            docs, vals = (np.concatenate([p[j] for p in parts]) for j in (0, 1))
+            if parts[0][2] is not None:
+                norms = np.concatenate([p[2] for p in parts])
+            if side is not None and len(side):
+                sdocs = side["doc_id"].to_numpy()
+                if allow:
+                    keep = np.isin(docs, sdocs[~dead])
+                else:
+                    keep = ~np.isin(docs, sdocs[dead])
+                docs, vals = docs[keep], vals[keep]
+                norms = None if norms is None else norms[keep]
+        uniq, inv = np.unique(docs, return_inverse=True)
+        scores = np.zeros(uniq.size)
+        np.add.at(scores, inv, vals)  # sequential adds in qidx/gid order
+        if norms is not None:
+            ld = np.empty(uniq.size)
+            ld[inv] = norms  # every occurrence carries the same L_d
+            scores = scores / ld
+        if per_group or (not allow and dead is not None and not dead.all()):
+            over = side[~dead].set_index("doc_id").reindex(uniq)
+            scores = scores * over["boost"].fillna(1.0).to_numpy()
+            groups = over["group_key"].to_numpy()
+        idx = np.lexsort((uniq, -scores))  # score desc, doc_id asc
+        if not per_group:
+            idx = idx[:k]
+        out = pd.DataFrame({"doc_id": uniq[idx], "score": scores[idx]})
+        if per_group:
+            out["group_key"] = groups[idx]
+            out = out[out.groupby("group_key", sort=False).cumcount() < per_group]
+            out = out.head(k)
+        for name, value in zip(keys, key):
+            if name != "block_id":
+                out[name] = int(value)
+        return out
+
+    return run
+
+
+def _rank(cells: DataFrame, partials, k, side=None, keys=("block_id",), per_group=None):
+    """The one ranked-scoring plan: per-block :func:`_block_worker` over
+    ``cells`` grouped by ``keys`` — a plain ``groupBy.applyInPandas``
+    when there is no mask side, one ``cogroup`` with the side's
+    ``(df, allow)`` otherwise. Output: (doc_id, score) rows, plus
+    query_id for (query_id, block_id) keys and group_key when
+    ``per_group`` caps groups."""
+    schema = ", ".join(
+        ["query_id int"] * ("query_id" in keys)
+        + ["doc_id long"]
+        + ["group_key string"] * bool(per_group)
+        + ["score double"]
+    )
+    grouped = cells.groupBy(*keys)
+    if side is None:
+        worker = _block_worker(partials, k, keys)
+        return grouped.applyInPandas(lambda key, pdf: worker(key, pdf, None), schema)
+    df, allow = side
+    return grouped.cogroup(df.groupBy(*keys)).applyInPandas(
+        _block_worker(partials, k, keys, allow, per_group), schema
+    )
 
 
 def _block_set_op(n_required: int | None):
@@ -266,176 +321,6 @@ def _block_colloc_pairs(block_span: int):
         )
         out["cnt"] = out["cnt"].astype("int64")
         return out[["term_a", "term_b", "cnt"]]
-
-    return run
-
-
-def _cogroup_filtered(scorer):
-    """Adapter turning a block scorer into a ``cogroup().applyInPandas``
-    worker for metadata-filtered retrieval: the left side is the
-    block's (query term, postings) cells, the right side is the
-    block's ALLOWED doc_ids (the docs-table predicate's survivors,
-    co-shuffled by block_id). The scorer masks candidates against the
-    allowed set before its per-block top-k — filtering happens before
-    truncation, so a filtered-out doc can never displace an allowed
-    one. A block with no allowed docs (or, for a stopword-free
-    predicate column, no query-term cells) short-circuits to empty."""
-
-    def run(cells: pd.DataFrame, allowed: pd.DataFrame) -> pd.DataFrame:
-        if len(cells) == 0 or len(allowed) == 0:
-            return pd.DataFrame(
-                {
-                    "doc_id": np.empty(0, dtype=np.int64),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
-        return scorer(cells, allowed=allowed["doc_id"].to_numpy())
-
-    return run
-
-
-def _cogroup_blocked(scorer):
-    """Adapter turning a block scorer into a ``cogroup().applyInPandas``
-    worker for tombstone masking: the left side is the block's (query
-    term, postings) cells, the right side is the block's DELETED
-    doc_ids (the tombstone snapshot, co-shuffled by block_id so each
-    worker sees exactly the deletions that can touch its docs). The
-    scorer drops deleted candidates BEFORE its per-block top-k — a
-    deleted doc must neither occupy a top-k slot nor (on the WAND
-    scoring rounds) inflate the pruning threshold, which would
-    over-prune live results. A block with no tombstones scores
-    untouched; a tombstone-only group (no cells) short-circuits."""
-
-    def run(cells: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
-        if len(cells) == 0:
-            return pd.DataFrame(
-                {
-                    "doc_id": np.empty(0, dtype=np.int64),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
-        blocked = tomb["doc_id"].to_numpy() if len(tomb) else None
-        return scorer(cells, blocked=blocked)
-
-    return run
-
-
-def _cogroup_blocked_keyed(k: int | None):
-    """Tombstone-masked :func:`_block_scorer_keyed` — the batch paths'
-    (query_id, block_id)-keyed groups, cogrouped with that pair's
-    tombstones (the per-block tombstone set joined to each query id)."""
-    inner = _block_scorer(k)
-
-    def run(key, cells: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
-        if len(cells) == 0:
-            return pd.DataFrame(
-                {
-                    "query_id": np.empty(0, dtype=np.int32),
-                    "doc_id": np.empty(0, dtype=np.int64),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
-        blocked = tomb["doc_id"].to_numpy() if len(tomb) else None
-        out = inner(cells, blocked=blocked)
-        out.insert(0, "query_id", int(key[0]))
-        return out
-
-    return run
-
-
-def _cogroup_boosted(k: int | None, scorer_factory=None):
-    """Field/metadata-boosted scoring adapter: the right cogroup side
-    carries this block's (doc_id, boost) rows for docs whose boost
-    multiplier differs from 1.0, plus boost-NULL rows for tombstoned
-    docs (one co-shuffled side encodes both, see
-    :meth:`TranscriptSearchEngine._boosts_by_block`). The scorer
-    (tf-idf by default; any ``_block_*_scorer`` factory, e.g. BM25)
-    runs un-truncated (k=None — every doc's base score is complete
-    within its block), boosts multiply AFTER the base-score
-    normalization (the BM25F-style "field weight on the whole-doc
-    score" form), and ONLY THEN the per-block top-k applies — a
-    boosted doc must be able to displace an unboosted one and vice
-    versa, so truncation before the multiply would be wrong. Docs
-    without a boost row keep weight 1.0; at scale the right side is
-    O(boosted docs + tombstones) per block, not O(corpus)."""
-    inner = (scorer_factory or _block_scorer)(None)
-
-    def run(cells: pd.DataFrame, boosts: pd.DataFrame) -> pd.DataFrame:
-        if len(cells) == 0:
-            return pd.DataFrame(
-                {
-                    "doc_id": np.empty(0, dtype=np.int64),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
-        blocked = None
-        if len(boosts):
-            dead = boosts.loc[boosts["boost"].isna(), "doc_id"].to_numpy()
-            if dead.size:
-                blocked = dead
-        out = inner(cells, blocked=blocked)
-        if len(boosts):
-            live = boosts.dropna(subset=["boost"])
-            if len(live):
-                m = out.merge(
-                    live[["doc_id", "boost"]], on="doc_id", how="left"
-                )
-                out["score"] = (
-                    out["score"].to_numpy()
-                    * m["boost"].fillna(1.0).to_numpy()
-                )
-        out = out.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        )
-        if k is not None:
-            out = out.head(k)
-        return out
-
-    return run
-
-
-def _cogroup_diverse(k: int, per_group: int):
-    """Diversified (per-group-capped) top-k adapter: at most
-    ``per_group`` results from any one group (conversation) in the
-    final ranking. The right side maps this block's docs to their
-    group keys; the merge is INNER, so docs absent from it (tombstoned
-    ids are anti-joined out upstream) drop out before ranking.
-
-    Correctness of the per-block cap: order docs by the total order
-    (score desc, doc_id asc). If doc d belongs to the global
-    diversified top-k, then (a) d is among the global top
-    ``per_group`` of its group, hence also among the top ``per_group``
-    of its group's docs WITHIN ITS BLOCK (ranking within a subset can
-    only improve), so d survives the per-(block, group) cap; and (b)
-    for every block-capped survivor e ahead of d, e's group's global
-    top-``per_group`` contains a doc ahead of e (pointwise: the
-    group's global j-th best beats its block-local j-th best), giving
-    an injection from block survivors ahead of d into GLOBAL
-    diversified candidates ahead of d — fewer than k of those exist,
-    so d is inside the block's top-k too. The global re-cap + top-k
-    over the n_blocks*k survivors happens in the DataFrame plan
-    (window + limit over tiny rows)."""
-    inner = _block_scorer(None)
-
-    def run(cells: pd.DataFrame, groups: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "doc_id": np.empty(0, dtype=np.int64),
-                "group_key": np.empty(0, dtype=object),
-                "score": np.empty(0, dtype=np.float64),
-            }
-        )
-        if len(cells) == 0 or len(groups) == 0:
-            return empty
-        out = inner(cells)
-        m = out.merge(groups[["doc_id", "group_key"]], on="doc_id", how="inner")
-        if not len(m):
-            return empty
-        m = m.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        )
-        m = m[m.groupby("group_key", sort=False).cumcount() < per_group]
-        return m.head(k)[["doc_id", "group_key", "score"]]
 
     return run
 
@@ -569,69 +454,6 @@ def _cogroup_keywords(n: int, n_docs: float):
         )
 
     return run
-
-
-def _block_synonym_scorer(k: int | None):
-    """Per-block synonym-group scorer (Lucene ``SynonymQuery``): each
-    group of stems scores as ONE pseudo-term — ``gtf = sum`` of member
-    tfs per doc, weighted by the group's pre-computed ``wqt`` (from the
-    group's ANY-member df). Accumulation per doc runs in ascending
-    ``gid`` order (a fixed fold, so the float result is reproducible
-    cross-engine), normalization by the in-block L_d, tie-break doc_id
-    asc — the :func:`_block_scorer` discipline with group-tf blending
-    in front. ``allowed``/``blocked`` kwargs keep it pluggable into
-    the filter/tombstone cogroup adapters."""
-
-    def score(
-        pdf: pd.DataFrame,
-        *,
-        allowed: np.ndarray | None = None,
-        blocked: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        per_gid: dict[int, list[tuple[np.ndarray, np.ndarray, np.ndarray]]] = {}
-        wqt_by_gid: dict[int, float] = {}
-        for gid, wqt, pblob, wblob in zip(
-            pdf["gid"], pdf["wqt"], pdf["postings_bin"], pdf["weights_bin"]
-        ):
-            d, t = codec.decode_postings(bytes(pblob))
-            w = np.frombuffer(bytes(wblob), dtype="<f8")
-            per_gid.setdefault(int(gid), []).append((d, t, w))
-            wqt_by_gid[int(gid)] = float(wqt)
-        doc_parts, partial_parts, weight_parts = [], [], []
-        for gid in sorted(per_gid):
-            parts = per_gid[gid]
-            docs_g = np.concatenate([p[0] for p in parts])
-            tfs_g = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            w_g = np.concatenate([p[2] for p in parts])
-            uq, inv = np.unique(docs_g, return_inverse=True)
-            gtf = np.zeros(uq.size)
-            np.add.at(gtf, inv, tfs_g)  # integer tfs: exact in float64
-            ld = np.empty(uq.size)
-            ld[inv] = w_g
-            doc_parts.append(uq)
-            partial_parts.append(wqt_by_gid[gid] * (1.0 + np.log(gtf)))
-            weight_parts.append(ld)
-        docs = np.concatenate(doc_parts)
-        partials = np.concatenate(partial_parts)
-        weights = np.concatenate(weight_parts)
-        if allowed is not None:
-            keep = np.isin(docs, allowed)
-            docs, partials, weights = docs[keep], partials[keep], weights[keep]
-        if blocked is not None and blocked.size:
-            keep = ~np.isin(docs, blocked)
-            docs, partials, weights = docs[keep], partials[keep], weights[keep]
-        uniq, inv = np.unique(docs, return_inverse=True)
-        acc = np.zeros(uniq.size)
-        np.add.at(acc, inv, partials)  # gid-ascending addition order
-        ld = np.empty(uniq.size)
-        ld[inv] = weights
-        scores = acc / ld
-        idx = np.lexsort((uniq, -scores))
-        if k is not None:
-            idx = idx[:k]
-        return pd.DataFrame({"doc_id": uniq[idx], "score": scores[idx]})
-
-    return score
 
 
 def _block_group_union():
@@ -915,6 +737,8 @@ class TranscriptSearchEngine:
         an isin-pushed scan of the terms table; only matching row
         groups are read."""
         uniq = sorted(set(terms))
+        if not uniq:
+            return {}
         rows = (
             self.terms.where(F.col("term").isin(uniq))
             .select("term", "df")
@@ -1015,10 +839,9 @@ class TranscriptSearchEngine:
         ``where`` (Column or SQL string over the docs table's metadata
         columns — role, tool, ts, conv_id …) restricts the ranking to
         matching docs: "top-k among assistant turns", "top-k in this
-        time window". See :meth:`_allowed_by_block` for the execution
+        time window". See :meth:`_mask_side` for the execution
         shape."""
-        terms = self._ranked_terms(query)
-        return self._score_terms_df(terms, k, where=where)
+        return self._score_terms_df(self._ranked_terms(query), k, where=where)
 
     def ranked_query(
         self,
@@ -1078,12 +901,9 @@ class TranscriptSearchEngine:
         between the JVM aggregate and the numpy scorer can only ever
         UNDER-prune (score a few extra blocks), never over-prune.
         """
-        occurrences = self._weighted_occurrences(self._ranked_terms(query))
         return self._wand_topk(
-            occurrences,
+            self._model(self._ranked_terms(query)),
             row_ub=F.col("wqt") * F.col("max_partial"),
-            scorer_factory=_block_scorer,
-            payload_cols=("postings_bin", "weights_bin"),
             k=k,
         )
 
@@ -1096,11 +916,7 @@ class TranscriptSearchEngine:
         BM25's norm is increasing in tf and decreasing in dl, so
         ``idf * f(max_tf, min_dl)`` bounds every posting in the cell.
         """
-        occurrences = self._bm25_occurrences(self._ranked_terms(query))
-        if not occurrences:
-            self._last_wand_stats = {"round1_blocks": 0, "round2_blocks": 0}
-            return []
-        avgdl = self.total_tokens / self.num_docs
+        avgdl = self.total_tokens / max(self.num_docs, 1)
         mt = F.col("max_tf").cast("double")
         row_ub = F.col("wqt") * (
             (mt * F.lit(k1 + 1.0))
@@ -1114,32 +930,29 @@ class TranscriptSearchEngine:
             )
         )
         return self._wand_topk(
-            occurrences,
-            row_ub=row_ub,
-            scorer_factory=lambda kk: _block_bm25_scorer(kk, k1, b, avgdl),
-            payload_cols=("postings_bin", "doclens_bin"),
-            k=k,
+            self._model(self._ranked_terms(query), (k1, b)), row_ub, k
         )
 
-    def _wand_topk(
-        self,
-        occurrences: list[tuple[str, int, float]],
-        row_ub,
-        scorer_factory,
-        payload_cols: tuple[str, ...],
-        k: int,
-    ) -> list[tuple[int, float]]:
+    def _wand_topk(self, model, row_ub, k: int) -> list[tuple[int, float]]:
         """Shared block-max selection (see :meth:`ranked_query_wand`):
         cluster-side upper bounds, two collect-only-survivors rounds,
-        exact scoring of selected blocks with ``scorer_factory(k)`` —
-        each selected block ships its top-k rows to the driver (k per
-        block, not the block's up-to-``block_span`` docs; the global
-        top-k and the round-1 threshold both survive per-block
-        truncation because blocks partition the doc space)."""
+        exact scoring of selected blocks — each selected block ships its
+        top-k rows to the driver (k per block, not the block's
+        up-to-``block_span`` docs; the global top-k and the round-1
+        threshold both survive per-block truncation because blocks
+        partition the doc space)."""
+        occurrences = model[0]
         if not occurrences:
             self._last_wand_stats = {"round1_blocks": 0, "round2_blocks": 0}
             return []
-        scorer = scorer_factory(k)
+
+        def score(block_ids):
+            # tombstones are masked INSIDE the scoring rounds: a deleted
+            # doc in round 1 would inflate the threshold L and over-prune
+            # live docs in round 2
+            pdf = self._scores(model, k, block_ids=block_ids).toPandas()
+            return {int(d): float(s) for d, s in zip(pdf["doc_id"], pdf["score"])}
+
         # adaptive fallback: when the whole index has no more doc-range
         # blocks than round 1 would select anyway, the upper-bound
         # aggregation job is pure overhead (it cannot prune a thing) —
@@ -1149,7 +962,7 @@ class TranscriptSearchEngine:
         # boundaries), which only ever errs toward this exact fallback.
         n_blocks_est = -(-self.num_docs // self.block_span)
         if n_blocks_est <= max(k, 32):
-            scored = self._score_block_ids(occurrences, None, scorer, payload_cols)
+            scored = score(None)
             self._last_wand_stats = {
                 "round1_blocks": 0,
                 "round2_blocks": 0,
@@ -1184,7 +997,7 @@ class TranscriptSearchEngine:
             if not round1:
                 self._last_wand_stats = {"round1_blocks": 0, "round2_blocks": 0}
                 return []
-            scored = self._score_block_ids(occurrences, round1, scorer, payload_cols)
+            scored = score(round1)
             driver_rows = len(scored)
             top = sorted(scored.items(), key=lambda x: (-x[1], x[0]))[:k]
             round2: list[int] = []
@@ -1201,9 +1014,7 @@ class TranscriptSearchEngine:
                     .collect()
                 ]
                 if round2:
-                    extra = self._score_block_ids(
-                        occurrences, round2, scorer, payload_cols
-                    )
+                    extra = score(round2)
                     driver_rows += len(extra)
                     scored.update(extra)
                     top = sorted(scored.items(), key=lambda x: (-x[1], x[0]))[:k]
@@ -1215,58 +1026,6 @@ class TranscriptSearchEngine:
             "driver_rows": driver_rows,
         }
         return top
-
-    def _score_block_ids(
-        self,
-        occurrences: list[tuple[str, int, float]],
-        block_ids: list[int] | None,
-        scorer=None,
-        payload_cols: tuple[str, ...] = ("postings_bin", "weights_bin"),
-    ) -> dict[int, float]:
-        """Exact scores for the given blocks (all query terms of those
-        blocks participate — blocks partition the doc space, so each
-        doc's score is complete within its block). The ``scorer``
-        decides how many rows per block reach the driver: the WAND
-        rounds pass a per-block top-k scorer, so driver traffic is
-        O(selected_blocks * k). ``block_ids=None`` scores every block
-        (the exhaustive plan)."""
-        if scorer is None:
-            scorer = _block_scorer(None)
-        wdf = self.spark.createDataFrame(
-            occurrences, "term string, qidx int, wqt double"
-        )
-        cells = self._postings_for_terms([t for t, _i, _w in occurrences])
-        if block_ids is not None:
-            cells = cells.where(
-                F.col("block_id").isin([int(b) for b in block_ids])
-            )
-        cells = cells.join(F.broadcast(wdf), "term").select(
-            "block_id", "qidx", "wqt", *payload_cols
-        )
-        tomb = self.tombstones
-        if tomb is not None:
-            # tombstones masked INSIDE the scoring rounds: a deleted
-            # doc in round 1 would inflate the threshold L and
-            # over-prune live docs in round 2
-            if block_ids is not None:
-                tomb = tomb.where(
-                    F.col("block_id").isin([int(b) for b in block_ids])
-                )
-            scored = (
-                cells.groupBy("block_id")
-                .cogroup(tomb.groupBy("block_id"))
-                .applyInPandas(
-                    _cogroup_blocked(scorer), "doc_id long, score double"
-                )
-            )
-        else:
-            scored = cells.groupBy("block_id").applyInPandas(
-                scorer, "doc_id long, score double"
-            )
-        pdf = scored.toPandas()
-        return {
-            int(d): float(s) for d, s in zip(pdf["doc_id"], pdf["score"])
-        }
 
     def _ranked_terms(self, query: str) -> list[str]:
         """Normalized query term list, wildcards expanded, duplicates kept
@@ -1297,155 +1056,134 @@ class TranscriptSearchEngine:
             if dfs.get(t)
         ]
 
-    def _allowed_by_block(self, where) -> DataFrame:
-        """(doc_id, block_id) for docs matching a metadata predicate.
+    def _model(self, terms: list[str], bm25=None):
+        """(occurrences, per-posting partials, payload column) of a
+        ranked query over ``terms``: tf-idf, or BM25 with
+        ``bm25=(k1, b)``."""
+        if bm25 is None:
+            return self._weighted_occurrences(terms), _tfidf_partials, "weights_bin"
+        # max(): an empty index has no occurrences, so avgdl goes unused
+        partials = _bm25_partials(*bm25, self.total_tokens / max(self.num_docs, 1))
+        return self._bm25_occurrences(terms), partials, "doclens_bin"
 
-        The docs scan is column-pruned to doc_id + the predicate's
-        columns, and the predicate itself is pushed into the Parquet
-        reader (min/max row-group skipping — a ``ts`` range on a
-        time-ordered corpus prunes storage the way the bucket/term
-        predicates do for postings). block_id = doc_id DIV block_span
-        co-shuffles the survivors with the posting blocks they belong
-        to, so the cogrouped scorer sees each block's allowed set
-        without any per-doc join against posting rows."""
-        pred = F.expr(where) if isinstance(where, str) else where
-        return self.docs.where(pred).select(
-            "doc_id",
-            F.expr(f"CAST(doc_id DIV {self.block_span} AS LONG)").alias(
-                "block_id"
-            ),
-        )
-
-    def _scored_blocks(
-        self, cells: DataFrame, scorer, where, allowed_df: DataFrame | None = None
-    ) -> DataFrame:
-        """Per-block scoring, optionally cogrouped with a metadata
-        filter (see :func:`_cogroup_filtered`) and/or the tombstone
-        snapshot (see :func:`_cogroup_blocked`). With BOTH a filter and
-        tombstones, the tombstones are anti-joined out of the (already
-        co-shuffled) allowed set — one cogroup either way.
-
-        ``allowed_df`` short-circuits the predicate path with an
-        explicit (doc_id, block_id) candidate set — the must-clause
-        shape (phrase-constrained ranking): candidates restrict the
-        RANKING, never the statistics."""
-        out_schema = "doc_id long, score double"
-        tomb = self.tombstones
-        if where is not None or allowed_df is not None:
-            allowed = (
-                allowed_df if allowed_df is not None else self._allowed_by_block(where)
-            )
-            if tomb is not None:
-                allowed = allowed.join(
-                    F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
-                )
-            return (
-                cells.groupBy("block_id")
-                .cogroup(allowed.groupBy("block_id"))
-                .applyInPandas(_cogroup_filtered(scorer), out_schema)
-            )
-        if tomb is not None:
-            return (
-                cells.groupBy("block_id")
-                .cogroup(tomb.groupBy("block_id"))
-                .applyInPandas(_cogroup_blocked(scorer), out_schema)
-            )
-        return cells.groupBy("block_id").applyInPandas(scorer, out_schema)
-
-    def _score_terms_df(
-        self, terms: list[str], k: int, where=None
-    ) -> DataFrame:
-        spark = self.spark
-        empty = spark.createDataFrame([], "doc_id long, score double")
-        if not terms:
-            return empty
-        # df lookup for wqt — one tiny pruned-scan job (the reference's
-        # dictionary point lookups, query.py:80); its result is a handful
-        # of floats, so folding them into the scoring plan as literals
-        # keeps the main job to two stages (decode+explode, agg+top-k).
-        cells = self._ranked_cells(terms)
-        if cells is None:
-            return empty
-        scored = self._scored_blocks(cells, _block_scorer(k), where)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    def _ranked_cells(self, terms: list[str]) -> DataFrame | None:
-        """The ranked paths' shared (block, query-term) cell plan.
+    def _cells(self, rows, schema: str, payload: str) -> DataFrame:
+        """The ranked plans' (block, query-term) cells: the pruned
+        postings scan joined to ``rows``, a broadcast occurrence
+        dimension whose first column is the term, projected to
+        block_id, the other occurrence columns, ``postings_bin`` and
+        the partials' ``payload`` column.
 
         Blocks partition the doc space, so each doc's score is COMPLETE
         within its block: one applyInPandas over (term, block) cells
         scores a whole block in numpy and emits only that block's
         top-k. The global answer is TakeOrderedAndProject over
         n_blocks*k tiny rows — no posting-row explosion, no doc_stats
-        join (L_d rides inside the block, weights_bin), and the only
-        shuffle moves the (compressed) query-term blocks themselves.
-        Partials accumulate in query-term order (qidx), the exact
-        float-addition order of the reference's term-at-a-time loop
-        (query.py:78-83). Returns None for an empty/unknown query."""
-        occurrences = self._weighted_occurrences(terms)
-        if not occurrences:
-            return None
-        wdf = self.spark.createDataFrame(
-            occurrences, "term string, qidx int, wqt double"
-        )
+        join, and the only shuffle moves the (compressed) query-term
+        blocks themselves. The df lookup behind ``rows`` is one tiny
+        pruned-scan job (the reference's dictionary point lookups,
+        query.py:80); folding its handful of floats into the scoring
+        plan as literals keeps the main job to two stages."""
+        occ = self.spark.createDataFrame(rows, schema)
         return (
-            self._postings_for_terms([t for t, _i, _w in occurrences])
-            .join(F.broadcast(wdf), "term")
-            .select("block_id", "qidx", "wqt", "postings_bin", "weights_bin")
+            self._postings_for_terms({r[0] for r in rows})
+            .join(F.broadcast(occ), "term")
+            .select("block_id", *occ.columns[1:], "postings_bin", payload)
         )
 
-    def _block_id_col(self) -> Column:
-        return F.expr(f"CAST(doc_id DIV {self.block_span} AS LONG)").alias(
-            "block_id"
-        )
+    def _mask_side(self, where=None, allowed=None, boost=None, group_col=None):
+        """The ranked plans' one mask side: ``(df, allow)`` with df rows
+        (block_id, doc_id, boost, group_key), co-shuffled with the
+        posting blocks by ``block_id = doc_id DIV block_span`` so each
+        worker sees exactly the rows that can touch its docs — or None
+        when nothing masks, which keeps the plain groupBy plan. The kind
+        is fixed by the caller's arguments:
 
-    def _boosts_by_block(self, boost) -> DataFrame:
-        """(doc_id, block_id, boost) for docs whose multiplier differs
-        from 1.0, plus boost-NULL rows for tombstoned docs — ONE
-        co-shuffled right side carrying both the field weights and the
-        delete mask (see :func:`_cogroup_boosted`). The docs scan is
-        column-pruned to doc_id + the boost expression's inputs, and
-        the ``!= 1.0`` filter keeps the exchanged rows O(boosted docs),
-        not O(corpus) — a role boost over transcripts ships only the
-        boosted roles' ids."""
-        b = F.expr(boost) if isinstance(boost, str) else boost
-        out = (
-            self.docs.select(
+        * allow-list (``allow=True``): docs matching ``where`` (Column
+          or SQL string over the docs metadata), the explicit doc_id
+          candidates ``allowed`` (the phrase must-clause), or every doc
+          with its ``group_col`` value (diversity groups). Only these
+          docs rank; tombstones are anti-joined out. Candidates restrict
+          the RANKING, never the statistics. The docs scan is
+          column-pruned to doc_id + the predicate's columns, and the
+          predicate is pushed into the Parquet reader (min/max row-group
+          skipping — a ``ts`` range on a time-ordered corpus prunes
+          storage the way the bucket/term predicates do for postings).
+        * deny-list (``allow=False``): tombstoned docs as boost-NULL rows
+          (a NULL boost means deleted), plus (doc_id, multiplier) rows
+          for docs whose ``boost`` (Column or SQL string) differs from
+          1.0 — the ``!= 1.0`` filter keeps the exchanged rows
+          O(boosted docs + tombstones) per block, not O(corpus).
+        """
+        tomb, block = self.tombstones, block_id_col(self.block_span)
+        no_group = F.lit(None).cast("string").alias("group_key")
+        if where is not None or allowed is not None or group_col is not None:
+            if allowed is None:
+                pred = F.expr(where) if isinstance(where, str) else where
+                allowed = self.docs if where is None else self.docs.where(pred)
+            side = allowed.select(
+                block,
                 "doc_id",
-                self._block_id_col(),
-                b.cast("double").alias("boost"),
+                F.lit(1.0).alias("boost"),
+                F.col(group_col).cast("string").alias("group_key")
+                if group_col
+                else no_group,
             )
-            .where(F.col("boost") != 1.0)
-        )
-        tomb = self.tombstones
+            if tomb is not None:
+                side = side.join(
+                    F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
+                )
+            return side, True
+        sides = []
+        if boost is not None:
+            b = F.expr(boost) if isinstance(boost, str) else boost
+            sides.append(
+                self.docs.select(
+                    block, "doc_id", b.cast("double").alias("boost"), no_group
+                ).where(F.col("boost") != 1.0)
+            )
         if tomb is not None:
-            out = out.join(
-                F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
-            ).unionByName(
+            sides.append(
                 tomb.select(
-                    "doc_id",
                     "block_id",
+                    "doc_id",
                     F.lit(None).cast("double").alias("boost"),
+                    no_group,
                 )
             )
-        return out
+        return (reduce(DataFrame.unionByName, sides), False) if sides else None
 
-    def _groups_by_block(self, group_col: str) -> DataFrame:
-        """(doc_id, block_id, group_key) for every LIVE doc — the
-        diversified path's right side. Tombstones are anti-joined out
-        here, and the scorer's inner merge then masks deleted docs for
-        free (a doc with no group row cannot rank)."""
-        out = self.docs.select(
-            "doc_id",
-            self._block_id_col(),
-            F.col(group_col).cast("string").alias("group_key"),
-        )
-        tomb = self.tombstones
-        if tomb is not None:
-            out = out.join(
-                F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
-            )
-        return out
+    def _allowed_by_block(self, where) -> DataFrame:
+        """The ``where=`` allow-list side (see :meth:`_mask_side`)."""
+        return self._mask_side(where=where)[0]
+
+    def _scores(
+        self, model, k: int | None, block_ids=None, per_group=None, **mask
+    ) -> DataFrame:
+        """Per-block ranked rows of ``model`` (see :func:`_rank`), masked
+        by :meth:`_mask_side` called with ``mask``; ``block_ids``
+        restricts both cells and side to those blocks (the WAND
+        rounds)."""
+        rows, partials, payload = model
+        cells = self._cells(rows, "term string, qidx int, wqt double", payload)
+        side = self._mask_side(**mask)
+        if block_ids is not None:
+            sel = F.col("block_id").isin([int(b) for b in block_ids])
+            cells = cells.where(sel)
+            side = side and (side[0].where(sel), side[1])
+        return _rank(cells, partials, k, side, per_group=per_group)
+
+    def _top_k(self, model, k: int, **mask) -> DataFrame:
+        """Global top-k (doc_id, score) over :meth:`_scores`' per-block
+        rows — TakeOrderedAndProject over n_blocks*k tiny rows."""
+        if not model[0]:
+            return self.spark.createDataFrame([], RANKED_SCHEMA)
+        scored = self._scores(model, k, **mask)
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def _score_terms_df(self, terms: list[str], k: int, bm25=None, **mask) -> DataFrame:
+        """Top-k (doc_id, score) of ``terms`` under tf-idf or BM25
+        (``bm25=(k1, b)``), masked by :meth:`_mask_side` arguments."""
+        return self._top_k(self._model(terms, bm25), k, **mask)
 
     def ranked_query_boosted_df(
         self, query: str, boost, k: int = DEFAULT_K
@@ -1455,20 +1193,10 @@ class TranscriptSearchEngine:
         tool, recency … — e.g. ``2.0 where role='assistant'``). The
         BM25F-style field weighting for transcripts, executed as a
         cogrouped per-block multiply BEFORE top-k truncation (see
-        :func:`_cogroup_boosted` for why truncation must come after).
+        :func:`_block_worker` for why truncation must come after).
         ``boost`` is a Column or SQL string over the docs table; docs
         not matched keep weight 1.0."""
-        terms = self._ranked_terms(query)
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        cells = self._ranked_cells(terms) if terms else None
-        if cells is None:
-            return empty
-        scored = (
-            cells.groupBy("block_id")
-            .cogroup(self._boosts_by_block(boost).groupBy("block_id"))
-            .applyInPandas(_cogroup_boosted(k), "doc_id long, score double")
-        )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._score_terms_df(self._ranked_terms(query), k, boost=boost)
 
     def ranked_query_diverse_df(
         self,
@@ -1485,26 +1213,17 @@ class TranscriptSearchEngine:
         Execution: per-block scoring cogrouped with the block's
         (doc_id, group_key) map applies the SAME cap per (block,
         group) and per-block top-k (provably lossless — proof in
-        :func:`_cogroup_diverse`), then a window over the surviving
+        :func:`_block_worker`), then a window over the surviving
         n_blocks×k rows re-caps globally and takes the final top-k.
         Output: (doc_id, group_key, score)."""
         from pyspark.sql import Window
 
-        terms = self._ranked_terms(query)
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, group_key string, score double"
-        )
-        cells = self._ranked_cells(terms) if terms else None
-        if cells is None:
-            return empty
-        scored = (
-            cells.groupBy("block_id")
-            .cogroup(self._groups_by_block(group_col).groupBy("block_id"))
-            .applyInPandas(
-                _cogroup_diverse(k, per_group),
-                "doc_id long, group_key string, score double",
+        model = self._model(self._ranked_terms(query))
+        if not model[0]:
+            return self.spark.createDataFrame(
+                [], "doc_id long, group_key string, score double"
             )
-        )
+        scored = self._scores(model, k, per_group=per_group, group_col=group_col)
         w = Window.partitionBy("group_key").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
@@ -1525,36 +1244,12 @@ class TranscriptSearchEngine:
         b: float = 0.75,
     ) -> DataFrame:
         """Metadata-boosted BM25 top-k — :meth:`ranked_query_boosted_df`
-        with the BM25 block scorer (same cogroup shape, same
+        with BM25 partials (same cogroup shape, same
         multiply-after-normalize-before-truncate discipline; the boost
         rides the accumulated BM25 score)."""
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        occurrences = self._bm25_occurrences(self._ranked_terms(query))
-        if not occurrences:
-            return empty
-        avgdl = self.total_tokens / self.num_docs
-        wdf = self.spark.createDataFrame(
-            occurrences, "term string, qidx int, wqt double"
+        return self._score_terms_df(
+            self._ranked_terms(query), k, (k1, b), boost=boost
         )
-        cells = (
-            self._postings_for_terms([t for t, _i, _w in occurrences])
-            .join(F.broadcast(wdf), "term")
-            .select("block_id", "qidx", "wqt", "postings_bin", "doclens_bin")
-        )
-        scored = (
-            cells.groupBy("block_id")
-            .cogroup(self._boosts_by_block(boost).groupBy("block_id"))
-            .applyInPandas(
-                _cogroup_boosted(
-                    k,
-                    scorer_factory=lambda kk: _block_bm25_scorer(
-                        kk, k1, b, avgdl
-                    ),
-                ),
-                "doc_id long, score double",
-            )
-        )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def ranked_query_batch(
         self, queries: list[str], k: int = DEFAULT_K, pruned: bool = False
@@ -1580,7 +1275,7 @@ class TranscriptSearchEngine:
             return [[] for _ in queries]
         dfs = self._term_dfs(all_terms)
         rows = [
-            (qid, t, i, float(log(1 + self.num_docs / dfs[t])))
+            (t, qid, i, float(log(1 + self.num_docs / dfs[t])))
             for qid, terms in enumerate(per_query)
             for i, t in enumerate(terms)
             if dfs.get(t)
@@ -1591,47 +1286,14 @@ class TranscriptSearchEngine:
         # an index whose block count round 1 would fully select
         if pruned and -(-self.num_docs // self.block_span) > max(k, 32):
             return self._ranked_batch_wand(len(queries), rows, k)
-        wdf = self.spark.createDataFrame(
-            rows, "query_id int, term string, qidx int, wqt double"
-        )
-        cells = (
-            self._postings_for_terms({r[1] for r in rows})
-            .join(F.broadcast(wdf), "term")
-            .select(
-                "query_id", "block_id", "qidx", "wqt", "postings_bin", "weights_bin"
-            )
-        )
-        tomb = self.tombstones
-        if tomb is not None:
-            # each block's tombstones apply to EVERY query in the batch
-            # (fresh DataFrame, not a wdf projection — deriving it from
-            # wdf would make the cogroup an ambiguous self-join)
-            qids = self.spark.createDataFrame(
-                [(qid,) for qid in sorted({r[0] for r in rows})],
-                "query_id int",
-            )
-            tomb_q = tomb.crossJoin(F.broadcast(qids)).select(
-                "query_id", "block_id", "doc_id"
-            )
-            scored = (
-                cells.groupBy("query_id", "block_id")
-                .cogroup(tomb_q.groupBy("query_id", "block_id"))
-                .applyInPandas(
-                    _cogroup_blocked_keyed(k),
-                    "query_id int, doc_id long, score double",
-                )
-            )
-        else:
-            scored = cells.groupBy("query_id", "block_id").applyInPandas(
-                _block_scorer_keyed(k), "query_id int, doc_id long, score double"
-            )
         from pyspark.sql.window import Window
 
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
         top = (
-            scored.withColumn("rn", F.row_number().over(w))
+            self._batch_scores(rows, k)
+            .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= k)
             .orderBy("query_id", "rn")
             .collect()
@@ -1642,7 +1304,7 @@ class TranscriptSearchEngine:
         return out
 
     def _ranked_batch_wand(
-        self, n_queries: int, rows: list[tuple[int, str, int, float]], k: int
+        self, n_queries: int, rows: list[tuple[str, int, int, float]], k: int
     ) -> list[list[tuple[int, float]]]:
         """Block-max WAND for a whole query batch — per-query results
         identical to :meth:`ranked_query_wand`, in a CONSTANT number of
@@ -1660,19 +1322,23 @@ class TranscriptSearchEngine:
         """
         spark = self.spark
         n_probe = max(k, 32)
-        occ = spark.createDataFrame(
-            rows, "query_id int, term string, qidx int, wqt double"
-        )
+
+        def pair_scores(pairs):
+            pdf = self._batch_scores(rows, k, pairs).toPandas()
+            return {
+                (int(q), int(d)): float(s)
+                for q, d, s in zip(pdf["query_id"], pdf["doc_id"], pdf["score"])
+            }
+
         by_qt: dict[tuple[int, str], float] = {}
-        for qid, t, _i, w in rows:
+        for t, qid, _i, w in rows:
             by_qt[(qid, t)] = by_qt.get((qid, t), 0.0) + w
         wdf = spark.createDataFrame(
             [(q, t, w) for (q, t), w in by_qt.items()],
             "query_id int, term string, wqt double",
         )
-        all_terms = {t for _q, t, _i, _w in rows}
         meta = (
-            self._postings_for_terms(all_terms)
+            self._postings_for_terms({r[0] for r in rows})
             .join(F.broadcast(wdf), "term")
             .groupBy("query_id", "block_id")
             .agg(F.sum(F.col("wqt") * F.col("max_partial")).alias("ub"))
@@ -1695,7 +1361,7 @@ class TranscriptSearchEngine:
                 .select("query_id", "block_id")
                 .collect()
             ]
-            scored = self._score_batch_pairs(occ, all_terms, round1, k)
+            scored = pair_scores(round1)
             driver_rows = len(scored)
             # running k-th score per query -> round-2 thresholds
             thresholds: list[tuple[int, float]] = []
@@ -1732,7 +1398,7 @@ class TranscriptSearchEngine:
                     .collect()
                 ]
                 if round2:
-                    extra = self._score_batch_pairs(occ, all_terms, round2, k)
+                    extra = pair_scores(round2)
                     driver_rows += len(extra)
                     for (qid, doc), s in extra.items():
                         tops.setdefault(qid, []).append((doc, s))
@@ -1749,55 +1415,32 @@ class TranscriptSearchEngine:
         }
         return [tops.get(qid, []) for qid in range(n_queries)]
 
-    def _score_batch_pairs(
-        self,
-        occ: DataFrame,
-        terms,
-        pairs: list[tuple[int, int]],
-        k: int | None = None,
-    ) -> dict[tuple[int, int], float]:
-        """Exact scores for the given (query_id, block_id) pairs — one
-        job; blocks partition the doc space so each doc's score is
-        complete within its pair, so with ``k`` set each pair ships its
-        top-k rows (driver traffic O(pairs * k), not pairs *
-        block_span)."""
-        if not pairs:
-            return {}
-        sel = self.spark.createDataFrame(pairs, "query_id int, block_id long")
-        cells = (
-            self._postings_for_terms(terms)
-            .join(F.broadcast(occ), "term")
-            .join(F.broadcast(sel), ["query_id", "block_id"], "left_semi")
-            .select(
-                "query_id", "block_id", "qidx", "wqt", "postings_bin", "weights_bin"
-            )
+    def _batch_scores(self, rows, k: int, pairs=None) -> DataFrame:
+        """(query_id, doc_id, score): each (query_id, block_id) pair's
+        top-k for the batch occurrences ``rows`` (term, query_id, qidx,
+        wqt) in one job; ``pairs`` restricts scoring to those pairs (the
+        batch WAND rounds — driver traffic O(pairs * k), not pairs *
+        block_span). A block's tombstones apply to EVERY query that
+        scores it (same threshold-inflation argument as the
+        single-query rounds)."""
+        cells = self._cells(
+            rows, "term string, query_id int, qidx int, wqt double", "weights_bin"
         )
-        tomb = self.tombstones
-        if tomb is not None:
-            # the selected pairs' tombstones, keyed per (query, block):
-            # the per-block tombstone set applies to every query that
-            # selected the block (same threshold-inflation argument as
-            # the single-query rounds)
-            tomb_q = F.broadcast(sel).join(tomb, "block_id").select(
-                "query_id", "block_id", "doc_id"
+        side = self._mask_side()
+        if pairs is not None:
+            sel = F.broadcast(
+                self.spark.createDataFrame(pairs, "query_id int, block_id long")
             )
-            scored = (
-                cells.groupBy("query_id", "block_id")
-                .cogroup(tomb_q.groupBy("query_id", "block_id"))
-                .applyInPandas(
-                    _cogroup_blocked_keyed(k),
-                    "query_id int, doc_id long, score double",
-                )
+            cells = cells.join(sel, ["query_id", "block_id"], "left_semi")
+            side = side and (sel.join(side[0], "block_id"), False)
+        elif side is not None:
+            # a fresh DataFrame, not a projection of the occurrence
+            # dimension — that would make the cogroup an ambiguous self-join
+            qids = self.spark.createDataFrame(
+                [(q,) for q in sorted({r[1] for r in rows})], "query_id int"
             )
-        else:
-            scored = cells.groupBy("query_id", "block_id").applyInPandas(
-                _block_scorer_keyed(k), "query_id int, doc_id long, score double"
-            )
-        pdf = scored.toPandas()
-        return {
-            (int(q), int(d)): float(s)
-            for q, d, s in zip(pdf["query_id"], pdf["doc_id"], pdf["score"])
-        }
+            side = (side[0].crossJoin(F.broadcast(qids)), False)
+        return _rank(cells, _tfidf_partials, k, side, keys=("query_id", "block_id"))
 
     # ------------------------------------------------------------------ BM25
     def bm25_query_df(
@@ -1818,24 +1461,9 @@ class TranscriptSearchEngine:
         occurrence, like ranked_query. ``where`` filters by docs
         metadata (see :meth:`ranked_query_df`).
         """
-        spark = self.spark
-        empty = spark.createDataFrame([], "doc_id long, score double")
-        occurrences = self._bm25_occurrences(self._ranked_terms(query))
-        if not occurrences:
-            return empty
-        avgdl = self.total_tokens / self.num_docs
-        wdf = spark.createDataFrame(
-            occurrences, "term string, qidx int, wqt double"
+        return self._score_terms_df(
+            self._ranked_terms(query), k, (k1, b), where=where
         )
-        cells = (
-            self._postings_for_terms([t for t, _i, _w in occurrences])
-            .join(F.broadcast(wdf), "term")
-            .select("block_id", "qidx", "wqt", "postings_bin", "doclens_bin")
-        )
-        scored = self._scored_blocks(
-            cells, _block_bm25_scorer(k, k1, b, avgdl), where
-        )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def _bm25_occurrences(
         self, terms: list[str]
@@ -2066,31 +1694,10 @@ class TranscriptSearchEngine:
         struct-max (score, -doc_id) folds best-score, tie-break and
         best-turn id into a single agg — no window, no second pass."""
         out_schema = "conv_id string, score double, n_hits long, best_doc long"
-        terms = self._ranked_terms(query)
-        empty = self.spark.createDataFrame([], out_schema)
-        if not terms:
-            return empty
-        if bm25:
-            occurrences = self._bm25_occurrences(terms)
-            scorer = _block_bm25_scorer(
-                None, k1, b, self.total_tokens / self.num_docs
-            )
-            payload = "doclens_bin"
-        else:
-            occurrences = self._weighted_occurrences(terms)
-            scorer = _block_scorer(None)
-            payload = "weights_bin"
-        if not occurrences:
-            return empty
-        wdf = self.spark.createDataFrame(
-            occurrences, "term string, qidx int, wqt double"
-        )
-        cells = (
-            self._postings_for_terms([t for t, _i, _w in occurrences])
-            .join(F.broadcast(wdf), "term")
-            .select("block_id", "qidx", "wqt", "postings_bin", payload)
-        )
-        scored = self._scored_blocks(cells, scorer, where)
+        model = self._model(self._ranked_terms(query), (k1, b) if bm25 else None)
+        if not model[0]:
+            return self.spark.createDataFrame([], out_schema)
+        scored = self._scores(model, None, where=where)
         keyed = scored.join(self.docs.select("doc_id", "conv_id"), "doc_id")
         best = F.max(F.struct(F.col("score"), (-F.col("doc_id")).alias("neg_id")))
         rolled = (
@@ -2253,7 +1860,7 @@ class TranscriptSearchEngine:
             return empty
         fg = (
             self._mask_deleted(self._any_term_df(present))
-            .select("doc_id", self._block_id_col())
+            .select("doc_id", block_id_col(self.block_span))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         try:
@@ -2434,25 +2041,15 @@ class TranscriptSearchEngine:
         phrase's terms. Statistics (N, df, L_d) stay corpus-global —
         the phrase restricts the CANDIDATES, exactly the ``where=`` /
         tombstone discipline (masking happens BEFORE per-block top-k
-        truncation, via the same cogroup adapter)."""
+        truncation, via the same mask side)."""
         terms = [t for t in (query_normalize(w) for w in query.split()) if t]
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not terms:
-            return empty
         # scoring dedupes (the twin's ranked_scores scores each DISTINCT
         # term once — a repeated phrase word must not double its idf
-        # contribution); the positional match below keeps the ordered
+        # contribution); the positional match keeps the ordered
         # duplicate-preserving list, which phrase semantics require
-        cells = self._ranked_cells(sorted(set(terms)))
-        if cells is None:
-            return empty
-        allowed = self._phrase_df(terms).select(
-            "doc_id", self._block_id_col()
+        return self._score_terms_df(
+            sorted(set(terms)), k, allowed=self._phrase_df(terms)
         )
-        scored = self._scored_blocks(
-            cells, _block_scorer(k), None, allowed_df=allowed
-        )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def synonym_ranked_df(
         self, groups: list[list[str]], k: int = DEFAULT_K
@@ -2468,13 +2065,13 @@ class TranscriptSearchEngine:
         per-block union counts over the members' posting cells (blocks
         partition docs, so the integer partials sum exactly); (2) the
         standard per-block scoring plan with group-tf blending inside
-        the scorer (:func:`_block_synonym_scorer`), tombstones
+        the partials (:func:`_synonym_partials`), tombstones
         cogrouped as usual."""
         mapping: list[tuple[str, int]] = []
         for gi, g in enumerate(groups):
             stems = sorted({query_normalize(w) for w in g if query_normalize(w)})
             mapping.extend((t, gi) for t in stems)
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
+        empty = self.spark.createDataFrame([], RANKED_SCHEMA)
         if not mapping:
             return empty
         qdf = self.spark.createDataFrame(mapping, "term string, gid int")
@@ -2493,21 +2090,12 @@ class TranscriptSearchEngine:
         gdfs = {int(r["gid"]): int(r["df"]) for r in gdf_rows if r["df"]}
         if not gdfs:
             return empty
-        live = [(t, gi) for t, gi in mapping if gi in gdfs]
-        wdf = self.spark.createDataFrame(
-            [
-                (t, gi, float(log(1 + self.num_docs / gdfs[gi])))
-                for t, gi in live
-            ],
-            "term string, gid int, wqt double",
-        )
-        cells = (
-            self._postings_for_terms([t for t, _ in live])
-            .join(F.broadcast(wdf), "term")
-            .select("block_id", "gid", "wqt", "postings_bin", "weights_bin")
-        )
-        scored = self._scored_blocks(cells, _block_synonym_scorer(k), None)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        rows = [
+            (t, gi, float(log(1 + self.num_docs / gdfs[gi])))
+            for t, gi in mapping
+            if gi in gdfs
+        ]
+        return self._top_k((rows, _synonym_partials, "weights_bin"), k)
 
     def bm25f_conv_df(
         self,
@@ -2530,7 +2118,7 @@ class TranscriptSearchEngine:
         Cost shape — no corpus re-tokenize: per-(conv, term, role) tfs
         come from decoding the QUERY-PRUNED posting cells cogrouped
         with a blocks-restricted docs-metadata projection
-        (:func:`_cogroup_conv_tf`, the ``_cogroup_boosted`` shape);
+        (:func:`_cogroup_conv_tf`, the ranked mask-side cogroup shape);
         per-(conv, role) field lengths come from ``doc_stats`` (the
         index's own doc_len), one thin join + integer agg."""
         from search_engine_spark.simple import bm25f_score_topk
@@ -2554,7 +2142,7 @@ class TranscriptSearchEngine:
         # the corpus-stats discipline every query path follows
         meta = self._mask_deleted(
             self.docs.select(
-                "doc_id", self._block_id_col(), "conv_id", "role"
+                "doc_id", block_id_col(self.block_span), "conv_id", "role"
             )
             .where(F.col("role").isin(roles))
             .join(F.broadcast(blocks), "block_id", "left_semi")
@@ -2709,7 +2297,7 @@ class TranscriptSearchEngine:
         meta = self._mask_deleted(
             self.docs.select(
                 "doc_id",
-                self._block_id_col(),
+                block_id_col(self.block_span),
                 ((us - F.pmod(us, b)) / b).cast("long").alias("bucket"),
             ).join(F.broadcast(blocks), "block_id", "left_semi")
         )
@@ -2856,8 +2444,6 @@ class TranscriptSearchEngine:
             if w:
                 cands.update(self.fuzzy_expand(w, max_dist))
         stems = sorted({query_normalize(w) for w in cands})
-        if not stems:
-            return self.spark.createDataFrame([], "doc_id long, score double")
         return self._score_terms_df(stems, k)
 
     # --------------------------------------------------------------- spelling

@@ -244,7 +244,7 @@ def fsck_index(
     block-cogrouped weight/doclen/L2-norm cross-check against
     ``doc_stats`` (one full co-shuffle — compaction's cost class).
     """
-    from search_engine_spark.engine import TranscriptSearchEngine
+    from search_engine_spark.engine import TranscriptSearchEngine, block_id_col
 
     eng = TranscriptSearchEngine(spark, index_dir, cache=False)
     rows: list[tuple[str, int, int]] = []
@@ -368,7 +368,7 @@ def fsck_index(
     if deep:
         stats_by_block = eng.doc_stats.select(
             "doc_id",
-            (F.col("doc_id") / F.lit(eng.block_span)).cast("long").alias("block_id"),
+            block_id_col(eng.block_span),
             "weight",
             "doc_len",
         )
