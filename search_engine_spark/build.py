@@ -40,7 +40,6 @@ from pyspark.storagelevel import StorageLevel
 from search_engine_spark import fsio
 from search_engine_spark.functions.udfs import (
     analyze_doc_udf,
-    analyze_udf,
     encode_positions_udf,
     encode_postings_udf,
     encode_weights_udf,
@@ -57,9 +56,9 @@ from search_engine_spark.operators.docids import with_doc_ids_counted
 # blocks per hot term, spread over the cluster).
 DEFAULT_BLOCK_SPAN = 1 << 16
 
-# The phrase matcher packs (block-local doc offset, shifted position)
-# into one int64: offset < block_span <= 2^30, shifted position < 2^33
-# (engine._block_phrase). Larger spans would silently overflow the key.
+# The positional workers pack (block-local doc offset, position) into
+# one int64 key: offset < block_span <= 2^30, position < 2^33
+# (engine._decode_cells). Larger spans would silently overflow the key.
 MAX_BLOCK_SPAN = 1 << 30
 
 # Hash-bucketed storage layout: postings are written under
@@ -102,38 +101,6 @@ def term_bucket_col(col, n_buckets: int):
     """crc32(term) % N as a Column — matches :func:`term_bucket` exactly
     (both are unsigned CRC-32 of the UTF-8 bytes)."""
     return (F.crc32(F.encode(col, "UTF-8")) % F.lit(n_buckets)).cast("int")
-
-
-def _tokens(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id", F.explode(analyze_udf("text")).alias("tk")
-    ).select(
-        "doc_id",
-        F.col("tk.term").alias("term"),
-        F.col("tk.pos").alias("pos"),
-        F.col("tk.raw").alias("raw"),
-    )
-
-
-def term_doc_tf(docs: DataFrame) -> DataFrame:
-    """The positional tf table: one row per (term, doc) with sorted positions.
-
-    Mirrors the reference's in-memory positional index build
-    (``memoryindex.py:22-49``, ``diskindex.py:162-185``).
-    """
-    return _tokens(docs).groupBy("term", "doc_id").agg(
-        F.count("*").cast("int").alias("tf"),
-        F.sort_array(F.collect_list("pos")).alias("positions"),
-    )
-
-
-def doc_weights(tf: DataFrame) -> DataFrame:
-    """L_d = sqrt(sum (1+ln tf)^2) per doc (``diskindex.py:302-306``)."""
-    return tf.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.pow(F.lit(1.0) + F.log("tf"), F.lit(2.0)))).alias("weight"),
-        F.sum("tf").cast("long").alias("doc_len"),
-        F.count("*").cast("long").alias("n_terms"),
-    )
 
 
 POSTINGS_SCHEMA = (

@@ -211,60 +211,101 @@ def _rank(cells: DataFrame, partials, k, side=None, keys=("block_id",), per_grou
     )
 
 
+_EMPTY = np.empty(0, dtype=np.int64)
+
+
+def _decode_cells(cells: pd.DataFrame, labels=(), base=None) -> dict[str, np.ndarray]:
+    """The one posting-cell decoder of the non-ranked workers: a frame
+    of cells (``postings_bin``, plus ``positions_bin`` / ``weights_bin``
+    when projected) becomes flat numpy columns, each ``labels`` column
+    of ``cells`` (term / slot / gid …) repeated alongside.
+
+    * ``base=None``: one row per posting — ``doc_id``, ``tf``, the
+      labels, and ``weight`` (the doc's L_d) when ``weights_bin`` is
+      present.
+    * ``base`` = the block's first doc id: one row per occurrence —
+      ``okey = (doc_id - base)·2^33 + pos`` and the labels. The
+      block-local doc offset is < block_span <= 2^30
+      (``build.MAX_BLOCK_SPAN``) and positions are doc-local and
+      < 2^33, so okey fits an int64, sorts by (doc, position), and a
+      key shifted by a few positions never aliases into a neighbouring
+      doc's key space.
+    """
+    decoded = [codec.decode_postings(bytes(b)) for b in cells["postings_bin"]]
+    if base is None:
+        counts = [d.size for d, _t in decoded]
+        out = {
+            "doc_id": np.concatenate([_EMPTY, *(d for d, _t in decoded)]),
+            "tf": np.concatenate([_EMPTY, *(t for _d, t in decoded)]),
+        }
+        if "weights_bin" in cells:
+            out["weight"] = np.concatenate(
+                [np.empty(0)]
+                + [np.frombuffer(bytes(w), dtype="<f8") for w in cells["weights_bin"]]
+            )
+    else:
+        counts = [int(t.sum()) for _d, t in decoded]
+        okeys = [
+            (np.repeat(d, t) - base) * np.int64(1 << 33)
+            + codec.decode_positions_flat(bytes(p), t)
+            for (d, t), p in zip(decoded, cells["positions_bin"])
+        ]
+        out = {"okey": np.concatenate([_EMPTY, *okeys])}
+    for label in labels:
+        out[label] = np.repeat(cells[label].to_numpy(), counts)
+    return out
+
+
 def _block_set_op(n_required: int | None):
     """Per-block boolean doc-set worker: AND of all ``n_required``
     distinct terms (``utils.py:33-51``) or, when None, OR across
-    whatever terms are present (``utils.py:54-92``)."""
+    whatever terms are present (``utils.py:54-92``). A term's postings
+    may span several cells (segments concatenate), so the AND groups
+    postings by term code, never by cell."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # accumulate per term (never overwrite): (term, block_id) rows
-        # are unique by construction, but segments concatenate safely
-        # if an old/foreign index ever violates that
-        arrs: dict[object, list[np.ndarray]] = {}
-        for term, blob in zip(pdf["term"], pdf["postings_bin"]):
-            d, _ = codec.decode_postings(bytes(blob))
-            arrs.setdefault(term, []).append(d)
-        merged = [np.concatenate(v) if len(v) > 1 else v[0] for v in arrs.values()]
+        terms, code = np.unique(pdf["term"].to_numpy(), return_inverse=True)
+        c = _decode_cells(pdf.assign(code=code), ("code",))
         if n_required is None:
-            out = np.unique(np.concatenate(merged))
-        elif len(merged) < n_required:
-            out = np.empty(0, dtype=np.int64)
+            out = np.unique(c["doc_id"])
+        elif terms.size < n_required:
+            out = _EMPTY
         else:
-            out = reduce(np.intersect1d, merged)
+            per_term = (c["doc_id"][c["code"] == i] for i in range(terms.size))
+            out = reduce(np.intersect1d, per_term)
         return pd.DataFrame({"doc_id": out})
 
     return run
 
 
-def _block_phrase(n_slots: int, block_span: int):
-    """Per-block positional phrase matcher.
+def _block_positional(slots, offsets, block_span: int):
+    """Per-block positional matcher: slot i reads the occurrences of
+    the cells whose ``slot`` label equals ``slots[i]``, and the docs
+    returned are those where, for some tuple in ``offsets``, every slot
+    i has an occurrence whose shifted key ``okey - tuple[i]`` is shared
+    by all slots (see :func:`_decode_cells` for ``okey``). Each slot's
+    keys are n-way ``np.intersect1d``-ed per tuple — fully vectorized,
+    no per-doc Python loop.
 
-    Reference semantics (``query.py:143-160``): shift slot i's positions
-    by -i, docs where every slot shares a shifted position match. Within
-    a block, encode each (doc, shifted position) pair as one int64 key
-    ``(doc_id - block_base) * 2^33 + shifted + n_slots`` (block-local
-    doc offset < block_span <= 2^30, shifted + n >= 0 and < 2^33), then
-    the phrase docs are the keys surviving an n-way ``np.intersect1d``.
-    Fully vectorized — no per-doc Python loop.
-    """
+    * A phrase (reference ``query.py:143-160``: shift slot i's
+      positions by -i, intersect) is the single tuple
+      ``(0, 1, …, n-1)``.
+    * ``a NEAR/k b`` is the tuples ``(0, d)`` for d in
+      ``[-k..k] \\ {0}``; ``a NEAR/k a`` needs two DISTINCT positions,
+      which the half-window d in ``[1..k]`` gives for free.
+
+    Every tuple starts at offset 0, so a shared key is slot 0's own
+    okey and its high bits give the matching doc."""
 
     def run(key, pdf):
         base = int(key[0]) * block_span
-        per_slot: dict[int, list[np.ndarray]] = {}
-        for slot, pblob, posblob in zip(
-            pdf["slot"], pdf["postings_bin"], pdf["positions_bin"]
-        ):
-            d, t = codec.decode_postings(bytes(pblob))
-            flat = codec.decode_positions_flat(bytes(posblob), t)
-            comp = (np.repeat(d, t) - base) * np.int64(1 << 33) + (
-                flat - int(slot) + n_slots
-            )
-            per_slot.setdefault(int(slot), []).append(comp)
-        if len(per_slot) < n_slots:
-            return pd.DataFrame({"doc_id": np.empty(0, dtype=np.int64)})
-        arrs = [np.concatenate(v) for v in per_slot.values()]
-        common = reduce(np.intersect1d, arrs)
-        docs = np.unique(common >> np.int64(33)) + base
+        c = _decode_cells(pdf, ("slot",), base)
+        keys = [c["okey"][c["slot"] == s] for s in slots]
+        hits = [
+            reduce(np.intersect1d, (k - o for k, o in zip(keys, tup)))
+            for tup in offsets
+        ]
+        docs = np.unique(np.concatenate([_EMPTY, *hits]) >> 33) + base
         return pd.DataFrame({"doc_id": docs})
 
     return run
@@ -274,11 +315,9 @@ def _block_colloc_pairs(block_span: int):
     """Per-block adjacent-bigram partial counts from posting positions
     (the decode half of index-backed collocations).
 
-    Same composite-key trick as :func:`_block_phrase`: every decoded
-    occurrence becomes ``(doc_id - block_base) * 2^33 + pos``; an
-    adjacent pair (term_a at pos, term_b at pos+1, same doc) is then a
-    hash-merge of the occurrence table against itself on ``key`` vs
-    ``key - 1`` — positions are doc-local and < 2^33, so a doc's last
+    An adjacent pair (term_a at pos, term_b at pos+1, same doc) is a
+    hash-merge of the block's occurrence table against itself on
+    ``okey`` vs ``okey - 1`` (:func:`_decode_cells`) — a doc's last
     position + 1 can never alias into the next doc's key space, and
     blocks partition the doc space, so no pair crosses a block.
     Multi-term positions (dehyphenation sub-terms share one position,
@@ -288,116 +327,35 @@ def _block_colloc_pairs(block_span: int):
     """
 
     def run(key, pdf):
-        base = int(key[0]) * block_span
-        keys: list[np.ndarray] = []
-        terms: list[np.ndarray] = []
-        for term, pblob, posblob in zip(
-            pdf["term"], pdf["postings_bin"], pdf["positions_bin"]
-        ):
-            d, t = codec.decode_postings(bytes(pblob))
-            flat = codec.decode_positions_flat(bytes(posblob), t)
-            keys.append((np.repeat(d, t) - base) * np.int64(1 << 33) + flat)
-            terms.append(np.full(len(flat), str(term), dtype=object))
-        empty = pd.DataFrame(
-            {
-                "term_a": pd.Series([], dtype=object),
-                "term_b": pd.Series([], dtype=object),
-                "cnt": pd.Series([], dtype="int64"),
-            }
-        )
-        if not keys:
-            return empty
-        k_all = np.concatenate(keys)
-        t_all = np.concatenate(terms)
-        left = pd.DataFrame({"k": k_all, "term_a": t_all})
-        right = pd.DataFrame({"k": k_all - np.int64(1), "term_b": t_all})
+        c = _decode_cells(pdf, ("term",), int(key[0]) * block_span)
+        left = pd.DataFrame({"k": c["okey"], "term_a": c["term"]})
+        right = pd.DataFrame({"k": c["okey"] - 1, "term_b": c["term"]})
         m = left.merge(right, on="k")
-        if m.empty:
+        return m.groupby(["term_a", "term_b"], sort=False).size().reset_index(name="cnt")
+
+    return run
+
+
+def _block_doc_agg(by, aggs):
+    """Per-block doc-side aggregate for the analytics plans (see
+    :meth:`TranscriptSearchEngine._doc_agg`): decode the block's cells
+    into one row per posting (doc_id, tf, the cells' ``by`` labels),
+    inner-join them on doc_id to the block's doc side when there is one
+    (foreground docs, (conv_id, role), bucket — tombstone-masked
+    upstream, so the join also drops deleted docs' postings), and emit
+    the pandas named aggregations ``aggs`` grouped by ``by``. Every
+    aggregate is an integer count or sum, and blocks partition the doc
+    space, so the block partials sum exactly downstream. Only posting
+    DECODE happens here — the corpus text is never re-tokenized."""
+    empty = pd.DataFrame(columns=[*by, *aggs])
+
+    def run(cells: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        if cells.empty or (side is not None and side.empty):
             return empty
-        out = (
-            m.groupby(["term_a", "term_b"], sort=False)
-            .size()
-            .reset_index(name="cnt")
-        )
-        out["cnt"] = out["cnt"].astype("int64")
-        return out[["term_a", "term_b", "cnt"]]
-
-    return run
-
-
-def _block_near(term_a: str, term_b: str, max_dist: int, block_span: int):
-    """Per-block positional NEAR/k matcher (proximity search).
-
-    Same composite-key trick as :func:`_block_phrase`: each (doc,
-    position) pair becomes ``(doc_id - block_base) * 2^33 + pos +
-    max_dist`` (the ``+ max_dist`` keeps shifted keys non-negative;
-    ``pos + 2*max_dist`` stays < 2^33 for any in-block position). A
-    pair of occurrences with ``pos_a - pos_b = delta`` shows up as a
-    key collision between ``keys_a`` and ``keys_b + delta``, so the
-    NEAR/k docs are the union over ``delta in [-k..k] \\ {0}`` of
-    ``intersect1d(keys_a, keys_b + delta)`` — fully vectorized,
-    2k sorted intersects per block, no per-doc Python loop.
-    ``a NEAR/k a`` needs two DISTINCT positions, which the symmetric
-    ``delta in [1..k]`` half-window gives for free.
-    """
-    same = term_a == term_b
-    deltas = (
-        list(range(1, max_dist + 1))
-        if same
-        else [d for d in range(-max_dist, max_dist + 1) if d != 0]
-    )
-
-    def run(key, pdf):
-        base = int(key[0]) * block_span
-        per_term: dict[str, list[np.ndarray]] = {}
-        for term, pblob, posblob in zip(
-            pdf["term"], pdf["postings_bin"], pdf["positions_bin"]
-        ):
-            d, t = codec.decode_postings(bytes(pblob))
-            flat = codec.decode_positions_flat(bytes(posblob), t)
-            comp = (np.repeat(d, t) - base) * np.int64(1 << 33) + (
-                flat + max_dist
-            )
-            per_term.setdefault(str(term), []).append(comp)
-        if term_a not in per_term or term_b not in per_term:
-            return pd.DataFrame({"doc_id": np.empty(0, dtype=np.int64)})
-        ka = np.concatenate(per_term[term_a])
-        kb = ka if same else np.concatenate(per_term[term_b])
-        hits = [np.intersect1d(ka, kb + np.int64(delta)) for delta in deltas]
-        common = np.concatenate(hits) if hits else np.empty(0, dtype=np.int64)
-        docs = np.unique(common >> np.int64(33)) + base
-        return pd.DataFrame({"doc_id": docs})
-
-    return run
-
-
-def _cogroup_fg_df():
-    """Per-block foreground-df counter for significant-terms: the left
-    cogroup side is EVERY posting cell of a block that contains
-    foreground docs, the right side is that block's foreground doc ids.
-    Emits (term, fg_df_partial) = how many foreground docs of this
-    block contain the term; partials sum exactly (integers, and blocks
-    partition the doc space). Only posting DECODE happens here — the
-    corpus text is never touched."""
-
-    def run(cells: pd.DataFrame, fg: pd.DataFrame) -> pd.DataFrame:
-        if len(cells) == 0 or len(fg) == 0:
-            return pd.DataFrame(
-                {
-                    "term": pd.Series(dtype=object),
-                    "fg_df": pd.Series(dtype="int64"),
-                }
-            )
-        allowed = np.unique(fg["doc_id"].to_numpy())
-        agg: dict[object, int] = {}
-        for term, blob in zip(cells["term"], cells["postings_bin"]):
-            d, _t = codec.decode_postings(bytes(blob))
-            c = int(np.isin(d, allowed, assume_unique=True).sum())
-            if c:
-                agg[term] = agg.get(term, 0) + c
-        return pd.DataFrame(
-            {"term": list(agg), "fg_df": np.fromiter(agg.values(), "int64", len(agg))}
-        )
+        long = pd.DataFrame(_decode_cells(cells, [c for c in by if c in cells]))
+        if side is not None:
+            long = long.merge(side.drop_duplicates("doc_id"), on="doc_id")
+        return long.groupby(list(by), as_index=False, sort=False).agg(**aggs)
 
     return run
 
@@ -409,34 +367,18 @@ def _cogroup_keywords(n: int, n_docs: float):
     its block, so its top-n terms by ``(1+ln tf)·ln(1+N/df)`` are
     COMPLETE here — no corpus-wide window. Ranking uses the UNROUNDED
     score (ties on term asc), matching ``simple.keywords``."""
+    empty = pd.DataFrame(columns=["doc_id", "term", "tf_idf", "rank"])
 
     def run(cells: pd.DataFrame, dfs: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "doc_id": np.empty(0, dtype=np.int64),
-                "term": pd.Series(dtype=object),
-                "tf_idf": np.empty(0, dtype=np.float64),
-                "rank": np.empty(0, dtype=np.int32),
-            }
-        )
-        if len(cells) == 0 or len(dfs) == 0:
+        df_t = cells["term"].map(dict(zip(dfs["term"], dfs["df"]))).fillna(0)
+        found = df_t.to_numpy() > 0
+        # wqt per term as a Python float, exactly as the relational twin
+        wqt = [log(1.0 + n_docs / float(df)) for df in df_t[found]]
+        c = _decode_cells(cells[found].assign(wqt=wqt), ("term", "wqt"))
+        if c["doc_id"].size == 0:
             return empty
-        dmap = dict(zip(dfs["term"], dfs["df"]))
-        doc_parts, term_parts, score_parts = [], [], []
-        for term, blob in zip(cells["term"], cells["postings_bin"]):
-            df_t = dmap.get(term)
-            if not df_t:
-                continue
-            d, t = codec.decode_postings(bytes(blob))
-            wqt = log(1.0 + n_docs / float(df_t))
-            doc_parts.append(d)
-            score_parts.append((1.0 + np.log(t)) * wqt)
-            term_parts.append(np.full(d.size, term, dtype=object))
-        if not doc_parts:
-            return empty
-        docs = np.concatenate(doc_parts)
-        scores = np.concatenate(score_parts)
-        terms = np.concatenate(term_parts).astype(str)
+        docs, terms = c["doc_id"], c["term"].astype(str)
+        scores = (1.0 + np.log(c["tf"])) * c["wqt"]
         order = np.lexsort((terms, -scores, docs))
         d_s, s_s, t_s = docs[order], scores[order], terms[order]
         idx = np.arange(d_s.size)
@@ -452,127 +394,6 @@ def _cogroup_keywords(n: int, n_docs: float):
                 "rank": rank[keep],
             }
         )
-
-    return run
-
-
-def _block_group_union():
-    """Per-block ANY-member doc counter for synonym groups: emits
-    (gid, df_partial) = |union of the group's member doc sets within
-    this block|. Blocks partition the doc space, so the integer
-    partials sum to the group's exact corpus df."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        arrs: dict[int, list[np.ndarray]] = {}
-        for gid, blob in zip(pdf["gid"], pdf["postings_bin"]):
-            d, _t = codec.decode_postings(bytes(blob))
-            arrs.setdefault(int(gid), []).append(d)
-        gids = sorted(arrs)
-        return pd.DataFrame(
-            {
-                "gid": np.array(gids, dtype=np.int32),
-                "df": np.array(
-                    [
-                        int(np.unique(np.concatenate(arrs[g])).size)
-                        for g in gids
-                    ],
-                    dtype=np.int64,
-                ),
-            }
-        )
-
-    return run
-
-
-def _cogroup_conv_tf():
-    """Per-block (conv, term, role, tf) extractor for index-backed
-    BM25F: the left cogroup side is the query-pruned posting cells of a
-    block, the right side is that block's docs metadata (doc_id →
-    conv_id, role). Decodes the cells, maps each posting's doc to its
-    conversation and role, and emits block-local integer partials
-    (summed exactly downstream). The corpus text is never re-tokenized
-    — tfs come from the index."""
-
-    def run(cells: pd.DataFrame, meta: pd.DataFrame) -> pd.DataFrame:
-        if len(cells) == 0 or len(meta) == 0:
-            return pd.DataFrame(
-                {
-                    "conv_id": pd.Series(dtype=object),
-                    "term": pd.Series(dtype=object),
-                    "role": pd.Series(dtype=object),
-                    "tf": pd.Series(dtype="int64"),
-                }
-            )
-        m = meta.drop_duplicates("doc_id").set_index("doc_id")
-        doc_parts, term_parts, tf_parts = [], [], []
-        for term, blob in zip(cells["term"], cells["postings_bin"]):
-            d, t = codec.decode_postings(bytes(blob))
-            doc_parts.append(d)
-            tf_parts.append(t.astype(np.int64))
-            term_parts.append(np.full(d.size, term, dtype=object))
-        long = pd.DataFrame(
-            {
-                "doc_id": np.concatenate(doc_parts),
-                "term": np.concatenate(term_parts),
-                "tf": np.concatenate(tf_parts),
-            }
-        )
-        long = long.join(m[["conv_id", "role"]], on="doc_id", how="inner")
-        out = (
-            long.groupby(["conv_id", "term", "role"], as_index=False)["tf"]
-            .sum()
-        )
-        return out[["conv_id", "term", "role", "tf"]]
-
-    return run
-
-
-def _cogroup_trend_tf():
-    """Per-block (term, bucket, n_turns, tf_sum) partials for the
-    index-backed term-trends view: the left cogroup side is the
-    query-pruned posting cells of one block, the right side that
-    block's (doc_id, bucket) metadata — the bucket is precomputed
-    JVM-side from ``ts`` by exact integer-microsecond arithmetic, so
-    only two thin long columns cross into Arrow. Decodes the cells,
-    maps each posting's doc to its time bucket, and emits block-local
-    integer partials (summed exactly downstream). The corpus text is
-    never re-tokenized — tfs come from the index."""
-
-    def run(cells: pd.DataFrame, meta: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "term": pd.Series(dtype=object),
-                "bucket": pd.Series(dtype="int64"),
-                "n_turns": pd.Series(dtype="int64"),
-                "tf_sum": pd.Series(dtype="int64"),
-            }
-        )
-        if len(cells) == 0 or len(meta) == 0:
-            return empty
-        m = meta.drop_duplicates("doc_id").set_index("doc_id")
-        doc_parts, term_parts, tf_parts = [], [], []
-        for term, blob in zip(cells["term"], cells["postings_bin"]):
-            d, t = codec.decode_postings(bytes(blob))
-            doc_parts.append(d)
-            tf_parts.append(t.astype(np.int64))
-            term_parts.append(np.full(d.size, term, dtype=object))
-        long = pd.DataFrame(
-            {
-                "doc_id": np.concatenate(doc_parts),
-                "term": np.concatenate(term_parts),
-                "tf": np.concatenate(tf_parts),
-            }
-        )
-        # inner join drops postings whose doc is absent from meta
-        # (tombstone-masked upstream) — the mask composes with the
-        # block-local pre-aggregation for free
-        long = long.join(m[["bucket"]], on="doc_id", how="inner")
-        if len(long) == 0:
-            return empty
-        out = long.groupby(["term", "bucket"], as_index=False).agg(
-            n_turns=("tf", "size"), tf_sum=("tf", "sum")
-        )
-        return out[["term", "bucket", "n_turns", "tf_sum"]]
 
     return run
 
@@ -1569,32 +1390,41 @@ class TranscriptSearchEngine:
             return None
         return reduce(lambda a, b: a.join(b, "doc_id"), parts)
 
-    def _all_terms_df(self, terms: list[str]) -> DataFrame:
-        """Docs containing ALL of ``terms``: per-block n-way sorted
-        intersect in numpy (``utils.py:33-51`` at block granularity) —
-        block results are disjoint, so their union needs no dedup."""
-        uniq = sorted(set(terms))
-        cells = self._postings_for_terms(uniq).select(
-            "block_id", "term", "postings_bin"
-        )
-        return cells.groupBy("block_id").applyInPandas(
-            _block_set_op(len(uniq)), "doc_id long"
-        )
-
-    def _any_term_df(self, terms: list[str]) -> DataFrame:
-        """Docs containing ANY of ``terms`` (OR within, used for single
-        terms and wildcard expansions): per-block sorted union."""
+    def _doc_set_df(self, terms: list[str], n_required: int | None = None) -> DataFrame:
+        """Docs containing ALL ``n_required`` distinct ``terms`` (per-block
+        n-way sorted intersect, ``utils.py:33-51`` at block granularity)
+        or, when None, ANY of them (per-block sorted union: single terms
+        and wildcard expansions) — block results are disjoint, so their
+        union needs no dedup."""
         cells = self._postings_for_terms(terms).select(
             "block_id", "term", "postings_bin"
         )
         return cells.groupBy("block_id").applyInPandas(
-            _block_set_op(None), "doc_id long"
+            _block_set_op(n_required), "doc_id long"
+        )
+
+    def _all_terms_df(self, terms: list[str]) -> DataFrame:
+        """Docs containing ALL of ``terms`` (:meth:`_doc_set_df`)."""
+        return self._doc_set_df(terms, len(set(terms)))
+
+    def _any_term_df(self, terms: list[str]) -> DataFrame:
+        """Docs containing ANY of ``terms`` (:meth:`_doc_set_df`)."""
+        return self._doc_set_df(terms)
+
+    def _positional_df(self, cells: DataFrame, slots, offsets) -> DataFrame:
+        """Docs matching the ``offsets`` tuples over slot-labelled
+        ``cells`` (block_id, slot, postings_bin, positions_bin): one
+        :func:`_block_positional` worker per block."""
+        return cells.groupBy("block_id").applyInPandas(
+            _block_positional(slots, offsets, self.block_span), "doc_id long"
         )
 
     def _phrase_df(self, terms: list[str]) -> DataFrame:
         """Docs where ``terms`` occur at consecutive positions
         (reference ``query.py:143-160``: shift term i's positions by -i,
-        intersect) — vectorized per block, see ``_block_phrase``."""
+        intersect). Slots come from a broadcast (term, slot) dimension:
+        each (cell, slot) row is decoded once, so a repeated word fills
+        each of its slots."""
         n = len(terms)
         qdf = self.spark.createDataFrame(
             [(t, i) for i, t in enumerate(terms)], "term string, slot int"
@@ -1604,9 +1434,7 @@ class TranscriptSearchEngine:
             .join(F.broadcast(qdf), "term")
             .select("block_id", "slot", "postings_bin", "positions_bin")
         )
-        return cells.groupBy("block_id").applyInPandas(
-            _block_phrase(n, self.block_span), "doc_id long"
-        )
+        return self._positional_df(cells, range(n), [tuple(range(n))])
 
     # ------------------------------------------------------------ autocomplete
     def suggest(self, prefix: str, k: int = 10) -> list[str]:
@@ -1832,6 +1660,39 @@ class TranscriptSearchEngine:
         ]
 
     # ------------------------------------------------ index-backed analytics
+    def _doc_agg(self, cells: DataFrame, by, aggs, side=None, docs=None) -> DataFrame:
+        """The analytics plans' one doc-side aggregate: per-block
+        :func:`_block_doc_agg` over ``cells`` (block_id, labels,
+        postings_bin) — a plain ``groupBy.applyInPandas`` when there is
+        no side, one ``cogroup`` with it otherwise (the ranked mask-side
+        shape) — then the integer partials summed per ``by``.
+
+        ``side`` is a ready (block_id, doc_id, …) doc side. ``docs``, a
+        projection of the docs table (doc_id + side columns), becomes
+        the side restricted to the cells' blocks and tombstone-masked —
+        a deleted turn's postings then drop out in the worker's join."""
+        if docs is not None:
+            blocks = cells.select("block_id").distinct()
+            side = self._mask_deleted(
+                docs.select("*", block_id_col(self.block_span)).join(
+                    F.broadcast(blocks), "block_id", "left_semi"
+                )
+            )
+        types = {
+            f.name: f.dataType.simpleString()
+            for df in (cells, side)
+            if df is not None
+            for f in df.schema
+        }
+        schema = ", ".join([f"{c} {types[c]}" for c in by] + [f"{a} long" for a in aggs])
+        worker = _block_doc_agg(by, aggs)
+        grouped = cells.groupBy("block_id")
+        if side is None:
+            parts = grouped.applyInPandas(lambda pdf: worker(pdf, None), schema)
+        else:
+            parts = grouped.cogroup(side.groupBy("block_id")).applyInPandas(worker, schema)
+        return parts.groupBy(*by).agg(*(F.sum(a).cast("long").alias(a) for a in aggs))
+
     def significant_terms_df(
         self, query: str, n: int = 10, min_fg_df: int = 2
     ) -> DataFrame:
@@ -1846,11 +1707,15 @@ class TranscriptSearchEngine:
         Cost shape — the corpus is NEVER re-tokenized: the foreground
         doc set comes from the engine's per-block any-term path, fg_df
         from decoding posting cells of ONLY the blocks that contain
-        foreground docs (one cogroup, integer partials), bg df from the
-        terms dictionary, N / fg_n folded as literals. At 100 TB a
-        selective query touches the few posting blocks its foreground
-        occupies; the re-analyze-everything plan of the relational twin
-        is exactly what this method exists to avoid."""
+        foreground docs (one :meth:`_doc_agg` cogroup with the
+        foreground side, integer partials), bg df from the terms
+        dictionary, N / fg_n folded as literals. At 100 TB a selective
+        query touches the few posting blocks its foreground occupies;
+        the re-analyze-everything plan of the relational twin is exactly
+        what this method exists to avoid.
+
+        Returns a MATERIALIZED frame of at most ``n`` rows (the top-n is
+        collected on the driver, then re-wrapped), not a lazy plan."""
         qt = sorted({t for t in self._ranked_terms(query) if t})
         schema = "term string, fg_df long, df long, score double"
         empty = self.spark.createDataFrame([], schema)
@@ -1871,14 +1736,8 @@ class TranscriptSearchEngine:
             cells = self.postings.join(
                 F.broadcast(blocks), "block_id", "left_semi"
             ).select("block_id", "term", "postings_bin")
-            fg_counts = (
-                cells.groupBy("block_id")
-                .cogroup(fg.groupBy("block_id"))
-                .applyInPandas(_cogroup_fg_df(), "term string, fg_df long")
-            )
             fgd = (
-                fg_counts.groupBy("term")
-                .agg(F.sum("fg_df").cast("long").alias("fg_df"))
+                self._doc_agg(cells, ("term",), {"fg_df": ("doc_id", "size")}, side=fg)
                 .where(~F.col("term").isin(qt))
                 .where(F.col("fg_df") >= int(min_fg_df))
             )
@@ -1985,30 +1844,9 @@ class TranscriptSearchEngine:
 
         def extract(batches):
             for pdf in batches:
-                outs: dict[str, list] = {
-                    "doc_id": [],
-                    "term": [],
-                    "tf": [],
-                    "weight": [],
-                }
-                for term, pblob, wblob in zip(
-                    pdf["term"], pdf["postings_bin"], pdf["weights_bin"]
-                ):
-                    d, t = codec.decode_postings(bytes(pblob))
-                    w = np.frombuffer(bytes(wblob), dtype="<f8")
-                    keep = np.isin(d, allowed, assume_unique=True)
-                    if not keep.any():
-                        continue
-                    outs["doc_id"].append(d[keep])
-                    outs["tf"].append(t[keep].astype(np.int64))
-                    outs["weight"].append(w[keep])
-                    outs["term"].append(
-                        np.full(int(keep.sum()), term, dtype=object)
-                    )
-                if outs["doc_id"]:
-                    yield pd.DataFrame(
-                        {c: np.concatenate(v) for c, v in outs.items()}
-                    )
+                c = _decode_cells(pdf, ("term",))
+                keep = np.isin(c["doc_id"], allowed)
+                yield pd.DataFrame({name: col[keep] for name, col in c.items()})
 
         ext = cells.mapInPandas(
             extract, "doc_id long, term string, tf long, weight double"
@@ -2062,8 +1900,9 @@ class TranscriptSearchEngine:
         is not rewarded for matching several spellings of one concept.
 
         Two pruned jobs, no corpus re-tokenize: (1) group dfs by
-        per-block union counts over the members' posting cells (blocks
-        partition docs, so the integer partials sum exactly); (2) the
+        per-block distinct-doc counts over the members' posting cells
+        (:meth:`_doc_agg` with no side; blocks partition docs, so the
+        integer partials sum exactly); (2) the
         standard per-block scoring plan with group-tf blending inside
         the partials (:func:`_synonym_partials`), tombstones
         cogrouped as usual."""
@@ -2078,15 +1917,11 @@ class TranscriptSearchEngine:
         gcells = (
             self._postings_for_terms([t for t, _ in mapping])
             .join(F.broadcast(qdf), "term")
-            .select("block_id", "gid", "term", "postings_bin")
+            .select("block_id", "gid", "postings_bin")
         )
-        gdf_rows = (
-            gcells.groupBy("block_id")
-            .applyInPandas(_block_group_union(), "gid int, df long")
-            .groupBy("gid")
-            .agg(F.sum("df").cast("long").alias("df"))
-            .collect()
-        )
+        gdf_rows = self._doc_agg(
+            gcells, ("gid",), {"df": ("doc_id", "nunique")}
+        ).collect()
         gdfs = {int(r["gid"]): int(r["df"]) for r in gdf_rows if r["df"]}
         if not gdfs:
             return empty
@@ -2117,8 +1952,11 @@ class TranscriptSearchEngine:
 
         Cost shape — no corpus re-tokenize: per-(conv, term, role) tfs
         come from decoding the QUERY-PRUNED posting cells cogrouped
-        with a blocks-restricted docs-metadata projection
-        (:func:`_cogroup_conv_tf`, the ranked mask-side cogroup shape);
+        with a blocks-restricted, tombstone-masked docs-metadata
+        projection (:meth:`_doc_agg`, the ranked mask-side cogroup
+        shape; a deleted turn's content must not score its
+        conversation, while field lengths stay pre-delete, the
+        corpus-stats discipline every query path follows);
         per-(conv, role) field lengths come from ``doc_stats`` (the
         index's own doc_len), one thin join + integer agg."""
         from search_engine_spark.simple import bm25f_score_topk
@@ -2135,27 +1973,13 @@ class TranscriptSearchEngine:
         cells = self._postings_for_terms(qstems).select(
             "block_id", "term", "postings_bin"
         )
-        blocks = cells.select("block_id").distinct()
-        # tombstone-masked: a deleted turn's CONTENT must not score its
-        # conversation (the masked meta drops its postings in the
-        # cogroup's inner join); field lengths below stay pre-delete,
-        # the corpus-stats discipline every query path follows
-        meta = self._mask_deleted(
-            self.docs.select(
-                "doc_id", block_id_col(self.block_span), "conv_id", "role"
-            )
-            .where(F.col("role").isin(roles))
-            .join(F.broadcast(blocks), "block_id", "left_semi")
-        )
-        ctf_long = (
-            cells.groupBy("block_id")
-            .cogroup(meta.groupBy("block_id"))
-            .applyInPandas(
-                _cogroup_conv_tf(),
-                "conv_id string, term string, role string, tf long",
-            )
-            .groupBy("conv_id", "term", "role")
-            .agg(F.sum("tf").cast("long").alias("tf"))
+        ctf_long = self._doc_agg(
+            cells,
+            ("conv_id", "term", "role"),
+            {"tf": ("tf", "sum")},
+            docs=self.docs.select("doc_id", "conv_id", "role").where(
+                F.col("role").isin(roles)
+            ),
         )
         clen_long = (
             self.docs.select("doc_id", "conv_id", "role")
@@ -2199,7 +2023,8 @@ class TranscriptSearchEngine:
         Lucene deleted-docs discipline the other analytics paths
         follow). The pair table persists across its two consumers
         (the n_pairs total and the final top-k) and is unpersisted
-        before returning the collected k rows."""
+        before returning: the result is a MATERIALIZED frame of at most
+        ``k`` collected rows, not a lazy plan."""
         schema = "term_a string, term_b string, n_pair long, pmi double"
         empty = self.spark.createDataFrame([], schema)
         cells = self.postings.select(
@@ -2275,7 +2100,8 @@ class TranscriptSearchEngine:
         directories + term row groups, I/O O(query terms)); timestamps
         ride a TWO-COLUMN docs-metadata projection (doc_id, bucket —
         the bucket arithmetic runs JVM-side in projection) restricted
-        to the matching blocks and tombstone-masked BEFORE the cogroup,
+        to the matching blocks and tombstone-masked BEFORE the
+        :meth:`_doc_agg` cogroup,
         so deleted turns drop out of the trend while the per-block
         partial aggregation is preserved. The only exchanges are the
         block-keyed cogroup over O(matching docs) thin rows and one
@@ -2291,24 +2117,14 @@ class TranscriptSearchEngine:
         cells = self._postings_for_terms(qstems).select(
             "block_id", "term", "postings_bin"
         )
-        blocks = cells.select("block_id").distinct()
         us = F.unix_micros(F.col("ts").cast("timestamp"))
         b = F.lit(int(bucket_seconds) * 1_000_000)
-        meta = self._mask_deleted(
-            self.docs.select(
-                "doc_id",
-                block_id_col(self.block_span),
-                ((us - F.pmod(us, b)) / b).cast("long").alias("bucket"),
-            ).join(F.broadcast(blocks), "block_id", "left_semi")
-        )
-        partials = (
-            cells.groupBy("block_id")
-            .cogroup(meta.groupBy("block_id"))
-            .applyInPandas(_cogroup_trend_tf(), schema)
-        )
-        return partials.groupBy("term", "bucket").agg(
-            F.sum("n_turns").cast("long").alias("n_turns"),
-            F.sum("tf_sum").cast("long").alias("tf_sum"),
+        bucket = ((us - F.pmod(us, b)) / b).cast("long").alias("bucket")
+        return self._doc_agg(
+            cells,
+            ("term", "bucket"),
+            {"n_turns": ("tf", "size"), "tf_sum": ("tf", "sum")},
+            docs=self.docs.select("doc_id", bucket),
         )
 
     # --------------------------------------------------------------- snippets
@@ -2368,15 +2184,17 @@ class TranscriptSearchEngine:
         that its positional index already pays for (the positions are
         stored for phrase match, ``memoryindex.py:22-49``; NEAR is the
         k>1 generalization of the k=1 adjacency the reference exposes).
-        Same pruned-scan + per-block shape as :meth:`_phrase_df`; block
+        Same pruned-scan + per-block positional worker as
+        :meth:`_phrase_df`, with the offset tuples (0, d), d in
+        [-k..k] \\ {0} (d in [1..k] when both words are the same); block
         results are disjoint so the union needs no dedup."""
         ta, tb = query_normalize(word_a), query_normalize(word_b)
+        # the term is the slot label: ``a NEAR/k a`` reads one decode twice
         cells = self._postings_for_terms([ta, tb]).select(
-            "block_id", "term", "postings_bin", "positions_bin"
+            "block_id", F.col("term").alias("slot"), "postings_bin", "positions_bin"
         )
-        hits = cells.groupBy("block_id").applyInPandas(
-            _block_near(ta, tb, max_dist, self.block_span), "doc_id long"
-        )
+        span = range(1, max_dist + 1) if ta == tb else range(-max_dist, max_dist + 1)
+        hits = self._positional_df(cells, (ta, tb), [(0, d) for d in span if d])
         return self._mask_deleted(hits).orderBy("doc_id")
 
     def near_query(

@@ -2,10 +2,6 @@
 
 Per the north_rule, everything in the build/query hot path is a
 vectorized pandas UDF over Arrow batches — no row-at-a-time Python UDFs.
-The decode UDFs return *struct-of-arrays* (one numpy decode per posting
-block, then JVM-side ``arrays_zip`` + ``explode``) rather than
-array-of-structs, which keeps the per-row Python work to a single
-vectorized numpy pass.
 """
 
 from __future__ import annotations
@@ -29,19 +25,6 @@ ANALYZE_TYPE = T.ArrayType(
             T.StructField("raw", T.StringType()),
         ]
     )
-)
-_DOC_TFS_TYPE = T.StructType(
-    [
-        T.StructField("doc_ids", T.ArrayType(T.LongType())),
-        T.StructField("tfs", T.ArrayType(T.IntegerType())),
-    ]
-)
-_FULL_TYPE = T.StructType(
-    [
-        T.StructField("doc_ids", T.ArrayType(T.LongType())),
-        T.StructField("tfs", T.ArrayType(T.IntegerType())),
-        T.StructField("positions", T.ArrayType(T.ArrayType(T.IntegerType()))),
-    ]
 )
 
 
@@ -158,52 +141,3 @@ def encode_positions_udf(tfs: pd.Series, flat_positions: pd.Series) -> pd.Series
             for t, p in zip(tfs, flat_positions)
         ]
     )
-
-
-@F.pandas_udf(_DOC_TFS_TYPE)
-def decode_doc_tfs_udf(blobs: pd.Series) -> pd.DataFrame:
-    """Decode postings_bin -> (doc_ids, tfs); positions column untouched,
-    so Catalyst prunes position bytes for non-phrase queries (the
-    reference's lazy seek, ``diskindex.py:124-125``). Cells hold numpy
-    arrays (no .tolist()) — Arrow zero-copies primitive arrays, which
-    matters when a hot term's block decodes to 10^4-10^5 postings."""
-    docs, tfs = [], []
-    for blob in blobs:
-        d, t = codec.decode_postings(bytes(blob))
-        docs.append(d)
-        tfs.append(t.astype(np.int32))
-    return pd.DataFrame({"doc_ids": docs, "tfs": tfs})
-
-
-_SCORING_TYPE = T.StructType(
-    [
-        T.StructField("doc_ids", T.ArrayType(T.LongType())),
-        T.StructField("tfs", T.ArrayType(T.IntegerType())),
-        T.StructField("weights", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-
-@F.pandas_udf(_SCORING_TYPE)
-def decode_scoring_udf(postings_blobs: pd.Series, weight_blobs: pd.Series) -> pd.DataFrame:
-    """Decode postings_bin + weights_bin -> (doc_ids, tfs, L_d per doc):
-    everything ranked scoring needs, no doc_stats join."""
-    docs, tfs, ws = [], [], []
-    for pblob, wblob in zip(postings_blobs, weight_blobs):
-        d, t = codec.decode_postings(bytes(pblob))
-        docs.append(d)
-        tfs.append(t.astype(np.int32))
-        ws.append(np.frombuffer(bytes(wblob), dtype="<f8"))
-    return pd.DataFrame({"doc_ids": docs, "tfs": tfs, "weights": ws})
-
-
-@F.pandas_udf(_FULL_TYPE)
-def decode_full_udf(postings_blobs: pd.Series, position_blobs: pd.Series) -> pd.DataFrame:
-    docs, tfs, poss = [], [], []
-    for pblob, posblob in zip(postings_blobs, position_blobs):
-        d, t = codec.decode_postings(bytes(pblob))
-        p = codec.decode_positions(bytes(posblob), t)
-        docs.append(d)
-        tfs.append(t.astype(np.int32))
-        poss.append([x.astype(np.int32) for x in p])
-    return pd.DataFrame({"doc_ids": docs, "tfs": tfs, "positions": poss})
