@@ -162,8 +162,8 @@ def main() -> None:
         ),
         ("wildcard_ranked", lambda: eng.ranked_query("s*m query")),
         (
-            # recency boost over half the corpus: the right cogroup
-            # side carries O(boosted docs) rows
+            # recency boost over half the corpus: the boost side
+            # carries O(boosted docs) rows
             "ranked_boosted",
             lambda: eng.ranked_query_boosted_df(
                 "spark join fast", F.when(ts_pred, 2.0).otherwise(1.0), k=10

@@ -552,7 +552,7 @@ FILTER_TS_SECS = 250
 def _engine_ranked_filtered(spark: SparkSession, sf: str) -> DataFrame:
     """Metadata-filtered ranked retrieval end-to-end: top-k among the
     docs inside a time window (``where=`` predicate on the docs table's
-    ``ts`` column, executed as a cogrouped per-block filter BEFORE
+    ``ts`` column, executed as a block-batch filter BEFORE
     top-k truncation — ``engine.py::_block_worker`` over an allow-list
     side from ``_mask_side``)."""
     import datetime as dt

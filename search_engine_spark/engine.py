@@ -14,6 +14,14 @@ index load, ``diskindex.py:59-80``, re-expressed as a broadcast-hash
 join + parquet predicate pushdown on ``term``), scoring is one
 DataFrame plan ending in ``TakeOrderedAndProject`` (distributed heap
 top-k), boolean set algebra is join/union over per-conjunct doc sets.
+
+Every posting-cell worker — ranked scoring, doc sets, positional
+matches, the analytics aggregates — runs through one block-sorted
+``mapInPandas`` (:func:`_block_batches`) that hands it whole blocks one
+Arrow batch at a time, so a query pays one Python call per batch, not
+one per block. Driver-built query dimensions are Arrow-backed
+``LocalRelation`` s (:meth:`TranscriptSearchEngine._local_df`), which
+broadcast without a job of their own.
 """
 
 from __future__ import annotations
@@ -25,8 +33,11 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import IntegralType, StructType
 from pyspark.storagelevel import StorageLevel
 
 from search_engine_spark import fsio
@@ -107,45 +118,46 @@ def _synonym_partials(cells: pd.DataFrame):
         yield uq, wqt_by_gid[gid] * (1.0 + np.log(gtf)), ld
 
 
-def _block_worker(partials, k, keys, allow=False, per_group=None):
-    """The one ranked-scoring worker, for ``applyInPandas`` over a
-    block's query-term cells (optionally cogrouped with the block's
-    mask side, see :meth:`TranscriptSearchEngine._mask_side`).
+def _block_worker(partials, k, allow=None, per_group=None):
+    """The one ranked-scoring worker, for :func:`_block_batches` over
+    the query-term cells of whole blocks (plus, when ``allow`` is not
+    None, those blocks' mask-side rows, see
+    :meth:`TranscriptSearchEngine._mask_side`).
 
-    Pipeline: decode each cell into per-posting ``partials`` (doc ids,
-    partial scores, optional per-doc norm) → mask → accumulate per doc
-    in qidx/gid order → divide by the norm → multiply by the boost →
-    cap per group → per-block top-k (score desc, doc_id asc, matching
+    Pipeline, once per call (and per query_id on the batch paths):
+    decode each cell into per-posting ``partials`` (doc ids, partial
+    scores, optional per-doc norm) → mask → accumulate per doc in
+    qidx/gid order → divide by the norm → multiply by the boost → cap
+    per group → top-k of the call (score desc, doc_id asc, matching
     ``diskindex.py:98-99``), or every scored doc when ``k`` is None.
 
-    Blocks partition the doc space, so a doc's score is COMPLETE within
-    its block and the global top-k is a subset of the union of
-    per-block top-ks. Masking happens BEFORE truncation: a filtered-out
-    or deleted doc must neither occupy a top-k slot nor (on the WAND
-    scoring rounds) inflate the pruning threshold, and it never changes
-    a surviving doc's accumulation order. An ``allow`` side keeps only
-    its docs; a deny side drops its NULL-boost (deleted) docs. Boosts
-    multiply AFTER normalization and BEFORE truncation, so a boosted
-    doc can displace an unboosted one and vice versa; docs without a
-    boost row keep weight 1.0. Key columns other than block_id (the
-    batch paths' query_id) are re-attached to the output rows.
+    Blocks partition the doc space and a call holds whole blocks, so a
+    doc's score is COMPLETE within its call and the global top-k is a
+    subset of the union of per-call top-ks. Masking happens BEFORE
+    truncation: a filtered-out or deleted doc must neither occupy a
+    top-k slot nor (on the WAND scoring rounds) inflate the pruning
+    threshold, and it never changes a surviving doc's accumulation
+    order. An ``allow`` side keeps only its docs; a deny side drops its
+    NULL-boost (deleted) docs. Boosts multiply AFTER normalization and
+    BEFORE truncation, so a boosted doc can displace an unboosted one
+    and vice versa; docs without a boost row keep weight 1.0.
 
-    Correctness of the per-block cap: order docs by the total order
-    (score desc, doc_id asc). If doc d belongs to the global
-    diversified top-k, then (a) d is among the global top
-    ``per_group`` of its group, hence also among the top ``per_group``
-    of its group's docs WITHIN ITS BLOCK (ranking within a subset can
-    only improve), so d survives the per-(block, group) cap; and (b)
-    for every block-capped survivor e ahead of d, e's group's global
-    top-``per_group`` contains a doc ahead of e (pointwise: the
-    group's global j-th best beats its block-local j-th best), giving
-    an injection from block survivors ahead of d into GLOBAL
-    diversified candidates ahead of d — fewer than k of those exist,
-    so d is inside the block's top-k too. The global re-cap + top-k
-    over the n_blocks*k survivors happens in the DataFrame plan
-    (window + limit over tiny rows)."""
+    Correctness of the per-call cap: a call's docs are a union U of
+    whole blocks. Order docs by the total order (score desc, doc_id
+    asc). If doc d in U belongs to the global diversified top-k, then
+    (a) d is among the global top ``per_group`` of its group, hence
+    also among the top ``per_group`` of its group's docs WITHIN U
+    (ranking within a subset can only improve), so d survives the
+    per-(call, group) cap; and (b) for every call-capped survivor e
+    ahead of d, e's group's global top-``per_group`` contains a doc
+    ahead of e (pointwise: the group's global j-th best beats its
+    U-local j-th best), giving an injection from call survivors ahead
+    of d into GLOBAL diversified candidates ahead of d — fewer than k
+    of those exist, so d is inside the call's top-k too. The global
+    re-cap + top-k over the n_calls*k survivors happens in the
+    DataFrame plan (window + limit over tiny rows)."""
 
-    def run(key, cells: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+    def score(cells: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
         docs, vals, norms = np.empty(0, dtype=np.int64), np.empty(0), None
         dead = None if side is None else np.isnan(side["boost"].to_numpy())
         if len(cells) and not (allow and side.empty):
@@ -180,59 +192,111 @@ def _block_worker(partials, k, keys, allow=False, per_group=None):
             out["group_key"] = groups[idx]
             out = out[out.groupby("group_key", sort=False).cumcount() < per_group]
             out = out.head(k)
-        for name, value in zip(keys, key):
-            if name != "block_id":
-                out[name] = int(value)
         return out
+
+    def run(cells: pd.DataFrame, side: pd.DataFrame | None = None) -> pd.DataFrame:
+        if "query_id" not in cells:
+            return score(cells, side)
+        parts = [score(c, side).assign(query_id=q) for q, c in cells.groupby("query_id")]
+        return pd.concat([score(cells[:0], side).assign(query_id=0), *parts])
 
     return run
 
 
-def _rank(cells: DataFrame, partials, k, side=None, keys=("block_id",), per_group=None):
-    """The one ranked-scoring plan: per-block :func:`_block_worker` over
-    ``cells`` grouped by ``keys`` — a plain ``groupBy.applyInPandas``
-    when there is no mask side, one ``cogroup`` with the side's
-    ``(df, allow)`` otherwise. Output: (doc_id, score) rows, plus
-    query_id for (query_id, block_id) keys and group_key when
+def _block_batches(cells: DataFrame, worker, schema: str, side=None) -> DataFrame:
+    """The one block-execution plan: ``cells`` (with the ``side`` rows
+    unioned in, when given) hash-partitioned and sorted by block_id,
+    then ONE ``mapInPandas`` that calls ``worker`` with the rows of
+    whole blocks — one call per Arrow batch, not one per block, so the
+    fixed cost of a Python call is paid per batch of Spark's own size.
+
+    Each batch is prefixed with the block carried over from the batch
+    before; every complete block goes to ``worker`` in one call and the
+    last block (which may continue in the next batch) is carried on,
+    then flushed at the end of the partition. Blocks partition the doc
+    space, so all of a doc's rows arrive in the same call.
+
+    With a side, ``worker(cells, side)`` gets the call's cell rows and
+    side rows apart, each with only its own columns (side rows are the
+    ones with a null ``postings_bin``); without one, ``worker(cells)``.
+    In the union, integer columns one side lacks are filled with 0, not
+    null, so no integer column — doc ids above 2^53 included — passes
+    through float64 on its way into pandas."""
+    cell_cols, side_cols = cells.columns, None if side is None else side.columns
+    if side is not None:
+        fields = [*cells.schema, *side.schema]
+        ints = {f.name: f.dataType for f in fields if isinstance(f.dataType, IntegralType)}
+
+        def pad(df):
+            missing = [c for c in ints if c not in df.columns]
+            return df.withColumns({c: F.lit(0).cast(ints[c]) for c in missing})
+
+        cells = pad(cells).unionByName(pad(side), allowMissingColumns=True)
+
+    def call(pdf):  # a closure over ``side`` itself would not pickle
+        if side_cols is None:
+            return worker(pdf)
+        is_side = pdf["postings_bin"].isna().to_numpy()
+        return worker(pdf.loc[~is_side, cell_cols], pdf.loc[is_side, side_cols])
+
+    def run(batches):
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            blocks = pdf["block_id"].to_numpy()
+            if not blocks.size:
+                continue
+            if (blocks[1:] < blocks[:-1]).any():
+                raise RuntimeError("block ids out of order: the block sort was lost")
+            cut = int(np.searchsorted(blocks, blocks[-1]))  # the last block's first row
+            if cut:
+                yield call(pdf[:cut])
+            carry = pdf[cut:]
+        if carry is not None:
+            yield call(carry)
+
+    ordered = cells.repartition("block_id").sortWithinPartitions("block_id")
+    return ordered.mapInPandas(run, schema)
+
+
+def _rank(cells: DataFrame, partials, k, side=None, per_group=None):
+    """The one ranked-scoring plan: :func:`_block_worker` over ``cells``
+    in :func:`_block_batches`, with the mask side's ``(df, allow)`` rows
+    when there is one. Output: (doc_id, score) rows, plus query_id when
+    the cells carry it (the batch paths) and group_key when
     ``per_group`` caps groups."""
     schema = ", ".join(
-        ["query_id int"] * ("query_id" in keys)
+        ["query_id int"] * ("query_id" in cells.columns)
         + ["doc_id long"]
         + ["group_key string"] * bool(per_group)
         + ["score double"]
     )
-    grouped = cells.groupBy(*keys)
-    if side is None:
-        worker = _block_worker(partials, k, keys)
-        return grouped.applyInPandas(lambda key, pdf: worker(key, pdf, None), schema)
-    df, allow = side
-    return grouped.cogroup(df.groupBy(*keys)).applyInPandas(
-        _block_worker(partials, k, keys, allow, per_group), schema
-    )
+    df, allow = side or (None, None)
+    return _block_batches(cells, _block_worker(partials, k, allow, per_group), schema, df)
 
 
 _EMPTY = np.empty(0, dtype=np.int64)
 
 
-def _decode_cells(cells: pd.DataFrame, labels=(), base=None) -> dict[str, np.ndarray]:
+def _decode_cells(cells: pd.DataFrame, labels=(), positions=False) -> dict[str, np.ndarray]:
     """The one posting-cell decoder of the non-ranked workers: a frame
     of cells (``postings_bin``, plus ``positions_bin`` / ``weights_bin``
     when projected) becomes flat numpy columns, each ``labels`` column
     of ``cells`` (term / slot / gid …) repeated alongside.
 
-    * ``base=None``: one row per posting — ``doc_id``, ``tf``, the
+    * ``positions=False``: one row per posting — ``doc_id``, ``tf``, the
       labels, and ``weight`` (the doc's L_d) when ``weights_bin`` is
       present.
-    * ``base`` = the block's first doc id: one row per occurrence —
-      ``okey = (doc_id - base)·2^33 + pos`` and the labels. The
-      block-local doc offset is < block_span <= 2^30
-      (``build.MAX_BLOCK_SPAN``) and positions are doc-local and
-      < 2^33, so okey fits an int64, sorts by (doc, position), and a
-      key shifted by a few positions never aliases into a neighbouring
-      doc's key space.
+    * ``positions=True``: one row per occurrence — ``okey = rank·2^33 +
+      pos`` and the labels, where ``rank`` indexes ``docs``, the sorted
+      distinct doc ids of the call (returned alongside). Ranks are
+      < 2^30 (checked) and positions are doc-local and < 2^33, so okey
+      fits an int64, sorts by (doc, position), and a key shifted by a
+      few positions never aliases into a neighbouring doc's key space.
     """
     decoded = [codec.decode_postings(bytes(b)) for b in cells["postings_bin"]]
-    if base is None:
+    if not positions:
         counts = [d.size for d, _t in decoded]
         out = {
             "doc_id": np.concatenate([_EMPTY, *(d for d, _t in decoded)]),
@@ -244,24 +308,27 @@ def _decode_cells(cells: pd.DataFrame, labels=(), base=None) -> dict[str, np.nda
                 + [np.frombuffer(bytes(w), dtype="<f8") for w in cells["weights_bin"]]
             )
     else:
+        docs = np.unique(np.concatenate([_EMPTY, *(d for d, _t in decoded)]))
+        if docs.size >= 1 << 30:
+            raise ValueError(f"{docs.size} docs in one call: okey needs < 2^30")
         counts = [int(t.sum()) for _d, t in decoded]
         okeys = [
-            (np.repeat(d, t) - base) * np.int64(1 << 33)
+            np.repeat(np.searchsorted(docs, d), t) * np.int64(1 << 33)
             + codec.decode_positions_flat(bytes(p), t)
             for (d, t), p in zip(decoded, cells["positions_bin"])
         ]
-        out = {"okey": np.concatenate([_EMPTY, *okeys])}
+        out = {"okey": np.concatenate([_EMPTY, *okeys]), "docs": docs}
     for label in labels:
         out[label] = np.repeat(cells[label].to_numpy(), counts)
     return out
 
 
 def _block_set_op(n_required: int | None):
-    """Per-block boolean doc-set worker: AND of all ``n_required``
+    """Block-batch boolean doc-set worker: AND of all ``n_required``
     distinct terms (``utils.py:33-51``) or, when None, OR across
     whatever terms are present (``utils.py:54-92``). A term's postings
-    may span several cells (segments concatenate), so the AND groups
-    postings by term code, never by cell."""
+    may span several cells (segments concatenate; a call holds several
+    blocks), so the AND groups postings by term code, never by cell."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         terms, code = np.unique(pdf["term"].to_numpy(), return_inverse=True)
@@ -278,8 +345,8 @@ def _block_set_op(n_required: int | None):
     return run
 
 
-def _block_positional(slots, offsets, block_span: int):
-    """Per-block positional matcher: slot i reads the occurrences of
+def _block_positional(slots, offsets):
+    """Block-batch positional matcher: slot i reads the occurrences of
     the cells whose ``slot`` label equals ``slots[i]``, and the docs
     returned are those where, for some tuple in ``offsets``, every slot
     i has an occurrence whose shifted key ``okey - tuple[i]`` is shared
@@ -295,61 +362,57 @@ def _block_positional(slots, offsets, block_span: int):
       which the half-window d in ``[1..k]`` gives for free.
 
     Every tuple starts at offset 0, so a shared key is slot 0's own
-    okey and its high bits give the matching doc."""
+    okey and its high bits give the matching doc's rank."""
 
-    def run(key, pdf):
-        base = int(key[0]) * block_span
-        c = _decode_cells(pdf, ("slot",), base)
+    def run(pdf):
+        c = _decode_cells(pdf, ("slot",), positions=True)
         keys = [c["okey"][c["slot"] == s] for s in slots]
         hits = [
             reduce(np.intersect1d, (k - o for k, o in zip(keys, tup)))
             for tup in offsets
         ]
-        docs = np.unique(np.concatenate([_EMPTY, *hits]) >> 33) + base
-        return pd.DataFrame({"doc_id": docs})
+        ranks = np.unique(np.concatenate([_EMPTY, *hits]) >> 33)
+        return pd.DataFrame({"doc_id": c["docs"][ranks]})
 
     return run
 
 
-def _block_colloc_pairs(block_span: int):
-    """Per-block adjacent-bigram partial counts from posting positions
-    (the decode half of index-backed collocations).
+def _block_colloc_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Block-batch adjacent-bigram partial counts from posting
+    positions (the decode half of index-backed collocations).
 
     An adjacent pair (term_a at pos, term_b at pos+1, same doc) is a
-    hash-merge of the block's occurrence table against itself on
+    hash-merge of the call's occurrence table against itself on
     ``okey`` vs ``okey - 1`` (:func:`_decode_cells`) — a doc's last
     position + 1 can never alias into the next doc's key space, and
-    blocks partition the doc space, so no pair crosses a block.
+    blocks partition the doc space, so no pair crosses a call.
     Multi-term positions (dehyphenation sub-terms share one position,
     ``normalize.py`` semantics) contribute their cross product, exactly
     the self-join semantics of the positional-dump oracle. Output is
-    pre-aggregated per block: (term_a, term_b, cnt).
+    pre-aggregated per call: (term_a, term_b, cnt).
     """
-
-    def run(key, pdf):
-        c = _decode_cells(pdf, ("term",), int(key[0]) * block_span)
-        left = pd.DataFrame({"k": c["okey"], "term_a": c["term"]})
-        right = pd.DataFrame({"k": c["okey"] - 1, "term_b": c["term"]})
-        m = left.merge(right, on="k")
-        return m.groupby(["term_a", "term_b"], sort=False).size().reset_index(name="cnt")
-
-    return run
+    c = _decode_cells(pdf, ("term",), positions=True)
+    left = pd.DataFrame({"k": c["okey"], "term_a": c["term"]})
+    right = pd.DataFrame({"k": c["okey"] - 1, "term_b": c["term"]})
+    m = left.merge(right, on="k")
+    return m.groupby(["term_a", "term_b"], sort=False).size().reset_index(name="cnt")
 
 
 def _block_doc_agg(by, aggs):
-    """Per-block doc-side aggregate for the analytics plans (see
-    :meth:`TranscriptSearchEngine._doc_agg`): decode the block's cells
+    """Block-batch doc-side aggregate for the analytics plans (see
+    :meth:`TranscriptSearchEngine._doc_agg`): decode the call's cells
     into one row per posting (doc_id, tf, the cells' ``by`` labels),
-    inner-join them on doc_id to the block's doc side when there is one
-    (foreground docs, (conv_id, role), bucket — tombstone-masked
-    upstream, so the join also drops deleted docs' postings), and emit
-    the pandas named aggregations ``aggs`` grouped by ``by``. Every
-    aggregate is an integer count or sum, and blocks partition the doc
-    space, so the block partials sum exactly downstream. Only posting
-    DECODE happens here — the corpus text is never re-tokenized."""
+    inner-join them on doc_id to the call's doc-side rows when there is
+    a side (foreground docs, (conv_id, role), bucket —
+    tombstone-masked upstream, so the join also drops deleted docs'
+    postings), and emit the pandas named aggregations ``aggs`` grouped
+    by ``by``. Every aggregate is an integer count or sum, and blocks
+    partition the doc space, so the per-call partials sum exactly
+    downstream. Only posting DECODE happens here — the corpus text is
+    never re-tokenized."""
     empty = pd.DataFrame(columns=[*by, *aggs])
 
-    def run(cells: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+    def run(cells: pd.DataFrame, side: pd.DataFrame | None = None) -> pd.DataFrame:
         if cells.empty or (side is not None and side.empty):
             return empty
         long = pd.DataFrame(_decode_cells(cells, [c for c in by if c in cells]))
@@ -360,13 +423,13 @@ def _block_doc_agg(by, aggs):
     return run
 
 
-def _cogroup_keywords(n: int, n_docs: float):
-    """Per-block keywords worker: left side = every posting cell of the
-    block, right side = (term, df) for the block's terms (the slim
-    dictionary join, co-shuffled by block). A doc lives entirely inside
-    its block, so its top-n terms by ``(1+ln tf)·ln(1+N/df)`` are
-    COMPLETE here — no corpus-wide window. Ranking uses the UNROUNDED
-    score (ties on term asc), matching ``simple.keywords``."""
+def _block_keywords(n: int, n_docs: float):
+    """Block-batch keywords worker: the cells are every posting cell of
+    the call's blocks, the side rows are (term, df) for those blocks'
+    terms (the slim dictionary join). A doc lives entirely inside its
+    block, so its top-n terms by ``(1+ln tf)·ln(1+N/df)`` are COMPLETE
+    here — no corpus-wide window. Ranking uses the UNROUNDED score
+    (ties on term asc), matching ``simple.keywords``."""
     empty = pd.DataFrame(columns=["doc_id", "term", "tf_idf", "rank"])
 
     def run(cells: pd.DataFrame, dfs: pd.DataFrame) -> pd.DataFrame:
@@ -385,15 +448,8 @@ def _cogroup_keywords(n: int, n_docs: float):
         newdoc = np.r_[True, d_s[1:] != d_s[:-1]]
         start = np.maximum.accumulate(np.where(newdoc, idx, 0))
         rank = (idx - start + 1).astype(np.int32)
-        keep = rank <= n
-        return pd.DataFrame(
-            {
-                "doc_id": d_s[keep],
-                "term": t_s[keep],
-                "tf_idf": s_s[keep],
-                "rank": rank[keep],
-            }
-        )
+        out = pd.DataFrame({"doc_id": d_s, "term": t_s, "tf_idf": s_s, "rank": rank})
+        return out[rank <= n]
 
     return run
 
@@ -534,6 +590,16 @@ class TranscriptSearchEngine:
         if self.num_deleted <= 5_000_000:
             t = F.broadcast(t)
         return df.join(t, "doc_id", "left_anti")
+
+    def _local_df(self, rows, schema: str) -> DataFrame:
+        """A small driver-built dimension (``rows`` of tuples, DDL
+        ``schema``) as an Arrow-backed ``LocalRelation``: broadcasting
+        it costs no job, where a list-built frame is a ``LogicalRDD``
+        that Spark must run a job to collect first."""
+        struct = StructType.fromDDL(schema)
+        records = [dict(zip(struct.names, r)) for r in rows]
+        table = pa.Table.from_pylist(records, to_arrow_schema(struct))
+        return self.spark.createDataFrame(table, struct)
 
     # ------------------------------------------------------- pruned scans
     def _postings_for_terms(self, terms) -> DataFrame:
@@ -757,11 +823,11 @@ class TranscriptSearchEngine:
     def _wand_topk(self, model, row_ub, k: int) -> list[tuple[int, float]]:
         """Shared block-max selection (see :meth:`ranked_query_wand`):
         cluster-side upper bounds, two collect-only-survivors rounds,
-        exact scoring of selected blocks — each selected block ships its
-        top-k rows to the driver (k per block, not the block's
-        up-to-``block_span`` docs; the global top-k and the round-1
-        threshold both survive per-block truncation because blocks
-        partition the doc space)."""
+        exact scoring of selected blocks — each scoring call ships its
+        top-k rows to the driver (k per call of whole blocks, not the
+        blocks' up-to-``block_span`` docs each; the global top-k and the
+        round-1 threshold both survive per-call truncation because
+        blocks partition the doc space)."""
         occurrences = model[0]
         if not occurrences:
             self._last_wand_stats = {"round1_blocks": 0, "round2_blocks": 0}
@@ -797,9 +863,7 @@ class TranscriptSearchEngine:
         by_term: dict[str, float] = {}
         for t, _i, w in occurrences:
             by_term[t] = by_term.get(t, 0.0) + w
-        wdf = self.spark.createDataFrame(
-            list(by_term.items()), "term string, wqt double"
-        )
+        wdf = self._local_df(list(by_term.items()), "term string, wqt double")
         meta = (
             self._postings_for_terms(by_term)
             .join(F.broadcast(wdf), "term")
@@ -895,16 +959,17 @@ class TranscriptSearchEngine:
         the partials' ``payload`` column.
 
         Blocks partition the doc space, so each doc's score is COMPLETE
-        within its block: one applyInPandas over (term, block) cells
-        scores a whole block in numpy and emits only that block's
-        top-k. The global answer is TakeOrderedAndProject over
-        n_blocks*k tiny rows — no posting-row explosion, no doc_stats
-        join, and the only shuffle moves the (compressed) query-term
-        blocks themselves. The df lookup behind ``rows`` is one tiny
-        pruned-scan job (the reference's dictionary point lookups,
-        query.py:80); folding its handful of floats into the scoring
-        plan as literals keeps the main job to two stages."""
-        occ = self.spark.createDataFrame(rows, schema)
+        within its block: one block-sorted ``mapInPandas``
+        (:func:`_block_batches`) scores whole blocks in numpy, one call
+        per Arrow batch, and emits only each call's top-k. The global
+        answer is TakeOrderedAndProject over n_calls*k tiny rows — no
+        posting-row explosion, no doc_stats join, and the only shuffle
+        moves the (compressed) query-term blocks themselves. The df
+        lookup behind ``rows`` is one tiny pruned-scan job (the
+        reference's dictionary point lookups, query.py:80), and ``rows``
+        itself is an Arrow-built LocalRelation, so broadcasting it runs
+        no job; the main job keeps two stages."""
+        occ = self._local_df(rows, schema)
         return (
             self._postings_for_terms({r[0] for r in rows})
             .join(F.broadcast(occ), "term")
@@ -913,11 +978,12 @@ class TranscriptSearchEngine:
 
     def _mask_side(self, where=None, allowed=None, boost=None, group_col=None):
         """The ranked plans' one mask side: ``(df, allow)`` with df rows
-        (block_id, doc_id, boost, group_key), co-shuffled with the
-        posting blocks by ``block_id = doc_id DIV block_span`` so each
-        worker sees exactly the rows that can touch its docs — or None
-        when nothing masks, which keeps the plain groupBy plan. The kind
-        is fixed by the caller's arguments:
+        (block_id, doc_id, boost, group_key), unioned into the posting
+        cells and block-sorted with them by ``block_id = doc_id DIV
+        block_span`` (:func:`_block_batches`) so each worker call sees
+        exactly the rows that can touch its docs — or None when nothing
+        masks, which keeps the plan free of a union. The kind is fixed
+        by the caller's arguments:
 
         * allow-list (``allow=True``): docs matching ``where`` (Column
           or SQL string over the docs metadata), the explicit doc_id
@@ -933,7 +999,7 @@ class TranscriptSearchEngine:
           (a NULL boost means deleted), plus (doc_id, multiplier) rows
           for docs whose ``boost`` (Column or SQL string) differs from
           1.0 — the ``!= 1.0`` filter keeps the exchanged rows
-          O(boosted docs + tombstones) per block, not O(corpus).
+          O(boosted docs + tombstones), not O(corpus).
         """
         tomb, block = self.tombstones, block_id_col(self.block_span)
         no_group = F.lit(None).cast("string").alias("group_key")
@@ -994,10 +1060,10 @@ class TranscriptSearchEngine:
         return _rank(cells, partials, k, side, per_group=per_group)
 
     def _top_k(self, model, k: int, **mask) -> DataFrame:
-        """Global top-k (doc_id, score) over :meth:`_scores`' per-block
-        rows — TakeOrderedAndProject over n_blocks*k tiny rows."""
+        """Global top-k (doc_id, score) over :meth:`_scores`' per-call
+        rows — TakeOrderedAndProject over n_calls*k tiny rows."""
         if not model[0]:
-            return self.spark.createDataFrame([], RANKED_SCHEMA)
+            return self._local_df([], RANKED_SCHEMA)
         scored = self._scores(model, k, **mask)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1013,7 +1079,7 @@ class TranscriptSearchEngine:
         ``boost`` expression evaluated on the doc's metadata row (role,
         tool, recency … — e.g. ``2.0 where role='assistant'``). The
         BM25F-style field weighting for transcripts, executed as a
-        cogrouped per-block multiply BEFORE top-k truncation (see
+        multiply in the block-batch scorer BEFORE top-k truncation (see
         :func:`_block_worker` for why truncation must come after).
         ``boost`` is a Column or SQL string over the docs table; docs
         not matched keep weight 1.0."""
@@ -1031,19 +1097,18 @@ class TranscriptSearchEngine:
         for transcript corpora — a long conversation that matches the
         query everywhere must not monopolize the page.
 
-        Execution: per-block scoring cogrouped with the block's
-        (doc_id, group_key) map applies the SAME cap per (block,
-        group) and per-block top-k (provably lossless — proof in
-        :func:`_block_worker`), then a window over the surviving
-        n_blocks×k rows re-caps globally and takes the final top-k.
+        Execution: block-batch scoring with the blocks' (doc_id,
+        group_key) map unioned in applies the SAME cap per (call,
+        group) and a per-call top-k (provably lossless for any union of
+        whole blocks — proof in :func:`_block_worker`), then a window
+        over the surviving n_calls×k rows re-caps globally and takes
+        the final top-k.
         Output: (doc_id, group_key, score)."""
         from pyspark.sql import Window
 
         model = self._model(self._ranked_terms(query))
         if not model[0]:
-            return self.spark.createDataFrame(
-                [], "doc_id long, group_key string, score double"
-            )
+            return self._local_df([], "doc_id long, group_key string, score double")
         scored = self._scores(model, k, per_group=per_group, group_col=group_col)
         w = Window.partitionBy("group_key").orderBy(
             F.desc("score"), F.asc("doc_id")
@@ -1065,7 +1130,7 @@ class TranscriptSearchEngine:
         b: float = 0.75,
     ) -> DataFrame:
         """Metadata-boosted BM25 top-k — :meth:`ranked_query_boosted_df`
-        with BM25 partials (same cogroup shape, same
+        with BM25 partials (same block-batch plan, same
         multiply-after-normalize-before-truncate discipline; the boost
         rides the accumulated BM25 score)."""
         return self._score_terms_df(
@@ -1141,7 +1206,6 @@ class TranscriptSearchEngine:
         (query, block) pairs (ub >= L_q - slack; the 1e-9 relative slack
         can only UNDER-prune, as in the single-query path).
         """
-        spark = self.spark
         n_probe = max(k, 32)
 
         def pair_scores(pairs):
@@ -1154,7 +1218,7 @@ class TranscriptSearchEngine:
         by_qt: dict[tuple[int, str], float] = {}
         for t, qid, _i, w in rows:
             by_qt[(qid, t)] = by_qt.get((qid, t), 0.0) + w
-        wdf = spark.createDataFrame(
+        wdf = self._local_df(
             [(q, t, w) for (q, t), w in by_qt.items()],
             "query_id int, term string, wqt double",
         )
@@ -1199,12 +1263,8 @@ class TranscriptSearchEngine:
                     thresholds.append((qid, lst[-1][1]))
             round2: list[tuple[int, int]] = []
             if thresholds:
-                tdf = spark.createDataFrame(
-                    thresholds, "query_id int, thr double"
-                )
-                seen = spark.createDataFrame(
-                    round1, "query_id int, block_id long"
-                )
+                tdf = self._local_df(thresholds, "query_id int, thr double")
+                seen = self._local_df(round1, "query_id int, block_id long")
                 round2 = [
                     (r["query_id"], r["block_id"])
                     for r in meta.join(F.broadcast(tdf), "query_id")
@@ -1249,19 +1309,11 @@ class TranscriptSearchEngine:
         )
         side = self._mask_side()
         if pairs is not None:
-            sel = F.broadcast(
-                self.spark.createDataFrame(pairs, "query_id int, block_id long")
-            )
+            sel = F.broadcast(self._local_df(pairs, "query_id int, block_id long"))
             cells = cells.join(sel, ["query_id", "block_id"], "left_semi")
-            side = side and (sel.join(side[0], "block_id"), False)
-        elif side is not None:
-            # a fresh DataFrame, not a projection of the occurrence
-            # dimension — that would make the cogroup an ambiguous self-join
-            qids = self.spark.createDataFrame(
-                [(q,) for q in sorted({r[1] for r in rows})], "query_id int"
-            )
-            side = (side[0].crossJoin(F.broadcast(qids)), False)
-        return _rank(cells, _tfidf_partials, k, side, keys=("query_id", "block_id"))
+            blocks = F.col("block_id").isin(sorted({int(b) for _q, b in pairs}))
+            side = side and (side[0].where(blocks), False)
+        return _rank(cells, _tfidf_partials, k, side)
 
     # ------------------------------------------------------------------ BM25
     def bm25_query_df(
@@ -1345,7 +1397,7 @@ class TranscriptSearchEngine:
         literal_dfs = [self._literal_df(lit) for lit in literals]
         literal_dfs = [d for d in literal_dfs if d is not None]
         if not literal_dfs:
-            return self.spark.createDataFrame([], "doc_id long")
+            return self._local_df([], "doc_id long")
         hits = reduce(DataFrame.union, literal_dfs).distinct()
         # doc-set results post-filter exactly (no top-k involved)
         return self._mask_deleted(hits).orderBy("doc_id")
@@ -1399,9 +1451,7 @@ class TranscriptSearchEngine:
         cells = self._postings_for_terms(terms).select(
             "block_id", "term", "postings_bin"
         )
-        return cells.groupBy("block_id").applyInPandas(
-            _block_set_op(n_required), "doc_id long"
-        )
+        return _block_batches(cells, _block_set_op(n_required), "doc_id long")
 
     def _all_terms_df(self, terms: list[str]) -> DataFrame:
         """Docs containing ALL of ``terms`` (:meth:`_doc_set_df`)."""
@@ -1413,11 +1463,10 @@ class TranscriptSearchEngine:
 
     def _positional_df(self, cells: DataFrame, slots, offsets) -> DataFrame:
         """Docs matching the ``offsets`` tuples over slot-labelled
-        ``cells`` (block_id, slot, postings_bin, positions_bin): one
-        :func:`_block_positional` worker per block."""
-        return cells.groupBy("block_id").applyInPandas(
-            _block_positional(slots, offsets, self.block_span), "doc_id long"
-        )
+        ``cells`` (block_id, slot, postings_bin, positions_bin):
+        :func:`_block_positional` over whole blocks in
+        :func:`_block_batches`."""
+        return _block_batches(cells, _block_positional(slots, offsets), "doc_id long")
 
     def _phrase_df(self, terms: list[str]) -> DataFrame:
         """Docs where ``terms`` occur at consecutive positions
@@ -1426,9 +1475,7 @@ class TranscriptSearchEngine:
         each (cell, slot) row is decoded once, so a repeated word fills
         each of its slots."""
         n = len(terms)
-        qdf = self.spark.createDataFrame(
-            [(t, i) for i, t in enumerate(terms)], "term string, slot int"
-        )
+        qdf = self._local_df([(t, i) for i, t in enumerate(terms)], "term string, slot int")
         cells = (
             self._postings_for_terms(terms)
             .join(F.broadcast(qdf), "term")
@@ -1513,7 +1560,7 @@ class TranscriptSearchEngine:
 
         The transcript data model makes this the natural result unit —
         users search for the conversation, not the turn. Plan: the
-        exhaustive per-block scorer WITHOUT per-block truncation (a
+        exhaustive block-batch scorer WITHOUT truncation (a
         conversation's best turn can rank anywhere doc-level, so
         doc-level top-k would be wrong), tombstones/filter masked as
         usual, then ONE partial-agg'd groupBy on conv_id after a join
@@ -1524,7 +1571,7 @@ class TranscriptSearchEngine:
         out_schema = "conv_id string, score double, n_hits long, best_doc long"
         model = self._model(self._ranked_terms(query), (k1, b) if bm25 else None)
         if not model[0]:
-            return self.spark.createDataFrame([], out_schema)
+            return self._local_df([], out_schema)
         scored = self._scores(model, None, where=where)
         keyed = scored.join(self.docs.select("doc_id", "conv_id"), "doc_id")
         best = F.max(F.struct(F.col("score"), (-F.col("doc_id")).alias("neg_id")))
@@ -1661,11 +1708,11 @@ class TranscriptSearchEngine:
 
     # ------------------------------------------------ index-backed analytics
     def _doc_agg(self, cells: DataFrame, by, aggs, side=None, docs=None) -> DataFrame:
-        """The analytics plans' one doc-side aggregate: per-block
+        """The analytics plans' one doc-side aggregate:
         :func:`_block_doc_agg` over ``cells`` (block_id, labels,
-        postings_bin) — a plain ``groupBy.applyInPandas`` when there is
-        no side, one ``cogroup`` with it otherwise (the ranked mask-side
-        shape) — then the integer partials summed per ``by``.
+        postings_bin) in :func:`_block_batches`, the side's rows unioned
+        in when there is one (the ranked mask-side shape) — then the
+        integer partials summed per ``by``.
 
         ``side`` is a ready (block_id, doc_id, …) doc side. ``docs``, a
         projection of the docs table (doc_id + side columns), becomes
@@ -1685,12 +1732,7 @@ class TranscriptSearchEngine:
             for f in df.schema
         }
         schema = ", ".join([f"{c} {types[c]}" for c in by] + [f"{a} long" for a in aggs])
-        worker = _block_doc_agg(by, aggs)
-        grouped = cells.groupBy("block_id")
-        if side is None:
-            parts = grouped.applyInPandas(lambda pdf: worker(pdf, None), schema)
-        else:
-            parts = grouped.cogroup(side.groupBy("block_id")).applyInPandas(worker, schema)
+        parts = _block_batches(cells, _block_doc_agg(by, aggs), schema, side)
         return parts.groupBy(*by).agg(*(F.sum(a).cast("long").alias(a) for a in aggs))
 
     def significant_terms_df(
@@ -1707,8 +1749,8 @@ class TranscriptSearchEngine:
         Cost shape — the corpus is NEVER re-tokenized: the foreground
         doc set comes from the engine's per-block any-term path, fg_df
         from decoding posting cells of ONLY the blocks that contain
-        foreground docs (one :meth:`_doc_agg` cogroup with the
-        foreground side, integer partials), bg df from the terms
+        foreground docs (one :meth:`_doc_agg` pass with the foreground
+        side unioned in, integer partials), bg df from the terms
         dictionary, N / fg_n folded as literals. At 100 TB a selective
         query touches the few posting blocks its foreground occupies;
         the re-analyze-everything plan of the relational twin is exactly
@@ -1718,7 +1760,7 @@ class TranscriptSearchEngine:
         collected on the driver, then re-wrapped), not a lazy plan."""
         qt = sorted({t for t in self._ranked_terms(query) if t})
         schema = "term string, fg_df long, df long, score double"
-        empty = self.spark.createDataFrame([], schema)
+        empty = self._local_df([], schema)
         dfs = self._term_dfs(qt)
         present = [t for t in qt if dfs.get(t)]
         if not present:
@@ -1757,7 +1799,7 @@ class TranscriptSearchEngine:
             )
         finally:
             fg.unpersist()
-        return self.spark.createDataFrame(rows, schema)
+        return self._local_df(rows, schema)
 
     def keywords_df(self, n: int = 5) -> DataFrame:
         """Per-doc top-``n`` terms by tf-idf ON THE INDEX (the scale
@@ -1774,24 +1816,17 @@ class TranscriptSearchEngine:
         binary columns for that branch), so only slim rows join against
         ``terms``. Per-doc top-n is complete within a block (blocks
         partition the doc space) — no corpus-wide window."""
-        # the slim branch reads the SAME parquet through a fresh relation
-        # (new attribute ids — Spark's ambiguous-self-join check rejects
-        # cogrouping two projections of one Dataset); column pruning
-        # keeps this scan to the term/block_id columns only
-        slim = self.spark.read.parquet(
-            fsio.join(self.index_dir, self._table_names.get("postings", "postings"))
-        ).select("block_id", "term")
-        dfs_by_block = slim.join(self.terms.select("term", "df"), "term").select(
-            "block_id", "term", "df"
+        # column pruning keeps the slim scan to the term/block_id columns
+        dfs_by_block = (
+            self.postings.select("block_id", "term")
+            .join(self.terms.select("term", "df"), "term")
+            .select("block_id", "term", "df")
         )
-        cells = self.postings.select("block_id", "term", "postings_bin")
-        out = (
-            cells.groupBy("block_id")
-            .cogroup(dfs_by_block.groupBy("block_id"))
-            .applyInPandas(
-                _cogroup_keywords(int(n), float(self.num_docs)),
-                "doc_id long, term string, tf_idf double, rank int",
-            )
+        out = _block_batches(
+            self.postings.select("block_id", "term", "postings_bin"),
+            _block_keywords(int(n), float(self.num_docs)),
+            "doc_id long, term string, tf_idf double, rank int",
+            dfs_by_block,
         )
         return self._mask_deleted(out).select(
             "doc_id", "term", F.round("tf_idf", 6).alias("tf_idf"), "rank"
@@ -1826,7 +1861,7 @@ class TranscriptSearchEngine:
             "doc_id long, term string, tf long, df long, wqt double, "
             "wdt double, weight double, contrib double"
         )
-        empty = self.spark.createDataFrame([], schema)
+        empty = self._local_df([], schema)
         if not present:
             return empty
         top = [
@@ -1851,7 +1886,7 @@ class TranscriptSearchEngine:
         ext = cells.mapInPandas(
             extract, "doc_id long, term string, tf long, weight double"
         )
-        qdf = self.spark.createDataFrame(
+        qdf = self._local_df(
             [(t, int(dfs[t]), int(mult[t])) for t in present],
             "term string, df long, mult long",
         )
@@ -1878,7 +1913,7 @@ class TranscriptSearchEngine:
         qualifiers rank by the standard tf-idf formula over the
         phrase's terms. Statistics (N, df, L_d) stay corpus-global —
         the phrase restricts the CANDIDATES, exactly the ``where=`` /
-        tombstone discipline (masking happens BEFORE per-block top-k
+        tombstone discipline (masking happens BEFORE the per-call top-k
         truncation, via the same mask side)."""
         terms = [t for t in (query_normalize(w) for w in query.split()) if t]
         # scoring dedupes (the twin's ranked_scores scores each DISTINCT
@@ -1900,20 +1935,20 @@ class TranscriptSearchEngine:
         is not rewarded for matching several spellings of one concept.
 
         Two pruned jobs, no corpus re-tokenize: (1) group dfs by
-        per-block distinct-doc counts over the members' posting cells
-        (:meth:`_doc_agg` with no side; blocks partition docs, so the
-        integer partials sum exactly); (2) the
-        standard per-block scoring plan with group-tf blending inside
-        the partials (:func:`_synonym_partials`), tombstones
-        cogrouped as usual."""
+        per-call distinct-doc counts over the members' posting cells
+        (:meth:`_doc_agg` with no side; blocks partition docs and a
+        call holds whole blocks, so the integer partials sum exactly);
+        (2) the standard block-batch scoring plan with group-tf
+        blending inside the partials (:func:`_synonym_partials`),
+        tombstones masked as usual."""
         mapping: list[tuple[str, int]] = []
         for gi, g in enumerate(groups):
             stems = sorted({query_normalize(w) for w in g if query_normalize(w)})
             mapping.extend((t, gi) for t in stems)
-        empty = self.spark.createDataFrame([], RANKED_SCHEMA)
+        empty = self._local_df([], RANKED_SCHEMA)
         if not mapping:
             return empty
-        qdf = self.spark.createDataFrame(mapping, "term string, gid int")
+        qdf = self._local_df(mapping, "term string, gid int")
         gcells = (
             self._postings_for_terms([t for t, _ in mapping])
             .join(F.broadcast(qdf), "term")
@@ -1951,10 +1986,10 @@ class TranscriptSearchEngine:
         two paths by construction.
 
         Cost shape — no corpus re-tokenize: per-(conv, term, role) tfs
-        come from decoding the QUERY-PRUNED posting cells cogrouped
-        with a blocks-restricted, tombstone-masked docs-metadata
-        projection (:meth:`_doc_agg`, the ranked mask-side cogroup
-        shape; a deleted turn's content must not score its
+        come from decoding the QUERY-PRUNED posting cells with a
+        blocks-restricted, tombstone-masked docs-metadata projection
+        unioned in (:meth:`_doc_agg`, the ranked mask-side shape; a
+        deleted turn's content must not score its
         conversation, while field lengths stay pre-delete, the
         corpus-stats discipline every query path follows);
         per-(conv, role) field lengths come from ``doc_stats`` (the
@@ -1969,7 +2004,7 @@ class TranscriptSearchEngine:
             # empty / symbol-only query: same guard as the sibling
             # analytics paths (bm25f_score_topk cannot aggregate an
             # empty term list)
-            return self.spark.createDataFrame([], "conv_id string, score double")
+            return self._local_df([], "conv_id string, score double")
         cells = self._postings_for_terms(qstems).select(
             "block_id", "term", "postings_bin"
         )
@@ -2012,9 +2047,10 @@ class TranscriptSearchEngine:
         never re-tokenized.
 
         Cost shape: ONE decode pass over the posting blocks
-        (``applyInPandas`` per block — blocks partition the doc space
-        and positions are doc-local, so every adjacent pair is
-        block-local) emitting pre-aggregated (term_a, term_b) partials;
+        (:func:`_block_batches`, one Python call per Arrow batch of
+        whole blocks — blocks partition the doc space and positions are
+        doc-local, so every adjacent pair is block-local) emitting
+        pre-aggregated (term_a, term_b) partials;
         one pair-keyed shuffle sums them. Unigram counts and the token
         total come FREE from the terms dictionary (``cf`` = Σtf — the
         occurrence count the positional dump would give), so the only
@@ -2026,13 +2062,12 @@ class TranscriptSearchEngine:
         before returning: the result is a MATERIALIZED frame of at most
         ``k`` collected rows, not a lazy plan."""
         schema = "term_a string, term_b string, n_pair long, pmi double"
-        empty = self.spark.createDataFrame([], schema)
+        empty = self._local_df([], schema)
         cells = self.postings.select(
             "block_id", "term", "postings_bin", "positions_bin"
         )
-        partials = cells.groupBy("block_id").applyInPandas(
-            _block_colloc_pairs(self.block_span),
-            "term_a string, term_b string, cnt long",
+        partials = _block_batches(
+            cells, _block_colloc_pairs, "term_a string, term_b string, cnt long"
         )
         pairs = (
             partials.groupBy("term_a", "term_b")
@@ -2082,7 +2117,7 @@ class TranscriptSearchEngine:
             )
         finally:
             pairs.unpersist()
-        return self.spark.createDataFrame(rows, schema)
+        return self._local_df(rows, schema)
 
     def term_trends_df(
         self, terms, bucket_seconds: int = 3600
@@ -2100,20 +2135,20 @@ class TranscriptSearchEngine:
         directories + term row groups, I/O O(query terms)); timestamps
         ride a TWO-COLUMN docs-metadata projection (doc_id, bucket —
         the bucket arithmetic runs JVM-side in projection) restricted
-        to the matching blocks and tombstone-masked BEFORE the
-        :meth:`_doc_agg` cogroup,
-        so deleted turns drop out of the trend while the per-block
-        partial aggregation is preserved. The only exchanges are the
-        block-keyed cogroup over O(matching docs) thin rows and one
-        partial-agg'd (term, bucket) shuffle whose map-side output is
-        at most |terms| x |buckets| rows per block."""
+        to the matching blocks and tombstone-masked BEFORE it is
+        unioned into the :meth:`_doc_agg` input, so deleted turns drop
+        out of the trend while the per-call partial aggregation is
+        preserved. The only exchanges are the block-keyed shuffle of
+        the cells plus O(matching docs) thin rows and one partial-agg'd
+        (term, bucket) shuffle whose map-side output is at most
+        |terms| x |buckets| rows per call."""
         words = terms.split() if isinstance(terms, str) else list(terms)
         qstems = sorted(
             {query_normalize(w) for w in words if query_normalize(w)}
         )
         schema = "term string, bucket long, n_turns long, tf_sum long"
         if not qstems:
-            return self.spark.createDataFrame([], schema)
+            return self._local_df([], schema)
         cells = self._postings_for_terms(qstems).select(
             "block_id", "term", "postings_bin"
         )

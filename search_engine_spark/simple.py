@@ -271,7 +271,11 @@ def bm25f_score_topk(
     and ``clen_long (conv_id, role, flen)`` — pivoted here into
     per-(term, role) integer columns and scored through one fixed-order
     expression tree (sorted roles / sorted terms), so the float result
-    is bit-identical for any producer of the same integers."""
+    is bit-identical for any producer of the same integers.
+
+    Returns a MATERIALIZED frame of at most ``k`` (conv_id, score) rows
+    — the top-k is collected on the driver so the persisted
+    intermediates can be released, then re-wrapped — not a lazy plan."""
     from pyspark import StorageLevel
 
     if not qt:

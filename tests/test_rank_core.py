@@ -195,15 +195,21 @@ def _count_nodes(df, node):
 
 
 def test_unmasked_ranked_plan_has_no_cogroup(spark, tmp_path):
-    """No tombstones and no ``where``: the plain groupBy plan, never a
-    cogroup with an empty side. After a delete: exactly one cogroup."""
+    """No tombstones and no ``where``: one block-sorted mapInPandas and
+    no side union. After a delete: the same mapInPandas over exactly
+    one union with the tombstone side. Never a grouped or cogrouped
+    pandas node."""
     eng = TranscriptSearchEngine.build(
         spark, golden_transcripts(spark), os.path.join(str(tmp_path), "idx")
     )
-    df = eng.ranked_query_df("test here", 10)
-    assert _count_nodes(df, "FlatMapCoGroupsInPandas") == 0
-    assert _count_nodes(df, "FlatMapGroupsInPandas") == 1
+
+    def shape(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        below = plan[plan.index("MapInPandas") :]
+        flat = len(re.findall(r"\bFlatMap\w*InPandas\b", plan))
+        sorted_blocks = re.search(r"\bSort \[block_id", below) is not None
+        return _count_nodes(df, "MapInPandas"), _count_nodes(df, "Union"), flat, sorted_blocks
+
+    assert shape(eng.ranked_query_df("test here", 10)) == (1, 0, 0, True)
     eng.delete([2])
-    df = eng.ranked_query_df("test here", 10)
-    assert _count_nodes(df, "FlatMapCoGroupsInPandas") == 1
-    assert _count_nodes(df, "FlatMapGroupsInPandas") == 0
+    assert shape(eng.ranked_query_df("test here", 10)) == (1, 1, 0, True)
