@@ -40,9 +40,6 @@ from pyspark.storagelevel import StorageLevel
 from search_engine_spark import fsio
 from search_engine_spark.functions.udfs import (
     analyze_doc_udf,
-    encode_positions_udf,
-    encode_postings_udf,
-    encode_weights_udf,
     kgrams_udf,
 )
 from search_engine_spark.operators.docids import with_doc_ids_counted
@@ -56,9 +53,10 @@ from search_engine_spark.operators.docids import with_doc_ids_counted
 # blocks per hot term, spread over the cluster).
 DEFAULT_BLOCK_SPAN = 1 << 16
 
-# The positional workers pack (block-local doc offset, position) into
-# one int64 key: offset < block_span <= 2^30, position < 2^33
-# (engine._decode_cells). Larger spans would silently overflow the key.
+# The positional workers pack (doc rank, position) into one int64 key,
+# where the rank is dense over the distinct docs of one worker call and
+# checked < 2^30 there, and position < 2^33 (engine._decode_cells). A
+# span of at most 2^30 keeps any single block under that rank limit.
 MAX_BLOCK_SPAN = 1 << 30
 
 # Hash-bucketed storage layout: postings are written under

@@ -19,21 +19,25 @@ Every posting-cell worker — ranked scoring, doc sets, positional
 matches, the analytics aggregates — runs through one block-sorted
 ``mapInPandas`` (:func:`_block_batches`) that hands it whole blocks one
 Arrow batch at a time, so a query pays one Python call per batch, not
-one per block. Driver-built query dimensions are Arrow-backed
-``LocalRelation`` s (:meth:`TranscriptSearchEngine._local_df`), which
+one per block; block-max WAND pruning (``pruned=True``) happens inside
+the ranked worker of that same job. Driver-built query dimensions are
+Arrow-backed ``LocalRelation`` s (:meth:`TranscriptSearchEngine._local_df`), which
 broadcast without a job of their own.
 """
 
 from __future__ import annotations
 
+import heapq
 import re
 import shlex
+from contextlib import contextmanager
 from math import log
 from functools import reduce
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -53,6 +57,7 @@ from search_engine_spark.text.normalize import (
 JACCARD_THRESHOLD = 0.35  # reference query.py:14
 DEFAULT_K = 10  # reference query.py:25
 RANKED_SCHEMA = "doc_id long, score double"
+_EMPTY = np.empty(0, dtype=np.int64)
 
 
 def block_id_col(block_span: int) -> Column:
@@ -68,10 +73,13 @@ def _tfidf_partials(cells: pd.DataFrame):
     no doc_stats join). Yields cells in query-term order (qidx), the
     float-addition order of the reference's term-at-a-time loop
     (``query.py:78-83``)."""
+    wqt, blobs, weights = (
+        cells[c].to_numpy() for c in ("wqt", "postings_bin", "weights_bin")
+    )
     for i in np.argsort(cells["qidx"].to_numpy(), kind="stable"):
-        d, t = codec.decode_postings(bytes(cells["postings_bin"].iloc[i]))
-        w = np.frombuffer(bytes(cells["weights_bin"].iloc[i]), dtype="<f8")
-        yield d, cells["wqt"].iloc[i] * (1.0 + np.log(t)), w
+        d, t = codec.decode_postings(bytes(blobs[i]))
+        w = np.frombuffer(bytes(weights[i]), dtype="<f8")
+        yield d, wqt[i] * (1.0 + np.log(t)), w
 
 
 def _bm25_partials(k1: float, b: float, avgdl: float):
@@ -80,13 +88,14 @@ def _bm25_partials(k1: float, b: float, avgdl: float):
     (``doclens_bin``). Yields cells in qidx order."""
 
     def partials(cells: pd.DataFrame):
+        wqt, blobs, lens = (
+            cells[c].to_numpy() for c in ("wqt", "postings_bin", "doclens_bin")
+        )
         for i in np.argsort(cells["qidx"].to_numpy(), kind="stable"):
-            d, t = codec.decode_postings(bytes(cells["postings_bin"].iloc[i]))
-            dl = codec.vb_decode(bytes(cells["doclens_bin"].iloc[i])).astype(
-                np.float64
-            )
+            d, t = codec.decode_postings(bytes(blobs[i]))
+            dl = codec.vb_decode(bytes(lens[i])).astype(np.float64)
             denom = t + k1 * (1.0 - b + b * dl / avgdl)
-            yield d, cells["wqt"].iloc[i] * (t * (k1 + 1.0)) / denom, None
+            yield d, wqt[i] * (t * (k1 + 1.0)) / denom, None
 
     return partials
 
@@ -118,10 +127,42 @@ def _synonym_partials(cells: pd.DataFrame):
         yield uq, wqt_by_gid[gid] * (1.0 + np.log(gtf)), ld
 
 
-def _block_worker(partials, k, allow=None, per_group=None):
-    """The one ranked-scoring worker, for :func:`_block_batches` over
-    the query-term cells of whole blocks (plus, when ``allow`` is not
-    None, those blocks' mask-side rows, see
+def _tfidf_bound(cells: pd.DataFrame) -> np.ndarray:
+    """Block-max bound on each cell's tf-idf partials, ``wqt·max_partial``:
+    ``max_partial`` is the cell's largest (1+ln tf)/L_d
+    (``build.py::_partial_block_encoder``)."""
+    return cells["wqt"].to_numpy() * cells["max_partial"].to_numpy()
+
+
+def _bm25_bound(k1: float, b: float, avgdl: float):
+    """Block-max bound on each cell's BM25 partials,
+    ``wqt·max_tf(k1+1)/(max_tf + k1(1-b+b·min_dl/avgdl))``: the partial
+    is increasing in tf and decreasing in dl, so the cell's largest tf
+    and smallest doc length bound every posting in it."""
+
+    def bound(cells: pd.DataFrame) -> np.ndarray:
+        mt = cells["max_tf"].to_numpy(np.float64)
+        dl = cells["min_dl"].to_numpy(np.float64)
+        denom = mt + k1 * (1.0 - b + b * dl / avgdl)
+        return cells["wqt"].to_numpy() * (mt * (k1 + 1.0)) / denom
+
+    return bound
+
+
+class _Counts(AccumulatorParam):
+    """A Spark accumulator of a tuple of counters, added element-wise."""
+
+    def zero(self, value):
+        return (0,) * len(value)
+
+    def addInPlace(self, value1, value2):
+        return tuple(a + b for a, b in zip(value1, value2))
+
+
+def _block_worker(partials, k, allow=None, per_group=None, prune=None):
+    """The one ranked-scoring worker (a factory for :func:`_block_batches`)
+    over the query-term cells of whole blocks (plus, when ``allow`` is
+    not None, those blocks' mask-side rows, see
     :meth:`TranscriptSearchEngine._mask_side`).
 
     Pipeline, once per call (and per query_id on the batch paths):
@@ -135,12 +176,12 @@ def _block_worker(partials, k, allow=None, per_group=None):
     doc's score is COMPLETE within its call and the global top-k is a
     subset of the union of per-call top-ks. Masking happens BEFORE
     truncation: a filtered-out or deleted doc must neither occupy a
-    top-k slot nor (on the WAND scoring rounds) inflate the pruning
-    threshold, and it never changes a surviving doc's accumulation
-    order. An ``allow`` side keeps only its docs; a deny side drops its
-    NULL-boost (deleted) docs. Boosts multiply AFTER normalization and
-    BEFORE truncation, so a boosted doc can displace an unboosted one
-    and vice versa; docs without a boost row keep weight 1.0.
+    top-k slot nor raise the pruning threshold below, and it never
+    changes a surviving doc's accumulation order. An ``allow`` side
+    keeps only its docs; a deny side drops its NULL-boost (deleted)
+    docs. Boosts multiply AFTER normalization and BEFORE truncation, so
+    a boosted doc can displace an unboosted one and vice versa; docs
+    without a boost row keep weight 1.0.
 
     Correctness of the per-call cap: a call's docs are a union U of
     whole blocks. Order docs by the total order (score desc, doc_id
@@ -155,10 +196,34 @@ def _block_worker(partials, k, allow=None, per_group=None):
     of d into GLOBAL diversified candidates ahead of d — fewer than k
     of those exist, so d is inside the call's top-k too. The global
     re-cap + top-k over the n_calls*k survivors happens in the
-    DataFrame plan (window + limit over tiny rows)."""
+    DataFrame plan (window + limit over tiny rows).
 
-    def score(cells: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
-        docs, vals, norms = np.empty(0, dtype=np.int64), np.empty(0), None
+    Block-max pruning, with ``prune = (bound, counts)`` (a top-k with
+    no boost and no group cap): ``bound(cells)`` is each cell's upper
+    bound on its partials (:func:`_tfidf_bound`, :func:`_bm25_bound`,
+    over the cells' projected block-max columns), and a block's ub is
+    the sum over its cells. A call visits its blocks in (ub desc,
+    block_id) order and stops at the first block whose ub is strictly
+    below the partition's running k-th masked score less a 1e-9
+    relative slack (float re-association can then only make it decode
+    MORE blocks); that block and the rest go undecoded. The running
+    score is the k-th best of the docs this partition has scored so far
+    (one per query_id on the batch path), so it is <= the global k-th
+    score, and a skipped doc scores <= ub < it — strictly, so it is
+    not even tied with the global top-k. Masking only removes docs, so
+    an unmasked ub still bounds them, and a block with no allowed doc
+    is skipped outright. A scored block's docs get exactly the
+    additions of the exhaustive path (blocks partition the docs, each
+    accumulates in qidx order), so every score is bit-identical. Each
+    call adds (blocks decoded, blocks skipped, rows emitted) to the
+    accumulator ``counts``; the thresholds live in the closure
+    :func:`_block_batches` makes per partition, never longer."""
+
+    def score(cells: pd.DataFrame, side: pd.DataFrame | None) -> tuple:
+        """(doc ids, scores, group keys or None) of the docs of
+        ``cells``, in (score desc, doc_id asc) order, cut to k unless
+        groups are capped."""
+        docs, vals, norms, groups = _EMPTY, np.empty(0), None, None
         dead = None if side is None else np.isnan(side["boost"].to_numpy())
         if len(cells) and not (allow and side.empty):
             parts = list(partials(cells))
@@ -187,31 +252,79 @@ def _block_worker(partials, k, allow=None, per_group=None):
         idx = np.lexsort((uniq, -scores))  # score desc, doc_id asc
         if not per_group:
             idx = idx[:k]
-        out = pd.DataFrame({"doc_id": uniq[idx], "score": scores[idx]})
+        return uniq[idx], scores[idx], None if groups is None else groups[idx]
+
+    def frame(docs, scores, groups) -> pd.DataFrame:
+        """The call's output rows from ``score``'s: groups capped, top-k."""
+        out = pd.DataFrame({"doc_id": docs, "score": scores})
         if per_group:
-            out["group_key"] = groups[idx]
+            out["group_key"] = groups
             out = out[out.groupby("group_key", sort=False).cumcount() < per_group]
             out = out.head(k)
         return out
 
-    def run(cells: pd.DataFrame, side: pd.DataFrame | None = None) -> pd.DataFrame:
-        if "query_id" not in cells:
-            return score(cells, side)
-        parts = [score(c, side).assign(query_id=q) for q, c in cells.groupby("query_id")]
-        return pd.concat([score(cells[:0], side).assign(query_id=0), *parts])
+    def pruned(cells: pd.DataFrame, side: pd.DataFrame | None, top: list) -> pd.DataFrame:
+        """``score`` block by block in (ub desc, block_id) order; ``top``
+        is a min-heap of the partition's k best masked scores so far."""
+        bound, counts = prune
+        blocks = cells["block_id"].to_numpy()
+        ids, first = np.unique(blocks, return_index=True)  # the call is block-sorted
+        ends = np.r_[first[1:], blocks.size]
+        ub = np.add.reduceat(bound(cells), first)
+        if side is not None:
+            sblocks = side["block_id"].to_numpy()
+            lo, hi = np.searchsorted(sblocks, ids), np.searchsorted(sblocks, ids, "right")
+        docs, scores = [_EMPTY], [np.empty(0)]
+        for j in np.lexsort((ids, -ub)):
+            if len(top) >= k and (not k or ub[j] < top[0] - abs(top[0]) * 1e-9):
+                break
+            bside = None if side is None else side.iloc[lo[j] : hi[j]]
+            if allow and bside.empty:
+                continue
+            d, s, _groups = score(cells.iloc[first[j] : ends[j]], bside)
+            docs.append(d)
+            scores.append(s)
+            for v in s:
+                (heapq.heappush if len(top) < k else heapq.heappushpop)(top, v)
+        d, s = np.concatenate(docs), np.concatenate(scores)
+        idx = np.lexsort((d, -s))[:k]
+        decoded = len(docs) - 1
+        counts.add((decoded, int(ids.size) - decoded, int(idx.size)))
+        return frame(d[idx], s[idx], None)
 
-    return run
+    def make():
+        tops: dict[int, list] = {}  # query_id -> running top-k heap
+
+        def call(cells: pd.DataFrame, side: pd.DataFrame | None, q: int) -> pd.DataFrame:
+            if prune is None:
+                return frame(*score(cells, side))
+            return pruned(cells, side, tops.setdefault(q, []))
+
+        def run(cells: pd.DataFrame, side: pd.DataFrame | None = None) -> pd.DataFrame:
+            if "query_id" not in cells:
+                return call(cells, side, 0)
+            parts = [
+                call(c, side, q).assign(query_id=q) for q, c in cells.groupby("query_id")
+            ]
+            return pd.concat([frame(*score(cells[:0], side)).assign(query_id=0), *parts])
+
+        return run
+
+    return make
 
 
-def _block_batches(cells: DataFrame, worker, schema: str, side=None) -> DataFrame:
+def _block_batches(cells: DataFrame, make_worker, schema: str, side=None) -> DataFrame:
     """The one block-execution plan: ``cells`` (with the ``side`` rows
     unioned in, when given) hash-partitioned and sorted by block_id,
-    then ONE ``mapInPandas`` that calls ``worker`` with the rows of
-    whole blocks — one call per Arrow batch, not one per block, so the
-    fixed cost of a Python call is paid per batch of Spark's own size.
+    then ONE ``mapInPandas`` whose partitions each make one worker with
+    ``make_worker()`` and call it with the rows of whole blocks — one
+    call per Arrow batch, not one per block, so the fixed cost of a
+    Python call is paid per batch of Spark's own size. A worker's state
+    (the pruning thresholds of :func:`_block_worker`) lives for its
+    partition only.
 
     Each batch is prefixed with the block carried over from the batch
-    before; every complete block goes to ``worker`` in one call and the
+    before; every complete block goes to the worker in one call and the
     last block (which may continue in the next batch) is carried on,
     then flushed at the end of the partition. Blocks partition the doc
     space, so all of a doc's rows arrive in the same call.
@@ -233,14 +346,15 @@ def _block_batches(cells: DataFrame, worker, schema: str, side=None) -> DataFram
 
         cells = pad(cells).unionByName(pad(side), allowMissingColumns=True)
 
-    def call(pdf):  # a closure over ``side`` itself would not pickle
-        if side_cols is None:
-            return worker(pdf)
-        is_side = pdf["postings_bin"].isna().to_numpy()
-        return worker(pdf.loc[~is_side, cell_cols], pdf.loc[is_side, side_cols])
-
     def run(batches):
-        carry = None
+        worker, carry = make_worker(), None
+
+        def call(pdf):  # a closure over ``side`` itself would not pickle
+            if side_cols is None:
+                return worker(pdf)
+            is_side = pdf["postings_bin"].isna().to_numpy()
+            return worker(pdf.loc[~is_side, cell_cols], pdf.loc[is_side, side_cols])
+
         for pdf in batches:
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
@@ -260,12 +374,12 @@ def _block_batches(cells: DataFrame, worker, schema: str, side=None) -> DataFram
     return ordered.mapInPandas(run, schema)
 
 
-def _rank(cells: DataFrame, partials, k, side=None, per_group=None):
+def _rank(cells: DataFrame, partials, k, side=None, per_group=None, prune=None):
     """The one ranked-scoring plan: :func:`_block_worker` over ``cells``
     in :func:`_block_batches`, with the mask side's ``(df, allow)`` rows
-    when there is one. Output: (doc_id, score) rows, plus query_id when
-    the cells carry it (the batch paths) and group_key when
-    ``per_group`` caps groups."""
+    when there is one and block-max pruning when ``prune`` is given.
+    Output: (doc_id, score) rows, plus query_id when the cells carry it
+    (the batch paths) and group_key when ``per_group`` caps groups."""
     schema = ", ".join(
         ["query_id int"] * ("query_id" in cells.columns)
         + ["doc_id long"]
@@ -273,10 +387,8 @@ def _rank(cells: DataFrame, partials, k, side=None, per_group=None):
         + ["score double"]
     )
     df, allow = side or (None, None)
-    return _block_batches(cells, _block_worker(partials, k, allow, per_group), schema, df)
-
-
-_EMPTY = np.empty(0, dtype=np.int64)
+    worker = _block_worker(partials, k, allow, per_group, prune)
+    return _block_batches(cells, worker, schema, df)
 
 
 def _decode_cells(cells: pd.DataFrame, labels=(), positions=False) -> dict[str, np.ndarray]:
@@ -737,25 +849,22 @@ class TranscriptSearchEngine:
         pruned: bool = False,
         where=None,
     ) -> list[tuple[int, float]]:
-        """Top-k ranked retrieval. ``pruned=True`` uses block-max WAND
-        pruning — provably rank-identical, decodes fewer posting blocks
-        (``tests/test_wand.py`` asserts equality vs exhaustive).
-        ``where`` filters by docs metadata (exhaustive path only: WAND's
-        block upper bounds are filter-oblivious, so a selective filter
-        would defeat the pruning they exist for)."""
-        if pruned:
-            if where is not None:
-                raise NotImplementedError(
-                    "pruned=True with where= is not supported; the "
-                    "exhaustive filtered path is the scale-correct plan"
-                )
-            return self.ranked_query_wand(query, k)
-        df = self.ranked_query_df(query, k, where=where)
-        return [(r["doc_id"], r["score"]) for r in df.collect()]
+        """Top-k ranked retrieval. ``pruned=True`` adds block-max pruning
+        to the same single scoring job (:func:`_block_worker`): it
+        decodes only the blocks whose upper bound can still reach the
+        top-k and returns exactly the exhaustive result, scores
+        bit-identical (``tests/test_wand.py`` asserts it). ``where``
+        filters by docs metadata (:meth:`ranked_query_df`), pruned or
+        not."""
+        with self._pruning(pruned) as counts:
+            df = self._score_terms_df(
+                self._ranked_terms(query), k, counts=counts, where=where
+            )
+            return [(r["doc_id"], r["score"]) for r in df.collect()]
 
     # -------------------------------------------------------- block-max WAND
     def ranked_query_wand(self, query: str, k: int = DEFAULT_K) -> list[tuple[int, float]]:
-        """Block-max WAND top-k: rank-identical to exhaustive scoring.
+        """Block-max WAND top-k: :meth:`ranked_query` with ``pruned=True``.
 
         Postings are stored per (term, doc-range block) with
         ``max_partial`` = max over the block of (1+ln tf)/L_d
@@ -763,154 +872,41 @@ class TranscriptSearchEngine:
         live in the doc's own block range, the per-block score upper
         bound is
 
-            ub(b) = sum over query terms t present in b of m_t * wqt_t * max_partial_{t,b}
+            ub(b) = sum over the query-term cells c of b of wqt_c * max_partial_c
 
-        Block selection is CLUSTER-SIDE: one DataFrame aggregation over
-        the term-pruned metadata columns (the binary posting columns
-        are never scanned — Catalyst prunes them) computes ub per
-        block; the driver collects only
-
-        1. the top ``max(k, 32)`` block ids by ub (a distributed
-           TakeOrdered — each block holds >= 1 doc and blocks partition
-           the doc space, so these yield >= k exact candidate scores
-           and hence the running k-th score L), then
-        2. the ids of remaining blocks with ub >= L (WAND's survivors;
-           a pruned block cannot contain a doc with score > L, nor a
-           score == L tie, because ties break on doc_id only among
-           EQUAL scores and ub >= score for every doc in the block).
-
-        At a 10^12-turn corpus a stopword query has ~15M blocks; the
-        driver never sees them — only the handful whose upper bound
-        survives. Each round's exact scoring is the same plan as the
-        exhaustive path restricted to the selected block ids, so
-        correctness reduces to the threshold argument above. The ub
-        comparison carries a 1e-9 relative slack so float re-association
-        between the JVM aggregate and the numpy scorer can only ever
-        UNDER-prune (score a few extra blocks), never over-prune.
-        """
-        return self._wand_topk(
-            self._model(self._ranked_terms(query)),
-            row_ub=F.col("wqt") * F.col("max_partial"),
-            k=k,
-        )
+        and the scoring worker skips every block whose ub cannot reach
+        its partition's running k-th score (:func:`_block_worker`)."""
+        return self.ranked_query(query, k, pruned=True)
 
     def bm25_query_wand(
         self, query: str, k: int = DEFAULT_K, k1: float = 1.2, b: float = 0.75
     ) -> list[tuple[int, float]]:
-        """Block-max WAND BM25, rank-identical to :meth:`bm25_query`.
+        """Block-max WAND BM25, rank-identical to :meth:`bm25_query`:
+        :meth:`bm25_query` with ``pruned=True``, per-cell bounds
+        ``idf * f(max_tf, min_dl)`` (:func:`_bm25_bound`)."""
+        return self.bm25_query(query, k, k1, b, pruned=True)
 
-        The per-cell upper bound uses the cell's block-max metadata:
-        BM25's norm is increasing in tf and decreasing in dl, so
-        ``idf * f(max_tf, min_dl)`` bounds every posting in the cell.
-        """
-        avgdl = self.total_tokens / max(self.num_docs, 1)
-        mt = F.col("max_tf").cast("double")
-        row_ub = F.col("wqt") * (
-            (mt * F.lit(k1 + 1.0))
-            / (
-                mt
-                + F.lit(k1)
-                * (
-                    F.lit(1.0 - b)
-                    + F.lit(b) * F.col("min_dl").cast("double") / F.lit(avgdl)
-                )
-            )
-        )
-        return self._wand_topk(
-            self._model(self._ranked_terms(query), (k1, b)), row_ub, k
-        )
-
-    def _wand_topk(self, model, row_ub, k: int) -> list[tuple[int, float]]:
-        """Shared block-max selection (see :meth:`ranked_query_wand`):
-        cluster-side upper bounds, two collect-only-survivors rounds,
-        exact scoring of selected blocks — each scoring call ships its
-        top-k rows to the driver (k per call of whole blocks, not the
-        blocks' up-to-``block_span`` docs each; the global top-k and the
-        round-1 threshold both survive per-call truncation because
-        blocks partition the doc space)."""
-        occurrences = model[0]
-        if not occurrences:
-            self._last_wand_stats = {"round1_blocks": 0, "round2_blocks": 0}
-            return []
-
-        def score(block_ids):
-            # tombstones are masked INSIDE the scoring rounds: a deleted
-            # doc in round 1 would inflate the threshold L and over-prune
-            # live docs in round 2
-            pdf = self._scores(model, k, block_ids=block_ids).toPandas()
-            return {int(d): float(s) for d, s in zip(pdf["doc_id"], pdf["score"])}
-
-        # adaptive fallback: when the whole index has no more doc-range
-        # blocks than round 1 would select anyway, the upper-bound
-        # aggregation job is pure overhead (it cannot prune a thing) —
-        # score every block directly, which is exactly the exhaustive
-        # plan and therefore trivially rank-identical. The estimate
-        # under-counts blocks on appended indexes (append pads to block
-        # boundaries), which only ever errs toward this exact fallback.
-        n_blocks_est = -(-self.num_docs // self.block_span)
-        if n_blocks_est <= max(k, 32):
-            scored = score(None)
-            self._last_wand_stats = {
-                "round1_blocks": 0,
-                "round2_blocks": 0,
-                "driver_rows": len(scored),
-                "fallback_exhaustive": True,
-            }
-            return sorted(scored.items(), key=lambda x: (-x[1], x[0]))[:k]
-        # total per-term weight for the upper bound (m_t * wqt_t >=
-        # per-occurrence accumulation up to float re-association; the
-        # slack below absorbs that)
-        by_term: dict[str, float] = {}
-        for t, _i, w in occurrences:
-            by_term[t] = by_term.get(t, 0.0) + w
-        wdf = self._local_df(list(by_term.items()), "term string, wqt double")
-        meta = (
-            self._postings_for_terms(by_term)
-            .join(F.broadcast(wdf), "term")
-            .groupBy("block_id")
-            .agg(F.sum(row_ub).alias("ub"))
-        )
-        meta.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            n_probe = max(k, 32)
-            round1 = [
-                r["block_id"]
-                for r in meta.orderBy(F.desc("ub"), F.asc("block_id"))
-                .limit(n_probe)
-                .collect()
-            ]
-            if not round1:
-                self._last_wand_stats = {"round1_blocks": 0, "round2_blocks": 0}
-                return []
-            scored = score(round1)
-            driver_rows = len(scored)
-            top = sorted(scored.items(), key=lambda x: (-x[1], x[0]))[:k]
-            round2: list[int] = []
-            if len(top) == k and len(round1) == n_probe:
-                threshold = top[-1][1]
-                slack = abs(threshold) * 1e-9
-                round2 = [
-                    r["block_id"]
-                    for r in meta.where(
-                        (F.col("ub") >= threshold - slack)
-                        & ~F.col("block_id").isin(round1)
-                    )
-                    .select("block_id")
-                    .collect()
-                ]
-                if round2:
-                    extra = score(round2)
-                    driver_rows += len(extra)
-                    scored.update(extra)
-                    top = sorted(scored.items(), key=lambda x: (-x[1], x[0]))[:k]
-        finally:
-            meta.unpersist()
+    @contextmanager
+    def _pruning(self, on: bool):
+        """Yield the block-count accumulator of one pruned query (None
+        when ``on`` is false) and, when the block ends, record its
+        totals in ``_last_wand_stats``: blocks — (query, block) pairs on
+        the batch path — decoded (``round1_blocks``) and skipped, and
+        the rows the scoring calls emitted toward the driver's top-k.
+        One accumulator per query, so no two queries share counts."""
+        if not on:
+            yield None
+            return
+        counts = self.spark.sparkContext.accumulator((0, 0, 0), _Counts())
+        yield counts
+        decoded, skipped, rows = counts.value
+        # perfbench/run.py reads round1_blocks + round2_blocks as blocks scored
         self._last_wand_stats = {
-            "round1_blocks": len(round1),
-            "round2_blocks": len(round2),
-            "driver_rows": driver_rows,
+            "round1_blocks": decoded,
+            "round2_blocks": 0,
+            "blocks_skipped": skipped,
+            "driver_rows": rows,
         }
-        return top
 
     def _ranked_terms(self, query: str) -> list[str]:
         """Normalized query term list, wildcards expanded, duplicates kept
@@ -942,21 +938,30 @@ class TranscriptSearchEngine:
         ]
 
     def _model(self, terms: list[str], bm25=None):
-        """(occurrences, per-posting partials, payload column) of a
-        ranked query over ``terms``: tf-idf, or BM25 with
+        """(occurrences, then :meth:`_scoring`'s four) of a ranked query
+        over ``terms``: tf-idf, or BM25 with ``bm25=(k1, b)``."""
+        if bm25 is None:
+            return self._weighted_occurrences(terms), *self._scoring()
+        return self._bm25_occurrences(terms), *self._scoring(bm25)
+
+    def _scoring(self, bm25=None):
+        """(per-posting partials, payload column, per-cell block-max
+        bound, the bound's input columns) of tf-idf, or of BM25 with
         ``bm25=(k1, b)``."""
         if bm25 is None:
-            return self._weighted_occurrences(terms), _tfidf_partials, "weights_bin"
+            return _tfidf_partials, "weights_bin", _tfidf_bound, ("max_partial",)
         # max(): an empty index has no occurrences, so avgdl goes unused
-        partials = _bm25_partials(*bm25, self.total_tokens / max(self.num_docs, 1))
-        return self._bm25_occurrences(terms), partials, "doclens_bin"
+        avgdl = self.total_tokens / max(self.num_docs, 1)
+        bound = _bm25_bound(*bm25, avgdl)
+        return _bm25_partials(*bm25, avgdl), "doclens_bin", bound, ("max_tf", "min_dl")
 
-    def _cells(self, rows, schema: str, payload: str) -> DataFrame:
+    def _cells(self, rows, *columns: str) -> DataFrame:
         """The ranked plans' (block, query-term) cells: the pruned
-        postings scan joined to ``rows``, a broadcast occurrence
-        dimension whose first column is the term, projected to
+        postings scan joined to ``rows``, a broadcast dimension of
+        (term, [query_id,] qidx, wqt) occurrences, projected to
         block_id, the other occurrence columns, ``postings_bin`` and
-        the partials' ``payload`` column.
+        ``columns`` (the partials' payload, plus the bound's inputs
+        when pruning).
 
         Blocks partition the doc space, so each doc's score is COMPLETE
         within its block: one block-sorted ``mapInPandas``
@@ -969,11 +974,12 @@ class TranscriptSearchEngine:
         reference's dictionary point lookups, query.py:80), and ``rows``
         itself is an Arrow-built LocalRelation, so broadcasting it runs
         no job; the main job keeps two stages."""
-        occ = self._local_df(rows, schema)
+        batch = "query_id int, " * (len(rows[0]) == 4)
+        occ = self._local_df(rows, f"term string, {batch}qidx int, wqt double")
         return (
             self._postings_for_terms({r[0] for r in rows})
             .join(F.broadcast(occ), "term")
-            .select("block_id", *occ.columns[1:], "postings_bin", payload)
+            .select("block_id", *occ.columns[1:], "postings_bin", *columns)
         )
 
     def _mask_side(self, where=None, allowed=None, boost=None, group_col=None):
@@ -1039,25 +1045,17 @@ class TranscriptSearchEngine:
             )
         return (reduce(DataFrame.unionByName, sides), False) if sides else None
 
-    def _allowed_by_block(self, where) -> DataFrame:
-        """The ``where=`` allow-list side (see :meth:`_mask_side`)."""
-        return self._mask_side(where=where)[0]
-
     def _scores(
-        self, model, k: int | None, block_ids=None, per_group=None, **mask
+        self, model, k: int | None, per_group=None, counts=None, **mask
     ) -> DataFrame:
-        """Per-block ranked rows of ``model`` (see :func:`_rank`), masked
-        by :meth:`_mask_side` called with ``mask``; ``block_ids``
-        restricts both cells and side to those blocks (the WAND
-        rounds)."""
-        rows, partials, payload = model
-        cells = self._cells(rows, "term string, qidx int, wqt double", payload)
-        side = self._mask_side(**mask)
-        if block_ids is not None:
-            sel = F.col("block_id").isin([int(b) for b in block_ids])
-            cells = cells.where(sel)
-            side = side and (side[0].where(sel), side[1])
-        return _rank(cells, partials, k, side, per_group=per_group)
+        """Per-call ranked rows of ``model`` (see :func:`_rank`), masked
+        by :meth:`_mask_side` called with ``mask``. ``counts`` (from
+        :meth:`_pruning`) turns block-max pruning on: the cells then
+        also carry the bound's input columns."""
+        rows, partials, payload, bound, bound_cols = model
+        prune = None if counts is None else (bound, counts)
+        cells = self._cells(rows, payload, *(bound_cols if prune else ()))
+        return _rank(cells, partials, k, self._mask_side(**mask), per_group, prune)
 
     def _top_k(self, model, k: int, **mask) -> DataFrame:
         """Global top-k (doc_id, score) over :meth:`_scores`' per-call
@@ -1142,178 +1140,54 @@ class TranscriptSearchEngine:
     ) -> list[list[tuple[int, float]]]:
         """Many ranked queries in ONE Spark job (plus one shared
         dictionary lookup): per-result-set identical to calling
-        :meth:`ranked_query` per query. ``pruned=True`` adds per-query
-        block-max WAND selection (:meth:`_ranked_batch_wand`) — still a
-        constant number of jobs for the whole batch.
+        :meth:`ranked_query` per query. ``pruned=True`` adds block-max
+        pruning with one running threshold per query
+        (:func:`_block_worker`) — still the same one job, and
+        ``_last_wand_stats`` then counts (query, block) pairs.
 
         Per-query job scheduling dominates small-query latency (~1 s
         per job locally; similar per-job overhead on a real cluster),
         so interactive latency and batch throughput are different
         regimes. Here every (query, term) occurrence becomes a row of
         one broadcast dimension, the postings scan is pruned to the
-        UNION of all query terms, scoring groups by (query_id,
-        block_id), and one window takes each query's top-k — total
-        cost is one job regardless of batch size.
+        UNION of all query terms, scoring runs per query_id within each
+        call of whole blocks, and one window takes each query's top-k —
+        total cost is one job regardless of batch size.
         """
         per_query = [self._ranked_terms(q) for q in queries]
-        all_terms = set().union(*map(set, per_query)) if per_query else set()
-        if not all_terms:
-            return [[] for _ in queries]
-        dfs = self._term_dfs(all_terms)
+        dfs = self._term_dfs({t for terms in per_query for t in terms})
         rows = [
             (t, qid, i, float(log(1 + self.num_docs / dfs[t])))
             for qid, terms in enumerate(per_query)
             for i, t in enumerate(terms)
             if dfs.get(t)
         ]
-        if not rows:
-            return [[] for _ in queries]
-        # same adaptive fallback as _wand_topk: selection can't prune
-        # an index whose block count round 1 would fully select
-        if pruned and -(-self.num_docs // self.block_span) > max(k, 32):
-            return self._ranked_batch_wand(len(queries), rows, k)
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        top = (
-            self._batch_scores(rows, k)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .orderBy("query_id", "rn")
-            .collect()
-        )
         out: list[list[tuple[int, float]]] = [[] for _ in queries]
+        with self._pruning(pruned) as counts:
+            if not rows:
+                return out
+            from pyspark.sql.window import Window
+
+            w = Window.partitionBy("query_id").orderBy(
+                F.desc("score"), F.asc("doc_id")
+            )
+            top = (
+                self._batch_scores(rows, k, counts)
+                .withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") <= k)
+                .orderBy("query_id", "rn")
+                .collect()
+            )
         for r in top:
             out[r["query_id"]].append((r["doc_id"], r["score"]))
         return out
 
-    def _ranked_batch_wand(
-        self, n_queries: int, rows: list[tuple[str, int, int, float]], k: int
-    ) -> list[list[tuple[int, float]]]:
-        """Block-max WAND for a whole query batch — per-query results
-        identical to :meth:`ranked_query_wand`, in a CONSTANT number of
-        jobs for the batch (ub aggregation, round-1 scoring, round-2
-        survivor scan + scoring) instead of 2-3 jobs per query.
-
-        Same two-round threshold argument as :meth:`_wand_topk`, with
-        every step keyed by (query_id, block_id): the upper-bound
-        aggregation is one cluster-side job over term-pruned metadata
-        (binary columns never scanned), round 1 takes each query's top
-        ``max(k, 32)`` blocks with one window rank, thresholds come back
-        to the driver as k-th scores, and round 2 scores only surviving
-        (query, block) pairs (ub >= L_q - slack; the 1e-9 relative slack
-        can only UNDER-prune, as in the single-query path).
-        """
-        n_probe = max(k, 32)
-
-        def pair_scores(pairs):
-            pdf = self._batch_scores(rows, k, pairs).toPandas()
-            return {
-                (int(q), int(d)): float(s)
-                for q, d, s in zip(pdf["query_id"], pdf["doc_id"], pdf["score"])
-            }
-
-        by_qt: dict[tuple[int, str], float] = {}
-        for t, qid, _i, w in rows:
-            by_qt[(qid, t)] = by_qt.get((qid, t), 0.0) + w
-        wdf = self._local_df(
-            [(q, t, w) for (q, t), w in by_qt.items()],
-            "query_id int, term string, wqt double",
-        )
-        meta = (
-            self._postings_for_terms({r[0] for r in rows})
-            .join(F.broadcast(wdf), "term")
-            .groupBy("query_id", "block_id")
-            .agg(F.sum(F.col("wqt") * F.col("max_partial")).alias("ub"))
-        )
-        meta.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            from pyspark.sql.window import Window
-
-            w1 = Window.partitionBy("query_id").orderBy(
-                F.desc("ub"), F.asc("block_id")
-            )
-            total_blocks = {
-                r["query_id"]: r["n"]
-                for r in meta.groupBy("query_id").agg(F.count("*").alias("n")).collect()
-            }
-            round1 = [
-                (r["query_id"], r["block_id"])
-                for r in meta.withColumn("rn", F.row_number().over(w1))
-                .where(F.col("rn") <= n_probe)
-                .select("query_id", "block_id")
-                .collect()
-            ]
-            scored = pair_scores(round1)
-            driver_rows = len(scored)
-            # running k-th score per query -> round-2 thresholds
-            thresholds: list[tuple[int, float]] = []
-            per_query_n1: dict[int, int] = {}
-            for qid, _b in round1:
-                per_query_n1[qid] = per_query_n1.get(qid, 0) + 1
-            tops: dict[int, list[tuple[int, float]]] = {}
-            for (qid, doc), s in scored.items():
-                tops.setdefault(qid, []).append((doc, s))
-            for qid, lst in tops.items():
-                lst.sort(key=lambda x: (-x[1], x[0]))
-                del lst[k:]
-                if len(lst) == k and per_query_n1.get(qid, 0) == n_probe:
-                    thresholds.append((qid, lst[-1][1]))
-            round2: list[tuple[int, int]] = []
-            if thresholds:
-                tdf = self._local_df(thresholds, "query_id int, thr double")
-                seen = self._local_df(round1, "query_id int, block_id long")
-                round2 = [
-                    (r["query_id"], r["block_id"])
-                    for r in meta.join(F.broadcast(tdf), "query_id")
-                    .where(
-                        F.col("ub")
-                        >= F.col("thr") - F.abs(F.col("thr")) * F.lit(1e-9)
-                    )
-                    .join(
-                        F.broadcast(seen), ["query_id", "block_id"], "left_anti"
-                    )
-                    .select("query_id", "block_id")
-                    .collect()
-                ]
-                if round2:
-                    extra = pair_scores(round2)
-                    driver_rows += len(extra)
-                    for (qid, doc), s in extra.items():
-                        tops.setdefault(qid, []).append((doc, s))
-                    for qid, lst in tops.items():
-                        lst.sort(key=lambda x: (-x[1], x[0]))
-                        del lst[k:]
-        finally:
-            meta.unpersist()
-        self._last_batch_wand_stats = {
-            "total_blocks": total_blocks,
-            "round1_pairs": len(round1),
-            "round2_pairs": len(round2),
-            "driver_rows": driver_rows,
-        }
-        return [tops.get(qid, []) for qid in range(n_queries)]
-
-    def _batch_scores(self, rows, k: int, pairs=None) -> DataFrame:
-        """(query_id, doc_id, score): each (query_id, block_id) pair's
-        top-k for the batch occurrences ``rows`` (term, query_id, qidx,
-        wqt) in one job; ``pairs`` restricts scoring to those pairs (the
-        batch WAND rounds — driver traffic O(pairs * k), not pairs *
-        block_span). A block's tombstones apply to EVERY query that
-        scores it (same threshold-inflation argument as the
-        single-query rounds)."""
-        cells = self._cells(
-            rows, "term string, query_id int, qidx int, wqt double", "weights_bin"
-        )
-        side = self._mask_side()
-        if pairs is not None:
-            sel = F.broadcast(self._local_df(pairs, "query_id int, block_id long"))
-            cells = cells.join(sel, ["query_id", "block_id"], "left_semi")
-            blocks = F.col("block_id").isin(sorted({int(b) for _q, b in pairs}))
-            side = side and (side[0].where(blocks), False)
-        return _rank(cells, _tfidf_partials, k, side)
+    def _batch_scores(self, rows, k: int, counts=None) -> DataFrame:
+        """(query_id, doc_id, score): each call's per-query top-k for the
+        batch occurrences ``rows`` (term, query_id, qidx, wqt) in one
+        job, tf-idf scored; ``counts`` prunes as in :meth:`_scores`. A
+        block's tombstones apply to EVERY query that scores it."""
+        return self._scores((rows, *self._scoring()), k, counts=counts)
 
     # ------------------------------------------------------------------ BM25
     def bm25_query_df(
@@ -1359,20 +1233,14 @@ class TranscriptSearchEngine:
         pruned: bool = False,
         where=None,
     ) -> list[tuple[int, float]]:
-        """Top-k BM25. ``pruned=True`` uses block-max WAND selection —
-        rank-identical, scores only blocks whose upper bound can reach
-        the top-k (``tests/test_wand.py`` asserts equality). ``where``
-        filters by docs metadata (exhaustive path only, like
-        :meth:`ranked_query`)."""
-        if pruned:
-            if where is not None:
-                raise NotImplementedError(
-                    "pruned=True with where= is not supported; the "
-                    "exhaustive filtered path is the scale-correct plan"
-                )
-            return self.bm25_query_wand(query, k, k1, b)
-        df = self.bm25_query_df(query, k, k1, b, where=where)
-        return [(r["doc_id"], r["score"]) for r in df.collect()]
+        """Top-k BM25. ``pruned=True`` adds block-max pruning, exactly
+        as in :meth:`ranked_query` — same result, fewer blocks decoded.
+        ``where`` filters by docs metadata, pruned or not."""
+        with self._pruning(pruned) as counts:
+            df = self._score_terms_df(
+                self._ranked_terms(query), k, (k1, b), counts=counts, where=where
+            )
+            return [(r["doc_id"], r["score"]) for r in df.collect()]
 
     # ---------------------------------------------------------------- boolean
     def boolean_query(self, query: str) -> list[int]:
@@ -1425,7 +1293,7 @@ class TranscriptSearchEngine:
                     if not expansion:
                         continue
                     parts.append(
-                        self._any_term_df([query_normalize(x) for x in expansion])
+                        self._doc_set_df([query_normalize(x) for x in expansion])
                     )
                 continue
             terms = [query_normalize(w) for w in words]
@@ -1437,7 +1305,7 @@ class TranscriptSearchEngine:
             # ALL single-term conjuncts resolve in ONE decode pass:
             # docs containing every term via count_distinct == n (Q6 as a
             # single aggregation, not a join chain — one shuffle total).
-            parts.insert(0, self._all_terms_df(single_terms))
+            parts.insert(0, self._doc_set_df(single_terms, len(set(single_terms))))
         if not parts:
             return None
         return reduce(lambda a, b: a.join(b, "doc_id"), parts)
@@ -1451,22 +1319,16 @@ class TranscriptSearchEngine:
         cells = self._postings_for_terms(terms).select(
             "block_id", "term", "postings_bin"
         )
-        return _block_batches(cells, _block_set_op(n_required), "doc_id long")
-
-    def _all_terms_df(self, terms: list[str]) -> DataFrame:
-        """Docs containing ALL of ``terms`` (:meth:`_doc_set_df`)."""
-        return self._doc_set_df(terms, len(set(terms)))
-
-    def _any_term_df(self, terms: list[str]) -> DataFrame:
-        """Docs containing ANY of ``terms`` (:meth:`_doc_set_df`)."""
-        return self._doc_set_df(terms)
+        return _block_batches(cells, lambda: _block_set_op(n_required), "doc_id long")
 
     def _positional_df(self, cells: DataFrame, slots, offsets) -> DataFrame:
         """Docs matching the ``offsets`` tuples over slot-labelled
         ``cells`` (block_id, slot, postings_bin, positions_bin):
         :func:`_block_positional` over whole blocks in
         :func:`_block_batches`."""
-        return _block_batches(cells, _block_positional(slots, offsets), "doc_id long")
+        return _block_batches(
+            cells, lambda: _block_positional(slots, offsets), "doc_id long"
+        )
 
     def _phrase_df(self, terms: list[str]) -> DataFrame:
         """Docs where ``terms`` occur at consecutive positions
@@ -1732,7 +1594,7 @@ class TranscriptSearchEngine:
             for f in df.schema
         }
         schema = ", ".join([f"{c} {types[c]}" for c in by] + [f"{a} long" for a in aggs])
-        parts = _block_batches(cells, _block_doc_agg(by, aggs), schema, side)
+        parts = _block_batches(cells, lambda: _block_doc_agg(by, aggs), schema, side)
         return parts.groupBy(*by).agg(*(F.sum(a).cast("long").alias(a) for a in aggs))
 
     def significant_terms_df(
@@ -1766,7 +1628,7 @@ class TranscriptSearchEngine:
         if not present:
             return empty
         fg = (
-            self._mask_deleted(self._any_term_df(present))
+            self._mask_deleted(self._doc_set_df(present))
             .select("doc_id", block_id_col(self.block_span))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
@@ -1822,9 +1684,10 @@ class TranscriptSearchEngine:
             .join(self.terms.select("term", "df"), "term")
             .select("block_id", "term", "df")
         )
+        n, n_docs = int(n), float(self.num_docs)  # the worker must not close over self
         out = _block_batches(
             self.postings.select("block_id", "term", "postings_bin"),
-            _block_keywords(int(n), float(self.num_docs)),
+            lambda: _block_keywords(n, n_docs),
             "doc_id long, term string, tf_idf double, rank int",
             dfs_by_block,
         )
@@ -1965,7 +1828,7 @@ class TranscriptSearchEngine:
             for t, gi in mapping
             if gi in gdfs
         ]
-        return self._top_k((rows, _synonym_partials, "weights_bin"), k)
+        return self._top_k((rows, _synonym_partials, "weights_bin", None, ()), k)
 
     def bm25f_conv_df(
         self,
@@ -2067,7 +1930,7 @@ class TranscriptSearchEngine:
             "block_id", "term", "postings_bin", "positions_bin"
         )
         partials = _block_batches(
-            cells, _block_colloc_pairs, "term_a string, term_b string, cnt long"
+            cells, lambda: _block_colloc_pairs, "term_a string, term_b string, cnt long"
         )
         pairs = (
             partials.groupBy("term_a", "term_b")

@@ -1,4 +1,4 @@
-"""Arrow-batched pandas UDFs: analysis + posting codec wrappers.
+"""Arrow-batched pandas UDFs: text analysis and k-grams.
 
 Per the north_rule, everything in the build/query hot path is a
 vectorized pandas UDF over Arrow batches — no row-at-a-time Python UDFs.
@@ -6,12 +6,10 @@ vectorized pandas UDF over Arrow batches — no row-at-a-time Python UDFs.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from search_engine_spark.functions import codec
 from search_engine_spark.text.kgrams import kgrams
 from search_engine_spark.text.normalize import analyze
 
@@ -107,37 +105,3 @@ def analyze_doc_udf(texts: pd.Series) -> pd.DataFrame:
 def kgrams_udf(words: pd.Series) -> pd.Series:
     """All 1..3-grams of ``$word$`` (reference ``kgram.py:18-25``)."""
     return words.map(lambda w: sorted(kgrams(w)))
-
-
-@F.pandas_udf(T.BinaryType())
-def encode_postings_udf(doc_ids: pd.Series, tfs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            codec.encode_postings(np.asarray(d, dtype=np.int64), np.asarray(t, dtype=np.int64))
-            for d, t in zip(doc_ids, tfs)
-        ]
-    )
-
-
-@F.pandas_udf(T.BinaryType())
-def encode_weights_udf(weights: pd.Series) -> pd.Series:
-    """Pack per-posting doc weights (L_d) as little-endian float64 —
-    exact bit preservation so score = acc/L_d matches the reference's
-    float64 arithmetic. Stored inline per (term, block) so ranked
-    scoring needs NO doc_stats join (at 10^9+ docs that join shuffles
-    the whole stats table per query)."""
-    return pd.Series(
-        [np.asarray(w, dtype="<f8").tobytes() for w in weights]
-    )
-
-
-@F.pandas_udf(T.BinaryType())
-def encode_positions_udf(tfs: pd.Series, flat_positions: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            codec.encode_positions(
-                np.asarray(t, dtype=np.int64), np.asarray(p, dtype=np.int64)
-            )
-            for t, p in zip(tfs, flat_positions)
-        ]
-    )

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -281,7 +282,7 @@ def bm25f_score_topk(
     if not qt:
         # empty / symbol-only query: agg(*[]) is rejected by Spark, and
         # an empty term list can match nothing anyway
-        return spark.createDataFrame([], "conv_id string, score double")
+        return _conv_scores_df(spark, [])
 
     # per-conv integer tf matrix: one column per (term, role)
     tf_cols = [
@@ -387,7 +388,16 @@ def bm25f_score_topk(
     finally:
         ctf.unpersist()
         clen.unpersist()
-    return spark.createDataFrame(rows, "conv_id string, score double")
+    return _conv_scores_df(spark, rows)
+
+
+def _conv_scores_df(spark, rows) -> DataFrame:
+    """(conv_id, score) ``rows`` as an Arrow-backed ``LocalRelation``:
+    a list-built frame would be a ``LogicalRDD``, which Spark must run
+    a job to collect before it can broadcast it."""
+    schema = pa.schema([("conv_id", pa.string()), ("score", pa.float64())])
+    table = pa.Table.from_pylist([r.asDict() for r in rows], schema)
+    return spark.createDataFrame(table)
 
 
 def term_tf_pairs(terms: list[str], text_col: str = "text") -> Column:

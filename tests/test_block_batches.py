@@ -18,9 +18,8 @@ BOOST = "CASE role WHEN 'assistant' THEN 2.0 WHEN 'tool' THEN 0.5 ELSE 1.0 END"
 
 @pytest.fixture(scope="module")
 def eng(spark, tmp_path_factory):
-    """block_span 16 over 600 turns (38 blocks, more than WAND's 32-block
-    first round, so the pruned paths prune), with every 9th doc and all
-    of block 2 deleted."""
+    """block_span 16 over 600 turns (38 blocks, so the pruned paths have
+    blocks to skip), with every 9th doc and all of block 2 deleted."""
     docs = synthetic_transcripts(spark, n_convs=60, turns_per_conv=10)
     index_dir = os.path.join(str(tmp_path_factory.mktemp("bb")), "idx")
     e = TranscriptSearchEngine.build(spark, docs, index_dir, block_span=16)
@@ -108,18 +107,20 @@ def test_no_query_plan_contains_a_logical_rdd(eng):
         for qid, ts in enumerate(queries)
         for i, t in enumerate(ts)
     ]
-    plans = {
-        "ranked": eng.ranked_query_df("test here", 10),
-        "bm25": eng.bm25_query_df("test here", 10),
-        "wand_round": eng._scores(eng._model(terms), 10, block_ids=[0, 1, 5]),
-        "phrase": eng.phrase_ranked_df("test here", 10),
-        "batch": eng._batch_scores(batch_rows, 10),
-        "batch_pairs": eng._batch_scores(batch_rows, 10, [(0, 1), (1, 5)]),
-        "explain": eng.ranked_explain_df("test here", 5),
-        "synonym": eng.synonym_ranked_df([["test", "testing"], ["data"]], 10),
-        "empty_ranked": eng.ranked_query_df("", 10),
-        "unknown_boolean": eng.boolean_query_df("zzzunknown"),
-    }
+    with eng._pruning(True) as counts:
+        plans = {
+            "ranked": eng.ranked_query_df("test here", 10),
+            "bm25": eng.bm25_query_df("test here", 10),
+            "pruned": eng._scores(eng._model(terms), 10, counts=counts),
+            "phrase": eng.phrase_ranked_df("test here", 10),
+            "batch": eng._batch_scores(batch_rows, 10),
+            "batch_pruned": eng._batch_scores(batch_rows, 10, counts),
+            "explain": eng.ranked_explain_df("test here", 5),
+            "synonym": eng.synonym_ranked_df([["test", "testing"], ["data"]], 10),
+            "bm25f": eng.bm25f_conv_df("test here", k=10),
+            "empty_ranked": eng.ranked_query_df("", 10),
+            "unknown_boolean": eng.boolean_query_df("zzzunknown"),
+        }
     assert {n: "LogicalRDD" in _optimized(df) for n, df in plans.items()} == {
         n: False for n in plans
     }

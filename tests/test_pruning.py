@@ -59,8 +59,8 @@ def test_every_query_class_scans_pruned(spark, cold_engine):
     eng = cold_engine
     plans = {
         "ranked": _formatted_plan(spark, eng.ranked_query_df("test document")),
-        "and": _formatted_plan(spark, eng._all_terms_df(["test", "document"])),
-        "or": _formatted_plan(spark, eng._any_term_df(["test", "document"])),
+        "and": _formatted_plan(spark, eng._doc_set_df(["test", "document"], 2)),
+        "or": _formatted_plan(spark, eng._doc_set_df(["test", "document"])),
         "phrase": _formatted_plan(spark, eng._phrase_df(["test", "document"])),
     }
     for name, plan in plans.items():
@@ -108,8 +108,8 @@ def test_term_bucket_python_matches_spark(spark):
 
 
 def test_wand_driver_sees_only_selected_blocks(spark, tmp_path):
-    """block_span=1 -> one block per doc (200 blocks). The driver must
-    collect only the surviving block ids, and pruned results must stay
+    """block_span=1 -> one block per doc (200 blocks). The scorer must
+    decode only some of them, and pruned results must stay
     rank-identical to exhaustive scoring."""
     idx = str(tmp_path / "idx")
     df = synthetic_transcripts(spark, n_convs=50, turns_per_conv=4)
@@ -124,7 +124,7 @@ def test_wand_driver_sees_only_selected_blocks(spark, tmp_path):
         pruned = eng.ranked_query(q, k=10, pruned=True)
         assert pruned == exhaustive, q
         stats = eng._last_wand_stats
-        selected = stats["round1_blocks"] + stats["round2_blocks"]
+        selected = stats["round1_blocks"]
         assert 0 < selected < n_blocks, (q, stats)
 
 
@@ -229,7 +229,7 @@ def test_positions_column_pruned_for_non_phrase(spark, cold_engine):
     Catalyst must prune the column from ranked/boolean scans."""
     eng = cold_engine
     ranked = _formatted_plan(spark, eng.ranked_query_df("test document"))
-    booln = _formatted_plan(spark, eng._all_terms_df(["test", "document"]))
+    booln = _formatted_plan(spark, eng._doc_set_df(["test", "document"], 2))
     phrase = _formatted_plan(spark, eng._phrase_df(["test", "document"]))
     for plan in (ranked, booln):
         scan_schema = plan.split("ReadSchema")[-1]
@@ -271,7 +271,7 @@ def test_bm25_wand_rank_identical(spark, tmp_path):
         pruned = eng.bm25_query(q, k=10, pruned=True)
         assert pruned == exhaustive, q
         stats = eng._last_wand_stats
-        assert 0 < stats["round1_blocks"] + stats["round2_blocks"] < n_blocks
+        assert 0 < stats["round1_blocks"] < n_blocks
 
 
 # ---- metadata-filtered retrieval (where= over docs columns) ------------------
@@ -324,16 +324,36 @@ def test_filtered_predicate_pushed_to_docs_scan(spark, cold_engine):
     plan = _formatted_plan(spark, df)
     assert "EqualTo(role,assistant)" in plan
     assert "In(term, [document,test])" in plan  # postings side still pruned
-    allowed_plan = _formatted_plan(spark, eng._allowed_by_block("role = 'assistant'"))
+    allowed_plan = _formatted_plan(spark, eng._mask_side(where="role = 'assistant'")[0])
     scan_schema = allowed_plan.split("ReadSchema")[-1]
     assert "text" not in scan_schema
     assert "role" in scan_schema
 
 
-def test_filtered_wand_unsupported(cold_engine):
-    import pytest as _pytest
+def test_filtered_wand_matches_exhaustive(spark, tmp_path):
+    """Pruning with ``where=`` on a block_span-1 index with deletes:
+    the same docs and bit-identical scores as the exhaustive filtered
+    plan, with some blocks decoded and some not. The unfiltered k=50
+    case puts deleted docs among the best-bound blocks, so the running
+    threshold must wait for k LIVE docs."""
+    idx = str(tmp_path / "idx")
+    df = synthetic_transcripts(spark, n_convs=50, turns_per_conv=4)
+    IndexBuilder(spark, idx, block_span=1).build(df)
+    eng = TranscriptSearchEngine(spark, idx, cache=False)
+    n_blocks = eng.postings.select("block_id").distinct().count()
+    eng.delete([d for d, _s in eng.ranked_query("test here", k=5)] + [7, 101])
 
-    with _pytest.raises(NotImplementedError):
-        cold_engine.ranked_query("test", pruned=True, where="role = 'user'")
-    with _pytest.raises(NotImplementedError):
-        cold_engine.bm25_query("test", pruned=True, where="role = 'user'")
+    def hexed(rows):
+        return [(d, s.hex()) for d, s in rows]
+
+    filters = ("role = 'user'", "role = 'assistant'", "doc_id % 3 = 1")
+    for where, k in [(None, 50), *((w, 10) for w in filters)]:
+        for q in ["test", "test here one"]:
+            for run in (eng.ranked_query, eng.bm25_query):
+                exhaustive = run(q, k=k, where=where)
+                assert exhaustive, (q, where)
+                assert hexed(run(q, k=k, pruned=True, where=where)) == hexed(
+                    exhaustive
+                ), (run.__name__, q, where)
+                stats = eng._last_wand_stats
+                assert 0 < stats["round1_blocks"] < n_blocks, (q, where, stats)

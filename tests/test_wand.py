@@ -67,27 +67,31 @@ def test_batch_wand_prunes_blocks(fine_engine):
     pruned = fine_engine.ranked_query_batch(queries, k=10, pruned=True)
     plain = fine_engine.ranked_query_batch(queries, k=10)
     assert pruned == plain
-    stats = fine_engine._last_batch_wand_stats
-    scored_pairs = stats["round1_pairs"] + stats["round2_pairs"]
-    total_pairs = sum(stats["total_blocks"].values())
-    # every query has ~400 candidate blocks; selection must touch
-    # strictly fewer than the exhaustive plan would
+    stats = fine_engine._last_wand_stats
+    scored_pairs = stats["round1_blocks"]
+    total_pairs = scored_pairs + stats["blocks_skipped"]
+    # every query has ~400 candidate blocks (one per doc holding a query
+    # term); pruning must decode strictly fewer than the exhaustive plan
     assert scored_pairs < total_pairs, stats
-    for qid, total in stats["total_blocks"].items():
+    totals = [
+        fine_engine._doc_set_df(fine_engine._ranked_terms(q)).count() for q in queries
+    ]
+    assert total_pairs == sum(totals), (stats, totals)
+    for total in totals:
         assert total > 32
 
 
 def test_wand_driver_rows_bounded(fine_engine):
-    """Scoring rounds ship each selected block's TOP-K rows, not the
-    block's whole doc range: driver-received rows <= selected * k
-    (r03 judge #4 — the last driver funnel in the pruned path)."""
+    """Scoring calls ship at most their TOP-K rows, not the decoded
+    blocks' whole doc ranges: rows sent toward the driver <= decoded
+    blocks * k."""
     k = 5
     for q in ["test here data", "the test data spark index query"]:
         pruned = fine_engine.ranked_query(q, k=k, pruned=True)
         exhaustive = fine_engine.ranked_query(q, k=k)
         assert [d for d, _ in pruned] == [d for d, _ in exhaustive], q
         stats = fine_engine._last_wand_stats
-        selected = stats["round1_blocks"] + stats["round2_blocks"]
+        selected = stats["round1_blocks"]
         assert selected > 0, stats
         assert stats["driver_rows"] <= selected * k, stats
 
@@ -98,7 +102,7 @@ def test_batch_wand_driver_rows_bounded(fine_engine):
     pruned = fine_engine.ranked_query_batch(queries, k=k, pruned=True)
     plain = fine_engine.ranked_query_batch(queries, k=k)
     assert pruned == plain
-    stats = fine_engine._last_batch_wand_stats
-    pairs = stats["round1_pairs"] + stats["round2_pairs"]
+    stats = fine_engine._last_wand_stats
+    pairs = stats["round1_blocks"]
     assert pairs > 0, stats
     assert stats["driver_rows"] <= pairs * k, stats
