@@ -29,6 +29,7 @@ in this sandbox image).
 
 from __future__ import annotations
 
+import functools
 import math
 import time
 
@@ -109,34 +110,93 @@ POSTINGS_SCHEMA = (
 )
 
 
-def _partial_block_encoder(block_span: int):
-    """Factory for the ``mapInArrow`` worker below (closes over the
-    block span; cloudpickle ships the closure to executors)."""
+def _encode_cells(codes, term_dict, block, doc, tf, weight, doclen, positions):
+    """The one posting-cell writer: the SPIMI block flush
+    (``diskindex.py:187-217``) shared by the build's map side and the
+    merge worker, and the write path's only caller of the codec encoders.
 
-    def _encode_partial_blocks(batches):
-        return _encode_partial_blocks_impl(batches, block_span)
+    Input: postings in any order, one entry each — the posting's term is
+    ``term_dict[codes[i]]`` (an Arrow string array) and ``positions`` is
+    flat, ``tf[i]`` positions per posting in input order. The postings
+    are sorted by (term code, block, doc) and one ``POSTINGS_SCHEMA``
+    row is returned per (term code, block), in that order, as a
+    ``pyarrow.Table``. The block metadata reduces the same elementwise
+    expressions fsck's ``cell_wand_bound`` recomputes per cell, so
+    ``max_partial`` matches it exactly.
+    """
+    import pyarrow as pa
 
-    return _encode_partial_blocks
+    from search_engine_spark.functions import codec
+
+    in_start = np.cumsum(tf) - tf
+    order = np.lexsort((doc, block, codes))
+    codes, block, doc, tf, weight, doclen = (
+        a[order] for a in (codes, block, doc, tf, weight, doclen)
+    )
+    pos_end = np.cumsum(tf)
+    pos_start = pos_end - tf
+    positions = positions[
+        np.repeat(in_start[order] - pos_start, tf) + np.arange(int(tf.sum()))
+    ]
+
+    new = np.ones(doc.size, dtype=bool)
+    new[1:] = (codes[1:] != codes[:-1]) | (block[1:] != block[:-1])
+    gs = np.flatnonzero(new)
+    df = np.diff(np.append(gs, doc.size))
+    ge = gs + df
+    # per-posting L_d inline (raw float64): ranked scoring reads it from
+    # the block instead of shuffling doc_stats per query
+    weight_bytes = np.ascontiguousarray(weight, dtype="<f8").tobytes()
+    postings, weights, pos_bins, doclens = [], [], [], []
+    for s, e in zip(gs.tolist(), ge.tolist()):
+        postings.append(codec.encode_postings(doc[s:e], tf[s:e]))
+        weights.append(weight_bytes[8 * s : 8 * e])
+        pos_bins.append(
+            codec.encode_positions(tf[s:e], positions[pos_start[s] : pos_end[e - 1]])
+        )
+        # per-posting doc length (varbyte) — BM25's length normalization
+        # reads it from the block, no doc_stats join at query time
+        doclens.append(codec.vb_encode(doclen[s:e]))
+    return pa.table(
+        {
+            "term": term_dict.take(pa.array(codes[gs])).cast(pa.string()),
+            "block_id": pa.array(block[gs], pa.int64()),
+            "df_block": pa.array(df, pa.int32()),
+            "first_doc_id": pa.array(doc[gs], pa.int64()),
+            "last_doc_id": pa.array(doc[ge - 1], pa.int64()),
+            "max_tf": pa.array(np.maximum.reduceat(tf, gs), pa.int32()),
+            # block-min doc length: BM25's block-max upper bound is
+            # monotone decreasing in dl, so f(max_tf, min_dl) bounds
+            # every posting in the cell
+            "min_dl": pa.array(np.minimum.reduceat(doclen, gs), pa.int32()),
+            "sum_tf": pa.array(np.add.reduceat(tf, gs), pa.int64()),
+            # block-max of the doc-normalized partial score (1+ln tf)/L_d
+            # -- the WAND upper bound for this block under wqt scaling
+            "max_partial": pa.array(
+                np.maximum.reduceat((1.0 + np.log(tf)) / weight, gs), pa.float64()
+            ),
+            "postings_bin": pa.array(postings, pa.binary()),
+            "weights_bin": pa.array(weights, pa.binary()),
+            "positions_bin": pa.array(pos_bins, pa.binary()),
+            "doclens_bin": pa.array(doclens, pa.binary()),
+        }
+    )
 
 
-def _encode_partial_blocks_impl(batches, block_span):
+def _encode_partial_blocks(batches, block_span):
     """``mapInArrow`` worker: turn one doc-range partition of analyzed
     docs straight into encoded posting-block SEGMENTS.
 
     Input columns: doc_id, terms, tfs, positions (per-doc arrays),
-    weight. The worker flattens them with Arrow list offsets (no
-    explode, no per-row Python), sorts the partition's (term, block,
-    doc) triples with one ``np.lexsort`` over int64 codes, and emits one
-    encoded row per (term, block) present in the partition — the SPIMI
-    in-memory block flush (``diskindex.py:187-217``) as vectorized
-    columnar code. Downstream only these compressed segments shuffle
+    weight, doc_len. The worker flattens them with Arrow list offsets
+    (no explode, no per-row Python) and makes one :func:`_encode_cells`
+    call for the whole partition: one segment per (term, block) present
+    in it. Downstream only these compressed segments shuffle
     (bytes-per-posting, not row-per-posting), which is what makes the
     build's one wide exchange cheap at 10^12-turn scale.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from search_engine_spark.functions import codec
 
     # one Arrow compute thread per task: parallelism comes from Spark
     # tasks; N workers x arrow-threads-per-core oversubscribes the box
@@ -148,262 +208,107 @@ def _encode_partial_blocks_impl(batches, block_span):
     # (per-batch flushes would fragment blocks into ~25x more segments;
     # spark.sql.files.maxPartitionBytes bounds the materialized size)
     batches = list(batches)
-    if batches:
-        tbl = pa.Table.from_batches(batches)
-    if not batches or tbl.num_rows == 0:
+    if not batches:
         return
-    doc_col = tbl.column("doc_id").to_numpy()
-    weight_col = tbl.column("weight").to_numpy()
-    doclen_col = tbl.column("doc_len").to_numpy().astype(np.int64)
+    tbl = pa.Table.from_batches(batches)
     terms_list = tbl.column("terms").combine_chunks()
     n_per_doc = pc.list_value_length(terms_list).to_numpy().astype(np.int64)
     dict_arr = terms_list.flatten().dictionary_encode()
-    codes = dict_arr.indices.to_numpy().astype(np.int64)
-    term_dict = dict_arr.dictionary.to_pylist()
-    tf = tbl.column("tfs").combine_chunks().flatten().to_numpy().astype(np.int64)
-    inner = tbl.column("positions").combine_chunks().flatten()
-    flat_pos = inner.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-    pos_lens = pc.list_value_length(inner).to_numpy().astype(np.int64)
-    pos_starts = np.concatenate(([0], np.cumsum(pos_lens)))
-
-    doc = np.repeat(doc_col, n_per_doc)
-    weight = np.repeat(weight_col, n_per_doc)
-    doclen = np.repeat(doclen_col, n_per_doc)
-    block = doc // block_span
-    n = doc.size
-    if n == 0:
-        return
-
-    order = np.lexsort((doc, block, codes))
-    codes, block, doc, tf, weight, doclen = (
-        codes[order], block[order], doc[order], tf[order], weight[order],
-        doclen[order],
-    )
-    lens_o = pos_lens[order]
-    row_off = np.concatenate(([0], np.cumsum(lens_o[:-1])))
-    out_idx = np.repeat(pos_starts[order] - row_off, lens_o) + np.arange(
-        int(lens_o.sum())
-    )
-    flat_pos = flat_pos[out_idx]
-    new_starts = np.concatenate(([0], np.cumsum(lens_o)))
-
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    change[1:] = (codes[1:] != codes[:-1]) | (block[1:] != block[:-1])
-    gs = np.flatnonzero(change)
-    ge = np.append(gs[1:], n)
-
-    cols: dict[str, list] = {k: [] for k in (
-        "term", "block_id", "df_block", "first_doc_id", "last_doc_id",
-        "max_tf", "min_dl", "sum_tf", "max_partial", "postings_bin",
-        "weights_bin", "positions_bin", "doclens_bin",
-    )}
-    for s, e in zip(gs, ge):
-        d, t, w = doc[s:e], tf[s:e], weight[s:e]
-        cols["term"].append(term_dict[codes[s]])
-        cols["block_id"].append(int(block[s]))
-        cols["df_block"].append(int(e - s))
-        cols["first_doc_id"].append(int(d[0]))
-        cols["last_doc_id"].append(int(d[-1]))
-        cols["max_tf"].append(int(t.max()))
-        # block-min doc length: BM25's block-max upper bound is
-        # monotone decreasing in dl, so f(max_tf, min_dl) bounds every
-        # posting in the cell
-        cols["min_dl"].append(int(doclen[s:e].min()))
-        cols["sum_tf"].append(int(t.sum()))
-        # block-max of the doc-normalized partial score (1+ln tf)/L_d
-        # -- the WAND upper bound for this block under wqt scaling
-        cols["max_partial"].append(float(np.max((1.0 + np.log(t)) / w)))
-        cols["postings_bin"].append(codec.encode_postings(d, t))
-        # per-posting L_d inline (raw float64): ranked scoring reads
-        # it from the block instead of shuffling doc_stats per query
-        cols["weights_bin"].append(
-            np.ascontiguousarray(w, dtype="<f8").tobytes()
-        )
-        cols["positions_bin"].append(
-            codec.encode_positions(t, flat_pos[new_starts[s] : new_starts[e]])
-        )
-        # per-posting doc length (varbyte) — BM25's length normalization
-        # reads it from the block, no doc_stats join at query time
-        cols["doclens_bin"].append(codec.vb_encode(doclen[s:e]))
-
-    yield pa.RecordBatch.from_arrays(
-        [
-            pa.array(cols["term"], pa.string()),
-            pa.array(cols["block_id"], pa.int64()),
-            pa.array(cols["df_block"], pa.int32()),
-            pa.array(cols["first_doc_id"], pa.int64()),
-            pa.array(cols["last_doc_id"], pa.int64()),
-            pa.array(cols["max_tf"], pa.int32()),
-            pa.array(cols["min_dl"], pa.int32()),
-            pa.array(cols["sum_tf"], pa.int64()),
-            pa.array(cols["max_partial"], pa.float64()),
-            pa.array(cols["postings_bin"], pa.binary()),
-            pa.array(cols["weights_bin"], pa.binary()),
-            pa.array(cols["positions_bin"], pa.binary()),
-            pa.array(cols["doclens_bin"], pa.binary()),
-        ],
-        names=list(cols.keys()),
-    )
+    doc = np.repeat(tbl.column("doc_id").to_numpy(), n_per_doc)
+    positions = tbl.column("positions").combine_chunks().flatten().flatten()
+    yield from _encode_cells(
+        dict_arr.indices.to_numpy().astype(np.int64),
+        dict_arr.dictionary,
+        doc // block_span,
+        doc,
+        tbl.column("tfs").combine_chunks().flatten().to_numpy().astype(np.int64),
+        np.repeat(tbl.column("weight").to_numpy(), n_per_doc),
+        np.repeat(tbl.column("doc_len").to_numpy().astype(np.int64), n_per_doc),
+        positions.to_numpy(zero_copy_only=False).astype(np.int64),
+    ).to_batches()
 
 
 POSTINGS_BUCKETED_SCHEMA = POSTINGS_SCHEMA + ", bucket int"
 
+# the merge worker's ``deleted`` for build and append: drop nothing
+_NO_DELETES = np.empty(0, dtype=np.int64)
 
-def _merge_sorted_partition(batches):
-    """``mapInArrow`` worker for the merge shuffle's reduce side.
+
+def _merge_cells(batches, deleted):
+    """``mapInArrow`` worker for the postings exchange's reduce side:
+    the SPIMI k-way merge (``diskindex.py:219-260``) and compaction's
+    tombstone purge in one pass.
 
     The partition holds every segment of each of its (term, block_id)
     keys: the exchange hash-partitions on a bucket-major ``pid`` column
     (``pid = bucket * sub_slots + hash(term, block_id) % sub_slots``),
-    so equal keys always co-locate and a task's keys span few buckets,
-    though files per (task, bucket) are not otherwise minimized.
-    Sort the whole partition by (bucket, term, block_id) (Arrow
-    ``sort_by`` — the output files must be term-ordered for row-group
-    min/max pruning),
-    then k-way-merge runs of equal (term, block_id) — the SPIMI merge,
-    reference ``diskindex.py:219-260``. Single-segment runs (the common
-    case: a 64k-doc block rarely spans many input partitions) pass
-    through without decode.
+    so equal keys always co-locate. The partition is sorted by (bucket,
+    term, block_id) — the output files must be term-ordered for
+    row-group min/max pruning. ``deleted`` is the sorted array of doc
+    ids to drop (empty for build and append). A key with one segment
+    and no deleted id inside its [first_doc_id, last_doc_id] passes
+    through undecoded; every other key is decoded, loses its deleted
+    postings and is re-encoded by one :func:`_encode_cells` call — a
+    cell left with no postings disappears.
     """
-    import pandas as pd
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    pa.set_cpu_count(1)  # see _encode_partial_blocks_impl
+    from search_engine_spark.functions import codec
+
+    pa.set_cpu_count(1)  # see _encode_partial_blocks
     batches = list(batches)
     if not batches:
         return
-    tbl = pa.Table.from_batches(batches)
-    if tbl.num_rows == 0:
-        return
-    tbl = tbl.sort_by(
+    tbl = pa.Table.from_batches(batches).sort_by(
         [("bucket", "ascending"), ("term", "ascending"), ("block_id", "ascending")]
     )
-    terms = tbl.column("term").to_pandas().to_numpy()
+    terms = tbl.column("term").combine_chunks()
     blocks = tbl.column("block_id").to_numpy()
-    dup_prev = np.zeros(len(terms), dtype=bool)
-    dup_prev[1:] = (terms[1:] == terms[:-1]) & (blocks[1:] == blocks[:-1])
-    if not dup_prev.any():
+    new = np.ones(tbl.num_rows, dtype=bool)
+    new[1:] = (blocks[1:] != blocks[:-1]) | pc.not_equal(
+        terms[1:], terms[:-1]
+    ).to_numpy(zero_copy_only=False)
+    key = np.cumsum(new) - 1
+    starts = np.flatnonzero(new)
+    n_segments = np.diff(np.append(starts, tbl.num_rows))
+    hit = np.searchsorted(
+        deleted, tbl.column("last_doc_id").to_numpy(), "right"
+    ) > np.searchsorted(deleted, tbl.column("first_doc_id").to_numpy(), "left")
+    redo = (n_segments[key] > 1) | hit
+    if not redo.any():
         yield from tbl.to_batches(max_chunksize=4096)
         return
-    pdf = tbl.to_pandas()
-    starts = np.flatnonzero(~dup_prev)
-    ends = np.append(starts[1:], len(pdf))
-    multi = ends - starts > 1
-    # singles pass through as one slice; multi-segment runs merge into
-    # one dict-of-lists -> one frame (never a per-run concat — that is
-    # quadratic-ish at millions of runs per partition)
-    singles = pdf.iloc[starts[~multi]]
-    merged = [
-        _merge_segments(pdf.iloc[s:e]) for s, e in zip(starts[multi], ends[multi])
-    ]
-    out = pd.concat([singles, *merged], ignore_index=True).sort_values(
-        ["bucket", "term", "block_id"], kind="stable", ignore_index=True
+
+    docs, tfs, weights, doclens, positions = [], [], [], [], []
+    for row in tbl.filter(pa.array(redo)).to_pylist():
+        d, t = codec.decode_postings(row["postings_bin"])
+        docs.append(d)
+        tfs.append(t)
+        weights.append(np.frombuffer(row["weights_bin"], dtype="<f8"))
+        doclens.append(codec.vb_decode(row["doclens_bin"]))
+        positions.append(codec.decode_positions_flat(row["positions_bin"], t))
+    sizes = [d.size for d in docs]
+    doc, tf = np.concatenate(docs), np.concatenate(tfs)
+    live = ~np.isin(doc, deleted)
+    code = np.repeat(key[redo], sizes)[live]
+    merged = _encode_cells(
+        code,
+        terms.take(pa.array(starts)),
+        np.repeat(blocks[redo], sizes)[live],
+        doc[live],
+        tf[live],
+        np.concatenate(weights)[live],
+        np.concatenate(doclens)[live],
+        np.concatenate(positions)[np.repeat(live, tf)],
     )
-    yield from pa.Table.from_pandas(out, schema=tbl.schema, preserve_index=False).to_batches(
-        max_chunksize=4096
-    )
-
-
-def _merge_segments(pdf):
-    """K-way merge of one (term, block)'s encoded segments into the
-    final posting row (the SPIMI merge, ``diskindex.py:219-260``):
-    decode, doc-sort, re-encode.
-    """
-    import pandas as pd
-
-    from search_engine_spark.functions import codec
-
-    if len(pdf) == 1:
-        return pdf
-    docs_l, tfs_l, pos_l, w_l, dl_l = [], [], [], [], []
-    for _, row in pdf.iterrows():
-        d, t = codec.decode_postings(bytes(row["postings_bin"]))
-        docs_l.append(d)
-        tfs_l.append(t)
-        pos_l.extend(codec.decode_positions(bytes(row["positions_bin"]), t))
-        w_l.append(np.frombuffer(bytes(row["weights_bin"]), dtype="<f8"))
-        dl_l.append(codec.vb_decode(bytes(row["doclens_bin"])))
-    doc = np.concatenate(docs_l)
-    tf = np.concatenate(tfs_l).astype(np.int64)
-    w = np.concatenate(w_l)
-    dl = np.concatenate(dl_l)
-    order = np.argsort(doc, kind="stable")
-    doc, tf, w, dl = doc[order], tf[order], w[order], dl[order]
-    flat_pos = np.concatenate([pos_l[i] for i in order])
-    return pd.DataFrame(
-        {
-            "term": [pdf["term"].iloc[0]],
-            "block_id": [pdf["block_id"].iloc[0]],
-            "df_block": [int(doc.size)],
-            "first_doc_id": [int(doc[0])],
-            "last_doc_id": [int(doc[-1])],
-            "max_tf": [int(tf.max())],
-            "min_dl": [int(dl.min())],
-            "sum_tf": [int(tf.sum())],
-            "max_partial": [float(np.max((1.0 + np.log(tf)) / w))],
-            "postings_bin": [codec.encode_postings(doc, tf)],
-            "weights_bin": [np.ascontiguousarray(w, dtype="<f8").tobytes()],
-            "positions_bin": [codec.encode_positions(tf, flat_pos)],
-            "doclens_bin": [codec.vb_encode(dl)],
-            "bucket": [pdf["bucket"].iloc[0]],
-        }
-    )
-
-
-def _purge_block_cells(cells, tomb):
-    """``cogroup().applyInPandas`` worker for the compaction purge: the
-    left side is one doc-range block's (term, block) posting cells, the
-    right side is the block's tombstoned doc_ids. Each cell is decoded,
-    the deleted postings dropped, and the survivors re-encoded with
-    freshly computed block metadata (df_block, first/last, max_tf,
-    min_dl, sum_tf, max_partial) — a cell whose postings are all
-    deleted vanishes. Blocks partition the doc space, so each worker
-    sees exactly the tombstones that can touch its cells and the purge
-    is embarrassingly parallel across blocks."""
-    import pandas as pd
-
-    from search_engine_spark.functions import codec
-
-    if len(cells) == 0:
-        return cells
-    if len(tomb) == 0:
-        return cells
-    deleted = np.sort(tomb["doc_id"].to_numpy())
-    out: dict[str, list] = {name: [] for name in cells.columns}
-    for _, row in cells.iterrows():
-        d, t = codec.decode_postings(bytes(row["postings_bin"]))
-        keep = ~np.isin(d, deleted)
-        if not keep.any():
-            continue
-        if keep.all():
-            for name in cells.columns:
-                out[name].append(row[name])
-            continue
-        flat = codec.decode_positions_flat(bytes(row["positions_bin"]), t)
-        flat2 = flat[np.repeat(keep, t)]
-        d2, t2 = d[keep], t[keep]
-        w2 = np.frombuffer(bytes(row["weights_bin"]), dtype="<f8")[keep]
-        dl2 = codec.vb_decode(bytes(row["doclens_bin"]))[keep]
-        vals = {
-            "term": row["term"],
-            "block_id": row["block_id"],
-            "df_block": int(d2.size),
-            "first_doc_id": int(d2[0]),
-            "last_doc_id": int(d2[-1]),
-            "max_tf": int(t2.max()),
-            "min_dl": int(dl2.min()),
-            "sum_tf": int(t2.sum()),
-            "max_partial": float(np.max((1.0 + np.log(t2)) / w2)),
-            "postings_bin": codec.encode_postings(d2, t2),
-            "weights_bin": np.ascontiguousarray(w2, dtype="<f8").tobytes(),
-            "positions_bin": codec.encode_positions(t2, flat2),
-            "doclens_bin": codec.vb_encode(dl2),
-            "bucket": row["bucket"],
-        }
-        for name in cells.columns:
-            out[name].append(vals[name])
-    return pd.DataFrame(out, columns=list(cells.columns))
+    kept = np.unique(code)
+    merged = merged.append_column(
+        "bucket", tbl.column("bucket").take(pa.array(starts[kept]))
+    ).cast(tbl.schema)
+    out = pa.concat_tables([tbl.filter(pa.array(~redo)), merged])
+    order = np.argsort(np.concatenate([key[~redo], kept]), kind="stable")
+    yield from out.take(pa.array(order)).to_batches(max_chunksize=4096)
 
 
 class IndexBuilder:
@@ -494,7 +399,6 @@ class IndexBuilder:
         transcripts: DataFrame,
         chunk_docs: int | None = None,
         resume: bool = False,
-        assign_ids: bool = True,
         ingest: dict | None = None,
     ) -> dict:
         """Full (optionally chunked + resumable) index build.
@@ -521,19 +425,16 @@ class IndexBuilder:
 
         num_docs = None
         if not resume or not fsio.exists(self.spark, self._t("docs", "_SUCCESS")):
-            if assign_ids:
-                # the offset pass counts every partition anyway, so the
-                # corpus size is free — no extra count() scan
-                docs, num_docs, parted = with_doc_ids_counted(transcripts)
-            else:
-                docs, parted = transcripts, None
+            # the offset pass counts every partition anyway, so the
+            # corpus size is free — no extra count() scan
+            docs, num_docs, parted = with_doc_ids_counted(transcripts)
             docs.write.mode("overwrite").parquet(self._t("docs"))
             self._ensure_readable(self._t("docs"), docs.schema)
             if parted is not None:
                 parted.unpersist()
         old_split = self._set_docs_split_conf()
+        docs = self.spark.read.parquet(self._t("docs"))
         try:
-            docs = self.spark.read.parquet(self._t("docs"))
             if num_docs is None:
                 num_docs = docs.count()
             phases["doc_ids"] = time.time() - t0
@@ -569,9 +470,9 @@ class IndexBuilder:
             t_fin = time.time()
             self._finalize(num_docs, n_chunks=n_chunks, ingest=ingest)
             phases["finalize"] = time.time() - t_fin
-            if n_chunks > 1:
-                docs.unpersist()
         finally:
+            if docs.is_cached:
+                docs.unpersist()
             self._restore_split_conf(old_split)
         wall = time.time() - t0
         totals = {
@@ -756,7 +657,7 @@ class IndexBuilder:
         What it does (doc ids are PRESERVED — postings bytes are
         rewritten into fewer, term-sorted files but never re-keyed):
 
-        * docs: orphan rows vacuumed (semi-join against doc_stats),
+        * docs: orphan rows vacuumed (joined against doc_stats),
           rewritten range-partitioned by doc_id;
         * postings: all chunks merged into one ``chunk=0`` generation
           via the same bucket-major fused shuffle as the build;
@@ -766,9 +667,11 @@ class IndexBuilder:
 
         When the index carries tombstones (:meth:`delete`), compaction
         additionally PURGES them — Lucene's merge-time reclaim: deleted
-        rows drop out of docs/doc_stats, affected posting cells are
-        decoded/filtered/re-encoded per block (untouched blocks pass
-        through byte-identical), a fresh terms snapshot recomputes df/cf
+        rows drop out of docs/doc_stats, posting cells whose doc range
+        holds a deleted id are decoded/filtered/re-encoded by the merge
+        worker (every other cell passes through byte-identical; the
+        sorted tombstone ids ship to it, O(deletes) — the same set every
+        masked query broadcasts), a fresh terms snapshot recomputes df/cf
         from the surviving postings, and num_docs/total_tokens shrink to
         the live corpus — so the stats-staleness window of logical
         deletes closes here. ``next_doc_id`` is NOT reduced: doc ids
@@ -825,66 +728,38 @@ class IndexBuilder:
         total_tokens = int(obs.get["tokens"])
 
         # docs: vacuum orphans AND tombstoned rows (the purged
-        # doc_stats is the live-id set), preserve ids, range-layout
+        # doc_stats is the live-id set), preserve ids, range-layout.
+        # Dead rows are dropped only after the observe, so the write
+        # itself counts them (no read-back scan); an observe below the
+        # range exchange would also count its sampling pass
         docs = spark.read.parquet(self._t("docs"))
         live_ids = spark.read.parquet(
             self._p(new["doc_stats"], "chunk=0")
-        ).select("doc_id")
-        live = docs.join(live_ids, "doc_id", "left_semi")
-        n_docs_before = docs.count()
+        ).select("doc_id", F.lit(True).alias("live"))
+        docs_obs = Observation()
         (
-            live.repartitionByRange(self.write_partitions, "doc_id")
+            docs.join(live_ids, "doc_id", "left")
+            .repartitionByRange(self.write_partitions, "doc_id")
             .sortWithinPartitions("doc_id")
+            .observe(docs_obs, F.count_if(F.col("live").isNull()).alias("dead"))
+            .where("live")
+            .select(*docs.columns)
             .write.mode("overwrite")
             .parquet(self._p(new["docs"]))
         )
         self._ensure_readable(self._p(new["docs"]), docs.schema)
 
-        # postings -> one chunk, same fused bucket-major exchange as the
-        # build; keys are unique across chunks so the merge worker just
-        # sorts and passes rows through into few term-sorted files
-        sub_slots = max(1, (4 * self.write_partitions) // self.term_buckets)
+        # postings -> one chunk through the build's writer; keys are
+        # unique across chunks, so only purged cells are re-encoded
         postings = spark.read.parquet(self._t("postings")).drop("chunk")
         posting_files_before = len(postings.inputFiles())
-        # pin the column order BEFORE any join: joining on "block_id"
-        # promotes the key to the front, and the merge worker's
-        # pass-through batches must match the declared Arrow schema
-        field_order = [f.name for f in postings.schema.fields]
+        deleted = _NO_DELETES
         if tomb is not None:
-            # purge tombstoned postings: only blocks that actually
-            # contain a deleted doc are decoded/re-encoded (cogrouped
-            # with their block's tombstones); every other block passes
-            # through byte-identical. The tombstone block list is tiny
-            # relative to the index, so the semi/anti split broadcasts.
-            tomb_blocks = tomb.select("block_id").distinct()
-            affected = postings.join(
-                F.broadcast(tomb_blocks), "block_id", "left_semi"
+            deleted = np.sort(
+                tomb.select("doc_id").toPandas()["doc_id"].to_numpy(np.int64)
             )
-            untouched = postings.join(
-                F.broadcast(tomb_blocks), "block_id", "left_anti"
-            )
-            purged = (
-                affected.groupBy("block_id")
-                .cogroup(tomb.groupBy("block_id"))
-                .applyInPandas(_purge_block_cells, POSTINGS_BUCKETED_SCHEMA)
-            )
-            postings = untouched.unionByName(purged)
-        (
-            postings.withColumn(
-                "pid",
-                F.col("bucket") * sub_slots
-                + F.pmod(F.xxhash64("term", "block_id"), F.lit(sub_slots)),
-            )
-            .repartition(self.write_partitions, "pid")
-            .drop("pid")
-            .select(*field_order)
-            .mapInArrow(_merge_sorted_partition, POSTINGS_BUCKETED_SCHEMA)
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self._p(new["postings"], "chunk=0"))
-        )
-        self._ensure_readable(
-            self._p(new["postings"], "chunk=0", "bucket=0"), POSTINGS_SCHEMA
+        self._write_postings(
+            postings, self._p(new["postings"], "chunk=0"), deleted
         )
 
         # vocab_chunks -> one deduplicated chunk; kgrams/vocab dedup
@@ -963,7 +838,7 @@ class IndexBuilder:
                 fsio.delete(self.spark, self._p(name))
         return {
             "generation": gen,
-            "vacuumed_docs": n_docs_before - num_docs,
+            "vacuumed_docs": int(docs_obs.get["dead"]),
             "purged_docs": (meta["num_docs"] - num_docs) if tomb is not None else 0,
             "num_docs": num_docs,
             "posting_files_before": posting_files_before,
@@ -1027,16 +902,18 @@ class IndexBuilder:
             "doc_id",
             F.expr(f"CAST(doc_id DIV {block_span} AS LONG)").alias("block_id"),
         )
+        obs = Observation()
         (
             tomb.repartitionByRange(
                 max(1, min(self.write_partitions, 8)), "doc_id"
             )
             .sortWithinPartitions("doc_id")
+            .observe(obs, F.count(F.lit(1)).alias("n"))
             .write.mode("overwrite")
             .parquet(self._p(name))
         )
         self._ensure_readable(self._p(name), "doc_id long, block_id long")
-        n = spark.read.parquet(self._p(name)).count()
+        n = obs.get["n"]
         new_meta = dict(meta)
         new_meta.update(
             {"tombstones_table": name, "num_deleted": int(n), "deletes": gen}
@@ -1063,91 +940,52 @@ class IndexBuilder:
             "a.weight", "a.doc_len",
         )
         analyzed.persist(StorageLevel.MEMORY_AND_DISK)
-
-        t1 = time.time()
-        stats = analyzed.select(
-            "doc_id",
-            "weight",
-            F.col("doc_len").cast("long").alias("doc_len"),
-            F.size("terms").cast("long").alias("n_terms"),
-        )
-        stats.write.mode("overwrite").parquet(self._t("doc_stats", f"chunk={chunk}"))
-        self._ensure_readable(
-            self._t("doc_stats", f"chunk={chunk}"),
-            "doc_id long, weight double, doc_len long, n_terms long",
-        )
-        t2 = time.time()
-
-        # unstemmed vocabulary for the k-gram index (reference adds the
-        # specials-stripped word BEFORE stemming, memoryindex.py:32-33).
-        # Runs right after the analyzer pass populates the cache — the
-        # words column batches are still hot (JVM block LRU + OS page
-        # cache) — rather than after the postings job has streamed the
-        # whole cache through the shuffle.
-        vocab = analyzed.select(F.explode("words").alias("word")).distinct()
-        vocab.write.mode("overwrite").parquet(self._t("vocab_chunks", f"chunk={chunk}"))
-        self._ensure_readable(
-            self._t("vocab_chunks", f"chunk={chunk}"), "word string"
-        )
-        t3 = time.time()
-
-        # transpose doc-major -> term-major, SPIMI style: each doc-range
-        # partition flushes its own encoded (term, block) segments
-        # map-side, so the one wide exchange moves compressed posting
-        # bytes, not row-per-posting records. The exchange key is a
-        # STATIC bucket-major partition id: bucket picks a band of
-        # ~4*P/N sub-slots and hash(term, block_id) picks the slot, so
-        # equal keys co-locate (the segment merge), a hot term's bytes
-        # spread over its blocks' slots, each reduce task holds a
-        # handful of buckets (the partitionBy("bucket") write stays a
-        # few term-sorted files per task), and — because bucket is
-        # already a uniform hash of the term — no range-sampling pass
-        # is needed: the whole encode+shuffle+merge+write is ONE fused
-        # job, nothing scanned twice.
-        sub_slots = max(1, (4 * self.write_partitions) // self.term_buckets)
-        partials = (
-            analyzed.select(
-                "doc_id", "terms", "tfs", "positions", "weight", "doc_len"
+        try:
+            t1 = time.time()
+            stats = analyzed.select(
+                "doc_id",
+                "weight",
+                F.col("doc_len").cast("long").alias("doc_len"),
+                F.size("terms").cast("long").alias("n_terms"),
             )
-            .mapInArrow(_partial_block_encoder(self.block_span), POSTINGS_SCHEMA)
-            .withColumn("bucket", term_bucket_col(F.col("term"), self.term_buckets))
-            .withColumn(
-                "pid",
-                F.col("bucket") * sub_slots
-                + F.pmod(F.xxhash64("term", "block_id"), F.lit(sub_slots)),
+            stats_dir = self._t("doc_stats", f"chunk={chunk}")
+            stats.write.mode("overwrite").parquet(stats_dir)
+            self._ensure_readable(
+                stats_dir, "doc_id long, weight double, doc_len long, n_terms long"
             )
-        )
-        # per-chunk row/byte metrics ride the write job itself
-        # (Observation aggregates accumulate during the action) — the
-        # alternative, re-scanning the just-written postings, reads the
-        # whole chunk's binary columns back a second time; at 10^12-turn
-        # scale that is a petabyte-class re-read for three numbers
-        obs = Observation(f"postings_metrics_{chunk}")
-        (
-            partials.repartition(self.write_partitions, "pid")
-            .drop("pid")
-            .mapInArrow(_merge_sorted_partition, POSTINGS_BUCKETED_SCHEMA)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.coalesce(
-                    F.sum(F.length("postings_bin") + F.length("positions_bin")),
-                    F.lit(0),
-                ).alias("bytes"),
-                F.coalesce(F.sum("df_block"), F.lit(0)).alias("tf_rows"),
+            t2 = time.time()
+
+            # unstemmed vocabulary for the k-gram index (reference adds
+            # the specials-stripped word BEFORE stemming,
+            # memoryindex.py:32-33). Runs right after the analyzer pass
+            # populates the cache — the words column batches are still
+            # hot (JVM block LRU + OS page cache) — rather than after the
+            # postings job has streamed the whole cache through the
+            # shuffle.
+            vocab = analyzed.select(F.explode("words").alias("word")).distinct()
+            vocab_dir = self._t("vocab_chunks", f"chunk={chunk}")
+            vocab.write.mode("overwrite").parquet(vocab_dir)
+            self._ensure_readable(vocab_dir, "word string")
+            t3 = time.time()
+
+            # transpose doc-major -> term-major, SPIMI style: each
+            # doc-range partition flushes its own encoded (term, block)
+            # segments map-side, so the one wide exchange moves
+            # compressed posting bytes, not row-per-posting records
+            encode = functools.partial(_encode_partial_blocks, block_span=self.block_span)
+            partials = (
+                analyzed.select(
+                    "doc_id", "terms", "tfs", "positions", "weight", "doc_len"
+                )
+                .mapInArrow(encode, POSTINGS_SCHEMA)
+                .withColumn("bucket", term_bucket_col(F.col("term"), self.term_buckets))
             )
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self._t("postings", f"chunk={chunk}"))
-        )
-        # filler goes under a bucket= dir so partition discovery keeps a
-        # consistent directory depth next to non-empty chunks
-        self._ensure_readable(
-            self._t("postings", f"chunk={chunk}", "bucket=0"), POSTINGS_SCHEMA
-        )
-        agg = obs.get
-        t4 = time.time()
-        analyzed.unpersist()
+            agg = self._write_postings(
+                partials, self._t("postings", f"chunk={chunk}"), _NO_DELETES
+            )
+            t4 = time.time()
+        finally:
+            analyzed.unpersist()
 
         return {
             "chunk": chunk,
@@ -1161,6 +999,57 @@ class IndexBuilder:
                 "postings": round(t4 - t3, 2),
             },
         }
+
+    def _write_postings(self, cells: DataFrame, path: str, deleted) -> dict:
+        """The one postings writer of build, append and compaction:
+        ``cells`` (``POSTINGS_BUCKETED_SCHEMA`` segments) go through one
+        exchange to :func:`_merge_cells`, which merges each (term,
+        block_id) key's segments and drops the ``deleted`` doc ids, and
+        are written ``partitionBy("bucket")`` under ``path``.
+
+        The exchange key is a STATIC bucket-major partition id: bucket
+        picks a band of ~4*P/N sub-slots and hash(term, block_id) picks
+        the slot, so equal keys co-locate, a hot term's bytes spread
+        over its blocks' slots, each reduce task holds a handful of
+        buckets (the write stays a few term-sorted files per task), and
+        — because bucket is already a uniform hash of the term — no
+        range-sampling pass is needed: the whole
+        encode+shuffle+merge+write is ONE fused job.
+
+        Returns the write's row/byte metrics, observed on the write job
+        itself — re-scanning the just-written postings would read the
+        binary columns back a second time for three numbers."""
+        sub_slots = max(1, (4 * self.write_partitions) // self.term_buckets)
+        obs = Observation()
+        (
+            cells.withColumn(
+                "pid",
+                F.col("bucket") * sub_slots
+                + F.pmod(F.xxhash64("term", "block_id"), F.lit(sub_slots)),
+            )
+            .repartition(self.write_partitions, "pid")
+            .drop("pid")
+            .mapInArrow(
+                functools.partial(_merge_cells, deleted=deleted),
+                POSTINGS_BUCKETED_SCHEMA,
+            )
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.coalesce(
+                    F.sum(F.length("postings_bin") + F.length("positions_bin")),
+                    F.lit(0),
+                ).alias("bytes"),
+                F.coalesce(F.sum("df_block"), F.lit(0)).alias("tf_rows"),
+            )
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(path)
+        )
+        # filler goes under a bucket= dir so partition discovery keeps a
+        # consistent directory depth next to non-empty chunks
+        self._ensure_readable(fsio.join(path, "bucket=0"), POSTINGS_SCHEMA)
+        return obs.get
 
     def _term_parts(self, num_docs: int) -> int:
         # hash-partitioned + term-sorted: lookups go through an

@@ -130,7 +130,7 @@ def _synonym_partials(cells: pd.DataFrame):
 def _tfidf_bound(cells: pd.DataFrame) -> np.ndarray:
     """Block-max bound on each cell's tf-idf partials, ``wqt·max_partial``:
     ``max_partial`` is the cell's largest (1+ln tf)/L_d
-    (``build.py::_partial_block_encoder``)."""
+    (``build.py::_encode_cells``)."""
     return cells["wqt"].to_numpy() * cells["max_partial"].to_numpy()
 
 
@@ -868,7 +868,7 @@ class TranscriptSearchEngine:
 
         Postings are stored per (term, doc-range block) with
         ``max_partial`` = max over the block of (1+ln tf)/L_d
-        (``build.py::_partial_block_encoder``). Since a doc's terms all
+        (``build.py::_encode_cells``). Since a doc's terms all
         live in the doc's own block range, the per-block score upper
         bound is
 

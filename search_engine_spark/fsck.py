@@ -18,10 +18,11 @@ counters:
   columns (``df_block``/``first_doc_id``/``last_doc_id``/``max_tf``/
   ``min_dl``/``sum_tf``) match the decoded truth; per-doc positions are
   non-decreasing; and ``max_partial`` equals the recomputed block-max
-  WAND bound ``max((1+ln tf)/L_d)`` EXACTLY (all three writers —
-  ``build.py`` encode, ``_merge_segments``, ``_purge_block_cells`` —
-  use the identical numpy expression, so any drift is corruption; an
+  WAND bound ``max((1+ln tf)/L_d)`` EXACTLY (every cell — built,
+  merged or purged — is written by ``build.py::_encode_cells`` with the
+  identical numpy expression, so any drift is corruption; an
   understated bound would make the pruned path silently LOSE results).
+  The recomputation here stays independent of that writer.
 * **dictionary-level** (slim metadata aggregation — Parquet never reads
   the binary columns for this branch): per-term ``sum(df_block)`` ==
   ``terms.df`` and ``sum(sum_tf)`` == ``terms.cf``, with terms missing

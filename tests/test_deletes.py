@@ -235,13 +235,53 @@ def test_compact_purges_physically(spark, tmp_path):
     assert [(doc, round(s, 9)) for doc, s in got] == want
 
 
-def test_purge_block_cells_roundtrip():
-    """Unit check: purging a cell equals encoding the filtered postings
-    from scratch (bytes, metadata and positions all identical)."""
-    import pandas as pd
-
-    from search_engine_spark.build import _purge_block_cells
+def _cell(term, block_id, doc, tf, flat, w, dl, bucket):
+    """One postings row encoded from scratch (the reference the write
+    path must reproduce byte for byte)."""
     from search_engine_spark.functions import codec
+
+    return {
+        "term": term,
+        "block_id": block_id,
+        "df_block": int(doc.size),
+        "first_doc_id": int(doc[0]),
+        "last_doc_id": int(doc[-1]),
+        "max_tf": int(tf.max()),
+        "min_dl": int(dl.min()),
+        "sum_tf": int(tf.sum()),
+        "max_partial": float(np.max((1.0 + np.log(tf)) / w)),
+        "postings_bin": codec.encode_postings(doc, tf),
+        "weights_bin": np.ascontiguousarray(w, dtype="<f8").tobytes(),
+        "positions_bin": codec.encode_positions(tf, flat),
+        "doclens_bin": codec.vb_encode(dl),
+        "bucket": bucket,
+    }
+
+
+def test_merge_cells_roundtrip():
+    """Unit check of the merge worker: purging a cell and merging a
+    key's segments equal encoding the resulting postings from scratch
+    (bytes, metadata and positions all identical)."""
+    import pyarrow as pa
+
+    from search_engine_spark.build import _merge_cells
+
+    schema = pa.schema(
+        [
+            ("term", pa.string()), ("block_id", pa.int64()),
+            ("df_block", pa.int32()), ("first_doc_id", pa.int64()),
+            ("last_doc_id", pa.int64()), ("max_tf", pa.int32()),
+            ("min_dl", pa.int32()), ("sum_tf", pa.int64()),
+            ("max_partial", pa.float64()), ("postings_bin", pa.binary()),
+            ("weights_bin", pa.binary()), ("positions_bin", pa.binary()),
+            ("doclens_bin", pa.binary()), ("bucket", pa.int32()),
+        ]
+    )
+
+    def merge(rows, deleted):
+        batches = pa.Table.from_pylist(rows, schema).to_batches()
+        out = _merge_cells(iter(batches), np.asarray(deleted, dtype=np.int64))
+        return pa.Table.from_batches(list(out), schema).to_pylist()
 
     rng = np.random.RandomState(7)
     d = np.sort(rng.choice(np.arange(1000, 1100), size=20, replace=False)).astype(np.int64)
@@ -249,42 +289,74 @@ def test_purge_block_cells_roundtrip():
     flat = np.sort(rng.randint(0, 500, size=int(t.sum()))).astype(np.int64)
     w = rng.rand(20) + 0.5
     dl = rng.randint(5, 50, size=20).astype(np.int64)
+    whole = _cell("x", 0, d, t, flat, w, dl, 3)
 
-    def cell(doc, tf, fl, ww, dd):
-        return {
-            "term": "x",
-            "block_id": 0,
-            "df_block": int(doc.size),
-            "first_doc_id": int(doc[0]),
-            "last_doc_id": int(doc[-1]),
-            "max_tf": int(tf.max()),
-            "min_dl": int(dd.min()),
-            "sum_tf": int(tf.sum()),
-            "max_partial": float(np.max((1.0 + np.log(tf)) / ww)),
-            "postings_bin": codec.encode_postings(doc, tf),
-            "weights_bin": np.ascontiguousarray(ww, dtype="<f8").tobytes(),
-            "positions_bin": codec.encode_positions(tf, fl),
-            "doclens_bin": codec.vb_encode(dd),
-            "bucket": 3,
-        }
-
-    cells = pd.DataFrame([cell(d, t, flat, w, dl)])
     deleted = d[::3]
-    tomb = pd.DataFrame({"doc_id": deleted, "block_id": np.zeros(deleted.size, dtype=np.int64)})
-    out = _purge_block_cells(cells, tomb)
     keep = ~np.isin(d, deleted)
     flat_keep = flat[np.repeat(keep, t)]
-    expect = pd.DataFrame(
-        [cell(d[keep], t[keep], flat_keep, w[keep], dl[keep])]
-    )
-    for col in expect.columns:
-        assert out[col].iloc[0] == expect[col].iloc[0], col
+    expect = _cell("x", 0, d[keep], t[keep], flat_keep, w[keep], dl[keep], 3)
+    assert merge([whole], deleted) == [expect]
     # deleting every doc of the cell removes the row entirely
-    all_tomb = pd.DataFrame({"doc_id": d, "block_id": np.zeros(d.size, dtype=np.int64)})
-    assert len(_purge_block_cells(cells, all_tomb)) == 0
-    # empty tombstone side passes the cells through untouched
-    none = pd.DataFrame({"doc_id": np.empty(0, dtype=np.int64), "block_id": np.empty(0, dtype=np.int64)})
-    assert _purge_block_cells(cells, none) is cells
+    assert merge([whole], d) == []
+    # no deleted id inside [first_doc_id, last_doc_id]: the row passes
+    # through byte-identical
+    assert merge([whole], []) == [whole]
+    assert merge([whole], [0, 999, 1100, 5000]) == [whole]
+
+    # one key split into three segments (postings dealt round-robin),
+    # given out of doc order beside a single-segment key of a lower
+    # bucket: the segments merge into the whole cell, rows come back in
+    # (bucket, term, block_id) order
+    per_doc = np.split(flat, np.cumsum(t)[:-1])
+    segs = []
+    for i in (2, 0, 1):
+        s = np.arange(i, d.size, 3)
+        segs.append(
+            _cell("x", 0, d[s], t[s], np.concatenate([per_doc[j] for j in s]), w[s], dl[s], 3)
+        )
+    other = _cell("y", 7, d[:4], t[:4], flat[: int(t[:4].sum())], w[:4], dl[:4], 1)
+    assert merge(segs + [other], []) == [other, whole]
+
+
+def test_compact_purge_bytes(spark, tmp_path):
+    """After delete + compact, every postings row equals a from-scratch
+    encoding of its pre-compaction row minus the deleted postings, and
+    cells whose postings were all deleted are gone."""
+    from search_engine_spark.build import IndexBuilder
+    from search_engine_spark.functions import codec
+
+    def rows(builder):
+        df = spark.read.parquet(builder._t("postings")).drop("chunk")
+        return {(r["term"], r["block_id"]): r.asDict() for r in df.collect()}
+
+    builder = IndexBuilder(spark, str(tmp_path / "idx"), block_span=16)
+    builder.build(synthetic_transcripts(spark, n_convs=62, turns_per_conv=10))
+    before = rows(builder)
+    deleted = np.array(sorted(set(range(5 * 16, 6 * 16)) | set(range(0, 620, 7))))
+    builder.delete(deleted.tolist())
+    builder.compact()
+
+    expect = {}
+    for key, r in before.items():
+        d, t = codec.decode_postings(bytes(r["postings_bin"]))
+        keep = ~np.isin(d, deleted)
+        if not keep.any():
+            continue
+        flat = codec.decode_positions_flat(bytes(r["positions_bin"]), t)
+        w = np.frombuffer(bytes(r["weights_bin"]), dtype="<f8")
+        dl = codec.vb_decode(bytes(r["doclens_bin"]))
+        expect[key] = _cell(
+            r["term"], r["block_id"], d[keep], t[keep],
+            flat[np.repeat(keep, t)], w[keep], dl[keep], r["bucket"],
+        )
+    after = rows(builder)
+    assert any(key[1] == 5 for key in before)
+    assert not any(key[1] == 5 for key in after)
+    assert len(expect) < len(before)
+    assert after.keys() == expect.keys()
+    for key, want in expect.items():
+        got = after[key]
+        assert {c: got[c] for c in want} == want, key
 
 
 def test_ranked_conversations_rollup(deleted_engine):

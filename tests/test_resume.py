@@ -4,6 +4,8 @@ import json
 import os
 import shutil
 
+import pytest
+
 from search_engine_spark.build import IndexBuilder
 from search_engine_spark.engine import TranscriptSearchEngine
 from search_engine_spark.fixtures import synthetic_transcripts
@@ -151,6 +153,25 @@ def test_incremental_append(spark, tmp_path):
     info2 = eng.append(synthetic_transcripts(spark, n_convs=2, turns_per_conv=3))
     assert info2["first_doc_id"] == 80  # ceil(78/16)*16
     assert eng.num_docs == 76
+
+
+def test_failed_append_releases_caches(spark, tmp_path, monkeypatch):
+    """An append whose postings merge raises still unpersists the
+    chunk's analyzed cache: Spark's cache manager is left as found."""
+    from search_engine_spark import build
+
+    builder = IndexBuilder(spark, str(tmp_path / "idx"), block_span=16)
+    builder.build(synthetic_transcripts(spark, n_convs=2, turns_per_conv=4))
+
+    def failing_merge(batches, deleted):
+        raise RuntimeError("merge failed")
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    entries = cache.numCachedEntries()
+    monkeypatch.setattr(build, "_merge_cells", failing_merge)
+    with pytest.raises(Exception, match="merge failed"):
+        builder.append(synthetic_transcripts(spark, n_convs=1, turns_per_conv=4))
+    assert cache.numCachedEntries() == entries
 
 
 def test_empty_and_single_doc_corpus(spark, tmp_path):
