@@ -16,18 +16,32 @@ DataFrame plan ending in ``TakeOrderedAndProject`` (distributed heap
 top-k), boolean set algebra is join/union over per-conjunct doc sets.
 
 Every posting-cell worker — ranked scoring, doc sets, positional
-matches, the analytics aggregates — runs through one block-sorted
-``mapInPandas`` (:func:`_block_batches`) that hands it whole blocks one
-Arrow batch at a time, so a query pays one Python call per batch, not
-one per block; block-max WAND pruning (``pruned=True``) happens inside
-the ranked worker of that same job. Driver-built query dimensions are
-Arrow-backed ``LocalRelation`` s (:meth:`TranscriptSearchEngine._local_df`), which
-broadcast without a job of their own.
+matches, the analytics aggregates — runs through one block runner
+(:func:`_block_batches`) that hands it whole blocks, so a query pays one
+Python call per Arrow batch, not one per block; block-max WAND pruning
+(``pruned=True``) happens inside the ranked worker. The runner has two
+placements, chosen by the size of its input, which it reads once capped
+at one Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``
+rows, plus one):
+
+* driver — the input fits in one batch (rows and
+  ``maxBytesPerBatch`` bytes): the worker runs in the driver process
+  over the block-sorted rows, and its output is a one-partition Arrow
+  ``LocalRelation``. No exchange, no sort and no Python task runs; the
+  driver holds no more than one worker call holds on the cluster.
+* cluster — anything larger: one block-sorted ``mapInPandas`` that
+  hands the worker whole blocks one Arrow batch at a time.
+
+Two consequences: a ``*_df`` method runs the capped read (a Spark job)
+when it is called, not when its frame is collected; and an input over
+the cap pays that capped read before the cluster plan runs.
+Driver-built query dimensions are Arrow-backed ``LocalRelation`` s
+(:meth:`TranscriptSearchEngine._local_df`); broadcasting one still runs
+one small collect job.
 """
 
 from __future__ import annotations
 
-import heapq
 import re
 import shlex
 from contextlib import contextmanager
@@ -40,6 +54,7 @@ import pyarrow as pa
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegralType, StructType
 from pyspark.storagelevel import StorageLevel
@@ -60,6 +75,13 @@ RANKED_SCHEMA = "doc_id long, score double"
 _EMPTY = np.empty(0, dtype=np.int64)
 
 
+def _columns(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
+    """The columns of ``pdf`` as numpy arrays, by name: the ranked
+    worker slices a block's rows out of these by position, which costs
+    far less than slicing the frame."""
+    return {c: pdf[c].to_numpy() for c in pdf.columns}
+
+
 def block_id_col(block_span: int) -> Column:
     """``block_id`` of a ``doc_id`` column: exact integer
     ``CAST(doc_id DIV block_span AS LONG)`` — a double division would
@@ -67,16 +89,14 @@ def block_id_col(block_span: int) -> Column:
     return F.expr(f"CAST(doc_id DIV {int(block_span)} AS LONG)").alias("block_id")
 
 
-def _tfidf_partials(cells: pd.DataFrame):
+def _tfidf_partials(cells: dict):
     """tf-idf per posting, ``wqt·(1+ln tf)``, normalized by the doc's
     L_d (``weights_bin`` — it rides inside the block, so scoring needs
     no doc_stats join). Yields cells in query-term order (qidx), the
     float-addition order of the reference's term-at-a-time loop
     (``query.py:78-83``)."""
-    wqt, blobs, weights = (
-        cells[c].to_numpy() for c in ("wqt", "postings_bin", "weights_bin")
-    )
-    for i in np.argsort(cells["qidx"].to_numpy(), kind="stable"):
+    wqt, blobs, weights = (cells[c] for c in ("wqt", "postings_bin", "weights_bin"))
+    for i in np.argsort(cells["qidx"], kind="stable"):
         d, t = codec.decode_postings(bytes(blobs[i]))
         w = np.frombuffer(bytes(weights[i]), dtype="<f8")
         yield d, wqt[i] * (1.0 + np.log(t)), w
@@ -87,11 +107,9 @@ def _bm25_partials(k1: float, b: float, avgdl: float):
     with wqt = idf and no norm; doc lengths ride inside the block
     (``doclens_bin``). Yields cells in qidx order."""
 
-    def partials(cells: pd.DataFrame):
-        wqt, blobs, lens = (
-            cells[c].to_numpy() for c in ("wqt", "postings_bin", "doclens_bin")
-        )
-        for i in np.argsort(cells["qidx"].to_numpy(), kind="stable"):
+    def partials(cells: dict):
+        wqt, blobs, lens = (cells[c] for c in ("wqt", "postings_bin", "doclens_bin"))
+        for i in np.argsort(cells["qidx"], kind="stable"):
             d, t = codec.decode_postings(bytes(blobs[i]))
             dl = codec.vb_decode(bytes(lens[i])).astype(np.float64)
             denom = t + k1 * (1.0 - b + b * dl / avgdl)
@@ -100,7 +118,7 @@ def _bm25_partials(k1: float, b: float, avgdl: float):
     return partials
 
 
-def _synonym_partials(cells: pd.DataFrame):
+def _synonym_partials(cells: dict):
     """Synonym-group partials (Lucene ``SynonymQuery``): each group of
     stems — ``qidx`` holds the group id — scores as ONE pseudo-term,
     ``gtf = sum`` of member tfs per doc, weighted by the group's
@@ -127,11 +145,11 @@ def _synonym_partials(cells: pd.DataFrame):
         yield uq, wqt_by_gid[gid] * (1.0 + np.log(gtf)), ld
 
 
-def _tfidf_bound(cells: pd.DataFrame) -> np.ndarray:
+def _tfidf_bound(cells: dict) -> np.ndarray:
     """Block-max bound on each cell's tf-idf partials, ``wqt·max_partial``:
     ``max_partial`` is the cell's largest (1+ln tf)/L_d
     (``build.py::_encode_cells``)."""
-    return cells["wqt"].to_numpy() * cells["max_partial"].to_numpy()
+    return cells["wqt"] * cells["max_partial"]
 
 
 def _bm25_bound(k1: float, b: float, avgdl: float):
@@ -140,11 +158,11 @@ def _bm25_bound(k1: float, b: float, avgdl: float):
     is increasing in tf and decreasing in dl, so the cell's largest tf
     and smallest doc length bound every posting in it."""
 
-    def bound(cells: pd.DataFrame) -> np.ndarray:
-        mt = cells["max_tf"].to_numpy(np.float64)
-        dl = cells["min_dl"].to_numpy(np.float64)
+    def bound(cells: dict) -> np.ndarray:
+        mt = cells["max_tf"].astype(np.float64)
+        dl = cells["min_dl"].astype(np.float64)
         denom = mt + k1 * (1.0 - b + b * dl / avgdl)
-        return cells["wqt"].to_numpy() * (mt * (k1 + 1.0)) / denom
+        return cells["wqt"] * (mt * (k1 + 1.0)) / denom
 
     return bound
 
@@ -219,19 +237,20 @@ def _block_worker(partials, k, allow=None, per_group=None, prune=None):
     accumulator ``counts``; the thresholds live in the closure
     :func:`_block_batches` makes per partition, never longer."""
 
-    def score(cells: pd.DataFrame, side: pd.DataFrame | None) -> tuple:
+    def score(cells: dict, side: dict | None) -> tuple:
         """(doc ids, scores, group keys or None) of the docs of
         ``cells``, in (score desc, doc_id asc) order, cut to k unless
-        groups are capped."""
+        groups are capped. ``cells`` and ``side`` map column names to
+        numpy arrays (:func:`_columns`)."""
         docs, vals, norms, groups = _EMPTY, np.empty(0), None, None
-        dead = None if side is None else np.isnan(side["boost"].to_numpy())
-        if len(cells) and not (allow and side.empty):
+        dead = None if side is None else np.isnan(side["boost"])
+        if cells["qidx"].size and not (allow and not side["doc_id"].size):
             parts = list(partials(cells))
             docs, vals = (np.concatenate([p[j] for p in parts]) for j in (0, 1))
             if parts[0][2] is not None:
                 norms = np.concatenate([p[2] for p in parts])
-            if side is not None and len(side):
-                sdocs = side["doc_id"].to_numpy()
+            if side is not None and side["doc_id"].size:
+                sdocs = side["doc_id"]
                 if allow:
                     keep = np.isin(docs, sdocs[~dead])
                 else:
@@ -246,7 +265,8 @@ def _block_worker(partials, k, allow=None, per_group=None, prune=None):
             ld[inv] = norms  # every occurrence carries the same L_d
             scores = scores / ld
         if per_group or (not allow and dead is not None and not dead.all()):
-            over = side[~dead].set_index("doc_id").reindex(uniq)
+            live = pd.DataFrame({c: v[~dead] for c, v in side.items()})
+            over = live.set_index("doc_id").reindex(uniq)
             scores = scores * over["boost"].fillna(1.0).to_numpy()
             groups = over["group_key"].to_numpy()
         idx = np.lexsort((uniq, -scores))  # score desc, doc_id asc
@@ -263,29 +283,31 @@ def _block_worker(partials, k, allow=None, per_group=None, prune=None):
             out = out.head(k)
         return out
 
-    def pruned(cells: pd.DataFrame, side: pd.DataFrame | None, top: list) -> pd.DataFrame:
-        """``score`` block by block in (ub desc, block_id) order; ``top``
-        is a min-heap of the partition's k best masked scores so far."""
+    def pruned(cells: dict, side: dict | None, tops: dict, q: int) -> pd.DataFrame:
+        """``score`` block by block in (ub desc, block_id) order, each
+        block's rows selected by position; ``tops[q]`` holds the
+        partition's k best masked scores so far, ascending."""
         bound, counts = prune
-        blocks = cells["block_id"].to_numpy()
+        top = tops.get(q, np.empty(0))
+        blocks = cells["block_id"]
         ids, first = np.unique(blocks, return_index=True)  # the call is block-sorted
         ends = np.r_[first[1:], blocks.size]
         ub = np.add.reduceat(bound(cells), first)
         if side is not None:
-            sblocks = side["block_id"].to_numpy()
-            lo, hi = np.searchsorted(sblocks, ids), np.searchsorted(sblocks, ids, "right")
+            lo = np.searchsorted(side["block_id"], ids)
+            hi = np.searchsorted(side["block_id"], ids, "right")
         docs, scores = [_EMPTY], [np.empty(0)]
         for j in np.lexsort((ids, -ub)):
-            if len(top) >= k and (not k or ub[j] < top[0] - abs(top[0]) * 1e-9):
+            if top.size >= k and (not k or ub[j] < top[0] - abs(top[0]) * 1e-9):
                 break
-            bside = None if side is None else side.iloc[lo[j] : hi[j]]
-            if allow and bside.empty:
+            bside = None if side is None else {c: v[lo[j] : hi[j]] for c, v in side.items()}
+            if allow and not bside["doc_id"].size:
                 continue
-            d, s, _groups = score(cells.iloc[first[j] : ends[j]], bside)
+            d, s, _groups = score({c: v[first[j] : ends[j]] for c, v in cells.items()}, bside)
             docs.append(d)
             scores.append(s)
-            for v in s:
-                (heapq.heappush if len(top) < k else heapq.heappushpop)(top, v)
+            top = np.sort(np.concatenate([top, s]))[-k:]
+        tops[q] = top
         d, s = np.concatenate(docs), np.concatenate(scores)
         idx = np.lexsort((d, -s))[:k]
         decoded = len(docs) - 1
@@ -293,20 +315,21 @@ def _block_worker(partials, k, allow=None, per_group=None, prune=None):
         return frame(d[idx], s[idx], None)
 
     def make():
-        tops: dict[int, list] = {}  # query_id -> running top-k heap
+        tops: dict[int, np.ndarray] = {}  # query_id -> running top-k scores
 
-        def call(cells: pd.DataFrame, side: pd.DataFrame | None, q: int) -> pd.DataFrame:
+        def call(cells: pd.DataFrame, side: dict | None, q: int) -> pd.DataFrame:
             if prune is None:
-                return frame(*score(cells, side))
-            return pruned(cells, side, tops.setdefault(q, []))
+                return frame(*score(_columns(cells), side))
+            return pruned(_columns(cells), side, tops, q)
 
         def run(cells: pd.DataFrame, side: pd.DataFrame | None = None) -> pd.DataFrame:
+            side = None if side is None else _columns(side)
             if "query_id" not in cells:
                 return call(cells, side, 0)
             parts = [
                 call(c, side, q).assign(query_id=q) for q, c in cells.groupby("query_id")
             ]
-            return pd.concat([frame(*score(cells[:0], side)).assign(query_id=0), *parts])
+            return pd.concat([frame(*score(_columns(cells[:0]), side)).assign(query_id=0), *parts])
 
         return run
 
@@ -314,14 +337,24 @@ def _block_worker(partials, k, allow=None, per_group=None, prune=None):
 
 
 def _block_batches(cells: DataFrame, make_worker, schema: str, side=None) -> DataFrame:
-    """The one block-execution plan: ``cells`` (with the ``side`` rows
-    unioned in, when given) hash-partitioned and sorted by block_id,
-    then ONE ``mapInPandas`` whose partitions each make one worker with
-    ``make_worker()`` and call it with the rows of whole blocks — one
+    """The one block runner: ``cells`` (with the ``side`` rows unioned
+    in, when given) sorted by block_id and handed to workers made with
+    ``make_worker()``, each call holding the rows of whole blocks — one
     call per Arrow batch, not one per block, so the fixed cost of a
     Python call is paid per batch of Spark's own size. A worker's state
     (the pruning thresholds of :func:`_block_worker`) lives for its
-    partition only.
+    partition only. This is the only place that picks a placement:
+
+    * driver — the input is read once, capped at R + 1 rows, R being
+      ``spark.sql.execution.arrow.maxRecordsPerBatch``. When it holds
+      at most R rows and ``maxBytesPerBatch`` Arrow bytes it is one
+      batch, so it would reach a worker as at most one call per
+      partition on the cluster too: it is sorted by block_id (stably)
+      and run through the same runner in the driver process, as ONE
+      partition (:func:`_on_driver`).
+    * cluster — otherwise (and always when R is not positive): the
+      input hash-partitioned and sorted by block_id, then ONE
+      ``mapInPandas``; each partition makes one worker.
 
     Each batch is prefixed with the block carried over from the batch
     before; every complete block goes to the worker in one call and the
@@ -370,8 +403,41 @@ def _block_batches(cells: DataFrame, make_worker, schema: str, side=None) -> Dat
         if carry is not None:
             yield call(carry)
 
+    conf = cells.sparkSession._jconf
+    cap = conf.arrowMaxRecordsPerBatch()
+    if cap > 0:
+        table = cells.coalesce(1).limit(cap + 1).toArrow()
+        if table.num_rows <= cap and table.nbytes <= conf.arrowMaxBytesPerBatch():
+            return _on_driver(cells.sparkSession, table.sort_by("block_id"), run, schema)
     ordered = cells.repartition("block_id").sortWithinPartitions("block_id")
     return ordered.mapInPandas(run, schema)
+
+
+def _on_driver(spark: SparkSession, table: pa.Table, run, schema: str) -> DataFrame:
+    """The driver placement of :func:`_block_batches`: its runner ``run``
+    over the block-sorted ``table`` as one batch, in this process. The
+    batch becomes pandas through Spark's own Arrow-to-pandas converter,
+    so the worker gets the frame ``mapInPandas`` would hand it (session
+    time zone, nullable integers, binary as bytes); each output frame
+    becomes Arrow by column name, as ``mapInPandas`` takes it. The
+    outputs are combined into one chunk: Spark 4.1.2's Arrow-table
+    ``createDataFrame`` drops every row after a zero-row batch, and a
+    worker call may return none. The result is one partition, so a sort
+    or top-k over it runs one job."""
+    ser = ArrowStreamPandasSerializer(spark._jconf.sessionLocalTimeZone(), True, False)
+    pdf = pd.concat(
+        [ser.arrow_to_pandas(table[n], i).rename(n) for i, n in enumerate(table.column_names)],
+        axis=1,
+    )
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+
+    def to_arrow(out: pd.DataFrame) -> pa.Table:
+        return pa.Table.from_pandas(out[struct.names], arrow_schema, preserve_index=False)
+
+    tables = [arrow_schema.empty_table(), *map(to_arrow, run([pdf]))]
+    table = pa.concat_tables(tables).combine_chunks()
+    return spark.createDataFrame(table, struct).coalesce(1)
 
 
 def _rank(cells: DataFrame, partials, k, side=None, per_group=None, prune=None):
@@ -705,9 +771,10 @@ class TranscriptSearchEngine:
 
     def _local_df(self, rows, schema: str) -> DataFrame:
         """A small driver-built dimension (``rows`` of tuples, DDL
-        ``schema``) as an Arrow-backed ``LocalRelation``: broadcasting
-        it costs no job, where a list-built frame is a ``LogicalRDD``
-        that Spark must run a job to collect first."""
+        ``schema``) as an Arrow-backed ``LocalRelation`` rather than a
+        list-built ``LogicalRDD``. Broadcasting it still runs one
+        collect job: on Spark 4.1.2 a postings scan joined to a
+        broadcast LocalRelation ran 2 jobs, the scan alone 1."""
         struct = StructType.fromDDL(schema)
         records = [dict(zip(struct.names, r)) for r in rows]
         table = pa.Table.from_pylist(records, to_arrow_schema(struct))
@@ -964,16 +1031,15 @@ class TranscriptSearchEngine:
         when pruning).
 
         Blocks partition the doc space, so each doc's score is COMPLETE
-        within its block: one block-sorted ``mapInPandas``
-        (:func:`_block_batches`) scores whole blocks in numpy, one call
-        per Arrow batch, and emits only each call's top-k. The global
-        answer is TakeOrderedAndProject over n_calls*k tiny rows — no
-        posting-row explosion, no doc_stats join, and the only shuffle
-        moves the (compressed) query-term blocks themselves. The df
-        lookup behind ``rows`` is one tiny pruned-scan job (the
-        reference's dictionary point lookups, query.py:80), and ``rows``
-        itself is an Arrow-built LocalRelation, so broadcasting it runs
-        no job; the main job keeps two stages."""
+        within its block: the block runner (:func:`_block_batches`)
+        scores whole blocks in numpy, one call per Arrow batch, and
+        emits only each call's top-k. The global answer is a top-k over
+        n_calls*k tiny rows — no posting-row explosion, no doc_stats
+        join; on the cluster placement the only shuffle moves the
+        (compressed) query-term blocks themselves. The df lookup behind
+        ``rows`` is one tiny pruned-scan job (the reference's dictionary
+        point lookups, query.py:80); ``rows`` itself is an Arrow-built
+        LocalRelation, whose broadcast runs one small collect job."""
         batch = "query_id int, " * (len(rows[0]) == 4)
         occ = self._local_df(rows, f"term string, {batch}qidx int, wqt double")
         return (

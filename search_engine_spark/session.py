@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -14,9 +16,15 @@ def package_zip() -> str:
 
     UDF closures reference ``search_engine_spark``; executor Python workers
     must be able to import it regardless of the driver's cwd/sys.path.
+    Each call writes into a fresh temporary directory: Spark refuses a
+    second file of the same path with other contents, so two sessions on
+    one host must never share (and overwrite) one zip. The directory is
+    removed when the process exits, as the session that ships it is.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "search_engine_spark_pyfiles.zip")
+    tmp = tempfile.mkdtemp()
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    out = os.path.join(tmp, "search_engine_spark_pyfiles.zip")
     with zipfile.ZipFile(out, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for name in files:

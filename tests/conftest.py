@@ -13,6 +13,22 @@ def spark():
     )
 
 
+@pytest.fixture
+def cluster_placement(spark):
+    """Arrow batches of one row for the test's duration: every block
+    runner input of more than one row then exceeds the driver
+    placement's cap, so its plan takes the cluster placement (a
+    block-sorted ``mapInPandas`` over the pruned scans)."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "1")
+    yield
+    if prev is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, prev)
+
+
 @pytest.fixture(scope="session")
 def documents_df(spark):
     """The sf0.001 documents table (tiny, read once per session)."""

@@ -1,15 +1,20 @@
-"""Block-batch execution: every per-block worker runs in one
-block-sorted ``mapInPandas`` whose calls hold whole blocks, so results
-must not depend on how Spark cuts the rows into Arrow batches — and
-every driver-built query dimension is a ``LocalRelation``, never a
-``LogicalRDD``."""
+"""Block-batch execution: every per-block worker runs in one block
+runner whose calls hold whole blocks, so results must not depend on how
+Spark cuts the rows into Arrow batches, nor on where the runner places
+the worker — and every driver-built query dimension is a
+``LocalRelation``, never a ``LogicalRDD``.
+
+At Spark's default batch size these small inputs fit in one Arrow batch
+and take the driver placement (the worker runs in the driver process);
+at batch sizes 1 and 3 they exceed it and take the cluster placement
+(one block-sorted ``mapInPandas``)."""
 
 import os
 from math import log
 
 import pytest
 
-from search_engine_spark.engine import TranscriptSearchEngine
+from search_engine_spark.engine import TranscriptSearchEngine, _block_batches
 from search_engine_spark.fixtures import synthetic_transcripts
 
 BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -72,10 +77,12 @@ def _calls(e):
 
 
 def test_results_do_not_depend_on_arrow_batch_size(spark, eng):
-    """Batches of 1 and 3 rows make blocks straddle batch boundaries
-    (a block of a multi-term query has several cells): the carried
-    block must reach its worker whole, so every entry point returns
-    exactly what it returns at Spark's default batch size."""
+    """Batches of 1 and 3 rows put every entry point on the cluster
+    placement and make blocks straddle batch boundaries (a block of a
+    multi-term query has several cells): the carried block must reach
+    its worker whole, so every entry point returns exactly what it
+    returns at Spark's default batch size, where it runs on the driver
+    placement."""
     calls = _calls(eng)
     expected = {name: fn() for name, fn in calls.items()}
     assert expected["ranked"] and expected["and"] and expected["collocations"]
@@ -90,6 +97,21 @@ def test_results_do_not_depend_on_arrow_batch_size(spark, eng):
             spark.conf.unset(BATCH_KEY)
         else:
             spark.conf.set(BATCH_KEY, prev)
+
+
+def test_driver_placement_keeps_rows_after_an_empty_call(spark):
+    """Blocks 0 and 1 reach the worker in two calls on the driver
+    placement (the last block is carried to the end) and only the
+    second call returns rows: an empty call's output must not cut off
+    the rows of the calls after it."""
+    cells = spark.createDataFrame([(0, 10), (1, 20), (1, 21)], "block_id long, doc_id long")
+
+    def make():
+        return lambda pdf: pdf.loc[pdf["block_id"] == 1, ["doc_id"]]
+
+    df = _block_batches(cells, make, "doc_id long")
+    assert "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r.doc_id for r in df.collect()) == [20, 21]
 
 
 def _optimized(df):

@@ -53,9 +53,10 @@ def test_postings_scan_prunes_buckets_and_terms(spark, cold_engine):
     assert _files_read(pruned) < total
 
 
-def test_every_query_class_scans_pruned(spark, cold_engine):
-    """Ranked, boolean AND/OR and phrase plans all carry the pushed
-    term predicate — no query reads the whole postings table."""
+def test_every_query_class_scans_pruned(spark, cold_engine, cluster_placement):
+    """On the cluster placement, ranked, boolean AND/OR and phrase plans
+    all carry the pushed term predicate — no query reads the whole
+    postings table."""
     eng = cold_engine
     plans = {
         "ranked": _formatted_plan(spark, eng.ranked_query_df("test document")),
@@ -223,10 +224,11 @@ def test_ranked_query_batch_matches_single(cold_engine):
         assert got == cold_engine.ranked_query(q, k=10), q
 
 
-def test_positions_column_pruned_for_non_phrase(spark, cold_engine):
+def test_positions_column_pruned_for_non_phrase(spark, cold_engine, cluster_placement):
     """Q4 parity: positions bytes are read ONLY by phrase plans (the
     reference seeks past positions otherwise, diskindex.py:124-125);
-    Catalyst must prune the column from ranked/boolean scans."""
+    Catalyst must prune the column from ranked/boolean scans (pinned on
+    the cluster placement, whose plans hold the scans)."""
     eng = cold_engine
     ranked = _formatted_plan(spark, eng.ranked_query_df("test document"))
     booln = _formatted_plan(spark, eng._doc_set_df(["test", "document"], 2))
@@ -315,10 +317,11 @@ def test_filtered_equals_postfilter(cold_engine):
         assert eng.bm25_query(q, k=10, where="role = 'assistant'") == expected_bm, q
 
 
-def test_filtered_predicate_pushed_to_docs_scan(spark, cold_engine):
+def test_filtered_predicate_pushed_to_docs_scan(spark, cold_engine, cluster_placement):
     """The where= predicate must reach the docs Parquet scan as a
     PushedFilter with the text column pruned — the docs side of the
-    cogroup reads (doc_id, role), never the corpus text."""
+    block runner reads (doc_id, role), never the corpus text (pinned on
+    the cluster placement, whose plan holds the scans)."""
     eng = cold_engine
     df = eng.ranked_query_df("test document", where="role = 'assistant'")
     plan = _formatted_plan(spark, df)
@@ -328,6 +331,48 @@ def test_filtered_predicate_pushed_to_docs_scan(spark, cold_engine):
     scan_schema = allowed_plan.split("ReadSchema")[-1]
     assert "text" not in scan_schema
     assert "role" in scan_schema
+
+
+def test_small_query_plans_run_no_python_task(cold_engine):
+    """At Spark's default Arrow batch size these inputs fit in one
+    batch, so the block runner takes the driver placement: the ranked,
+    boolean AND/OR and phrase plans hold no ``MapInPandas``."""
+    eng = cold_engine
+    plans = {
+        "ranked": eng.ranked_query_df("test document"),
+        "and": eng._doc_set_df(["test", "document"], 2),
+        "or": eng._doc_set_df(["test", "document"]),
+        "phrase": eng._phrase_df(["test", "document"]),
+        "boolean": eng.boolean_query_df('test document + "test document"'),
+    }
+    for name, df in plans.items():
+        assert "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString(), name
+
+
+def test_capped_read_keeps_pushdown(spark, cold_engine, monkeypatch):
+    """The driver placement's one capped read scans exactly what the
+    cluster plan scans: bucket directories and the term predicate on
+    the postings, and the ``where=`` predicate pushed into the docs
+    scan."""
+    eng = cold_engine
+    frame_type = type(eng.postings)
+    to_arrow = frame_type.toArrow
+    reads = []
+
+    def spy(df):
+        reads.append(_formatted_plan(spark, df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(frame_type, "toArrow", spy)
+    eng.ranked_query_df("test document")
+    eng._doc_set_df(["test", "document"], 2)
+    eng._phrase_df(["test", "document"])
+    eng.ranked_query_df("test document", where="role = 'assistant'")
+    assert len(reads) == 4
+    for plan in reads:
+        assert "PartitionFilters: [bucket" in plan
+        assert "In(term, [document,test])" in plan
+    assert "EqualTo(role,assistant)" in reads[-1]
 
 
 def test_filtered_wand_matches_exhaustive(spark, tmp_path):

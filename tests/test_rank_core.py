@@ -194,11 +194,11 @@ def _count_nodes(df, node):
     return len(re.findall(rf"\b{node}\b", plan))
 
 
-def test_unmasked_ranked_plan_has_no_cogroup(spark, tmp_path):
-    """No tombstones and no ``where``: one block-sorted mapInPandas and
-    no side union. After a delete: the same mapInPandas over exactly
-    one union with the tombstone side. Never a grouped or cogrouped
-    pandas node."""
+def test_unmasked_ranked_plan_has_no_cogroup(spark, tmp_path, cluster_placement):
+    """On the cluster placement, with no tombstones and no ``where``:
+    one block-sorted mapInPandas and no side union. After a delete: the
+    same mapInPandas over exactly one union with the tombstone side.
+    Never a grouped or cogrouped pandas node."""
     eng = TranscriptSearchEngine.build(
         spark, golden_transcripts(spark), os.path.join(str(tmp_path), "idx")
     )
