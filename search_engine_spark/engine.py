@@ -21,16 +21,17 @@ matches, the analytics aggregates — runs through one block runner
 Python call per Arrow batch, not one per block; block-max WAND pruning
 (``pruned=True``) happens inside the ranked worker. The runner has two
 placements, chosen by the size of its input, which it reads once capped
-at one Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``
-rows, plus one):
+at ``_DRIVER_ROWS`` + 1 rows (the scan stays parallel; a local limit per
+partition feeds one single-partition read):
 
-* driver — the input fits in one batch (rows and
-  ``maxBytesPerBatch`` bytes): the worker runs in the driver process
+* driver — the input holds at most ``_DRIVER_ROWS`` rows and
+  ``_DRIVER_BYTES`` bytes of coded postings, positions and doc lengths
+  (the driver's decoding work): the worker runs in the driver process
   over the block-sorted rows, and its output is a one-partition Arrow
-  ``LocalRelation``. No exchange, no sort and no Python task runs; the
-  driver holds no more than one worker call holds on the cluster.
+  ``LocalRelation``. No exchange, no sort and no Python task runs.
 * cluster — anything larger: one block-sorted ``mapInPandas`` that
-  hands the worker whole blocks one Arrow batch at a time.
+  hands the worker whole blocks one Arrow batch at a time, decoding in
+  parallel.
 
 Two consequences: a ``*_df`` method runs the capped read (a Spark job)
 when it is called, not when its frame is collected; and an input over
@@ -54,7 +55,6 @@ import pyarrow as pa
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegralType, StructType
 from pyspark.storagelevel import StorageLevel
@@ -73,6 +73,24 @@ JACCARD_THRESHOLD = 0.35  # reference query.py:14
 DEFAULT_K = 10  # reference query.py:25
 RANKED_SCHEMA = "doc_id long, score double"
 _EMPTY = np.empty(0, dtype=np.int64)
+#: The driver placement's budget (:func:`_block_batches`): an input of at
+#: most ``_DRIVER_ROWS`` rows whose variable-byte blobs (``_CODED``, the
+#: bytes a worker decodes) sum to at most ``_DRIVER_BYTES`` runs in the
+#: driver process. The driver decodes serially; the cluster pays a fixed
+#: ~200-330 ms of exchange, sort and Python tasks, then decodes in
+#: parallel. Measured on a 4-vCPU VM (``local[4]``, 200,000-turn
+#: corpora, medians of 3, each placement forced), the cluster overtook
+#: the driver between 12,500 and 25,000 small cells (block_span 32;
+#: ranked: 546 vs 634 ms, then 901 vs 713 ms) and at 2.4 MiB (ranked)
+#: to 3.0 MiB (phrase) of coded bytes in large cells (default
+#: block_span, fitted; phrase: 743 vs 849 ms at 2.3 MiB, 1,282 vs
+#: 1,179 ms at 3.5 MiB). More cores lower the crossover, at most to the
+#: fixed cost over the driver's own rate (30-60 us a row, 180-300 ms a
+#: coded MiB): ~5,500-7,500 rows and ~1.1-1.2 MiB. The bounds sit
+#: between the two.
+_DRIVER_ROWS = 8192
+_DRIVER_BYTES = 2 << 20
+_CODED = ("postings_bin", "positions_bin", "doclens_bin")
 
 
 def _columns(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
@@ -345,16 +363,16 @@ def _block_batches(cells: DataFrame, make_worker, schema: str, side=None) -> Dat
     (the pruning thresholds of :func:`_block_worker`) lives for its
     partition only. This is the only place that picks a placement:
 
-    * driver — the input is read once, capped at R + 1 rows, R being
-      ``spark.sql.execution.arrow.maxRecordsPerBatch``. When it holds
-      at most R rows and ``maxBytesPerBatch`` Arrow bytes it is one
-      batch, so it would reach a worker as at most one call per
-      partition on the cluster too: it is sorted by block_id (stably)
-      and run through the same runner in the driver process, as ONE
-      partition (:func:`_on_driver`).
-    * cluster — otherwise (and always when R is not positive): the
-      input hash-partitioned and sorted by block_id, then ONE
-      ``mapInPandas``; each partition makes one worker.
+    * driver — the input is read once, capped at ``_DRIVER_ROWS`` + 1
+      rows (a local limit per partition, so the scan below stays
+      parallel). When it holds at most ``_DRIVER_ROWS`` rows and
+      ``_DRIVER_BYTES`` bytes of ``_CODED`` blobs — the budget under
+      which one serial call beats the cluster's fixed cost — it is
+      sorted by block_id (stably) and run through the same runner in
+      the driver process, as ONE partition (:func:`_on_driver`).
+    * cluster — otherwise: the input hash-partitioned and sorted by
+      block_id, then ONE ``mapInPandas``; each partition makes one
+      worker. Such an input has paid the capped read first.
 
     Each batch is prefixed with the block carried over from the batch
     before; every complete block goes to the worker in one call and the
@@ -403,12 +421,10 @@ def _block_batches(cells: DataFrame, make_worker, schema: str, side=None) -> Dat
         if carry is not None:
             yield call(carry)
 
-    conf = cells.sparkSession._jconf
-    cap = conf.arrowMaxRecordsPerBatch()
-    if cap > 0:
-        table = cells.coalesce(1).limit(cap + 1).toArrow()
-        if table.num_rows <= cap and table.nbytes <= conf.arrowMaxBytesPerBatch():
-            return _on_driver(cells.sparkSession, table.sort_by("block_id"), run, schema)
+    table = cells.limit(_DRIVER_ROWS + 1).toArrow()
+    coded = sum(table[c].nbytes for c in _CODED if c in table.column_names)
+    if table.num_rows <= _DRIVER_ROWS and coded <= _DRIVER_BYTES:
+        return _on_driver(cells.sparkSession, table.sort_by("block_id"), run, schema)
     ordered = cells.repartition("block_id").sortWithinPartitions("block_id")
     return ordered.mapInPandas(run, schema)
 
@@ -416,19 +432,18 @@ def _block_batches(cells: DataFrame, make_worker, schema: str, side=None) -> Dat
 def _on_driver(spark: SparkSession, table: pa.Table, run, schema: str) -> DataFrame:
     """The driver placement of :func:`_block_batches`: its runner ``run``
     over the block-sorted ``table`` as one batch, in this process. The
-    batch becomes pandas through Spark's own Arrow-to-pandas converter,
-    so the worker gets the frame ``mapInPandas`` would hand it (session
-    time zone, nullable integers, binary as bytes); each output frame
-    becomes Arrow by column name, as ``mapInPandas`` takes it. The
+    batch becomes the frame ``mapInPandas`` would hand the worker: Arrow
+    integers stay integers (a null makes float64), binary becomes bytes,
+    and timestamps come out naive in the session time zone. Each output
+    frame becomes Arrow by column name, as ``mapInPandas`` takes it. The
     outputs are combined into one chunk: Spark 4.1.2's Arrow-table
     ``createDataFrame`` drops every row after a zero-row batch, and a
     worker call may return none. The result is one partition, so a sort
     or top-k over it runs one job."""
-    ser = ArrowStreamPandasSerializer(spark._jconf.sessionLocalTimeZone(), True, False)
-    pdf = pd.concat(
-        [ser.arrow_to_pandas(table[n], i).rename(n) for i, n in enumerate(table.column_names)],
-        axis=1,
-    )
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    pdf = table.to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+    for name in pdf.select_dtypes("datetimetz").columns:
+        pdf[name] = pdf[name].dt.tz_convert(tz).dt.tz_localize(None)
     struct = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(struct)
 

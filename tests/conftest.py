@@ -14,19 +14,13 @@ def spark():
 
 
 @pytest.fixture
-def cluster_placement(spark):
-    """Arrow batches of one row for the test's duration: every block
-    runner input of more than one row then exceeds the driver
-    placement's cap, so its plan takes the cluster placement (a
-    block-sorted ``mapInPandas`` over the pruned scans)."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "1")
-    yield
-    if prev is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, prev)
+def cluster_placement(monkeypatch):
+    """No driver placement budget for the test's duration: every block
+    runner input then takes the cluster placement (a block-sorted
+    ``mapInPandas`` over the pruned scans)."""
+    from search_engine_spark import engine
+
+    monkeypatch.setattr(engine, "_DRIVER_ROWS", -1)
 
 
 @pytest.fixture(scope="session")

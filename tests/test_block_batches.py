@@ -4,16 +4,18 @@ Spark cuts the rows into Arrow batches, nor on where the runner places
 the worker — and every driver-built query dimension is a
 ``LocalRelation``, never a ``LogicalRDD``.
 
-At Spark's default batch size these small inputs fit in one Arrow batch
-and take the driver placement (the worker runs in the driver process);
-at batch sizes 1 and 3 they exceed it and take the cluster placement
-(one block-sorted ``mapInPandas``)."""
+These small inputs fit the driver placement's budget, so by default the
+worker runs in the driver process; the ``cluster_placement`` fixture
+puts them on the cluster placement (one block-sorted ``mapInPandas``),
+where Arrow batch sizes of 1 and 3 rows cut blocks across batches."""
 
 import os
 from math import log
 
+import pandas as pd
 import pytest
 
+from search_engine_spark import engine
 from search_engine_spark.engine import TranscriptSearchEngine, _block_batches
 from search_engine_spark.fixtures import synthetic_transcripts
 
@@ -76,16 +78,16 @@ def _calls(e):
     }
 
 
-def test_results_do_not_depend_on_arrow_batch_size(spark, eng):
-    """Batches of 1 and 3 rows put every entry point on the cluster
-    placement and make blocks straddle batch boundaries (a block of a
-    multi-term query has several cells): the carried block must reach
-    its worker whole, so every entry point returns exactly what it
-    returns at Spark's default batch size, where it runs on the driver
+def test_results_do_not_depend_on_arrow_batch_size(spark, eng, request):
+    """On the cluster placement, batches of 1 and 3 rows make blocks
+    straddle batch boundaries (a block of a multi-term query has several
+    cells): the carried block must reach its worker whole, so every
+    entry point returns exactly what it returns on the driver
     placement."""
     calls = _calls(eng)
     expected = {name: fn() for name, fn in calls.items()}
     assert expected["ranked"] and expected["and"] and expected["collocations"]
+    request.getfixturevalue("cluster_placement")
     prev = spark.conf.get(BATCH_KEY, None)
     try:
         for size in ("1", "3"):
@@ -112,6 +114,67 @@ def test_driver_placement_keeps_rows_after_an_empty_call(spark):
     df = _block_batches(cells, make, "doc_id long")
     assert "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
     assert sorted(r.doc_id for r in df.collect()) == [20, 21]
+
+
+def test_budget_counts_rows_and_coded_bytes(spark, monkeypatch):
+    """The driver budget bounds the rows and the bytes of the coded
+    blobs a worker decodes; ``weights_bin`` (raw float64) is not coded
+    work and does not count."""
+    cells = spark.createDataFrame(
+        [(0, b"\x01" * 8, b"\x00" * 64), (1, b"\x02" * 8, b"\x00" * 64)],
+        "block_id long, postings_bin binary, weights_bin binary",
+    )
+
+    def on_driver():
+        df = _block_batches(cells, lambda: lambda pdf: pdf[["block_id"]], "block_id long")
+        assert sorted(r.block_id for r in df.collect()) == [0, 1]
+        return "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
+
+    monkeypatch.setattr(engine, "_DRIVER_BYTES", 64)  # 16 data + 12 offset bytes coded
+    assert on_driver()
+    monkeypatch.setattr(engine, "_DRIVER_ROWS", 1)
+    assert not on_driver()
+    monkeypatch.setattr(engine, "_DRIVER_ROWS", 2)
+    monkeypatch.setattr(engine, "_DRIVER_BYTES", 16)
+    assert not on_driver()
+
+
+def test_worker_gets_the_same_frames_on_both_placements(spark, request):
+    """The driver placement hands the worker the frames ``mapInPandas``
+    hands it: integer columns (the union's 0-padding included), a NULL
+    and a NaN boost, the side rows' null ``postings_bin`` and timestamps
+    in the session time zone, with the same dtypes."""
+    def make():
+        def worker(c, s):
+            seen = [f"{f.dtypes.to_dict()} {f.to_dict('list')}" for f in (c, s)]
+            return pd.DataFrame({"seen": [" | ".join(seen)]})
+
+        return worker
+
+    def seen():
+        cells = spark.createDataFrame(
+            [(0, 7, b"\x01"), (1, 8, b"\x02\x03")],
+            "block_id long, qidx int, postings_bin binary",
+        )
+        side = spark.sql(
+            "SELECT * FROM VALUES "
+            "(0L, 5L, CAST(NULL AS DOUBLE), TIMESTAMP'2024-03-09 23:30:00'), "
+            "(1L, 33L, double('NaN'), TIMESTAMP'2024-07-01 12:00:00') "
+            "AS t(block_id, doc_id, boost, ts)"
+        )
+        df = _block_batches(cells, make, "seen string", side)
+        return sorted(r.seen for r in df.collect())
+
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        on_driver = seen()
+        assert len(on_driver) == 2 and "Timestamp('2024-07-01 12:00:00')" in on_driver[1]
+        request.getfixturevalue("cluster_placement")
+        assert seen() == on_driver
+    finally:
+        spark.conf.set(key, prev)
 
 
 def _optimized(df):

@@ -8,15 +8,16 @@ the checkout that holds this file). It generates the perfbench seed-N
 corpus with ``perfbench/corpus.py``, indexes it the way
 ``perfbench/run.py`` does (same turn count and ``block_span``) under a
 temporary directory, and runs each of the 8 perfbench query classes
-``--calls`` times through the same public entry points, cycling through
-the class's queries, after one warm-up call per class. It prints one
-Markdown table row per class:
+``--calls`` times, cycling through the class's queries, after one
+warm-up call per class. A call builds the query's DataFrame (``*_df``;
+for ``wand_head`` the pruned plan ``ranked_query(pruned=True)``
+collects) and collects it. It prints one Markdown table row per class:
 
 * ``p50 ms`` — median wall time of a call;
 * ``jobs/call`` — median Spark jobs a call started (one job group per
   call, read back from the status tracker);
-* ``MapInPandas`` — whether the executed plan of the class's DataFrame
-  form (``*_df``) holds a ``MapInPandas`` node, for any of its queries.
+* ``MapInPandas`` — whether the executed plan of any call's frame holds
+  a ``MapInPandas`` node.
 
 Nothing under ``perfbench/`` is written; the temporary directory is
 removed at exit.
@@ -40,20 +41,9 @@ import corpus  # noqa: E402  (perfbench/corpus.py)
 from run import BLOCK_SPAN, K, N_TURNS  # noqa: E402  (perfbench/run.py)
 
 
-def call(eng, cls: str, text: str, window):
-    """One query of class ``cls``, as perfbench's closed loop issues it."""
-    if cls == "wand_head":
-        return eng.ranked_query(text, K, pruned=True)
-    if cls == "bm25_head":
-        return eng.bm25_query(text, K)
-    if cls in ("boolean", "phrase"):
-        return eng.boolean_query(text)
-    where = corpus.ts_filter(window) if window else None
-    return eng.ranked_query(text, K, where=where)
-
-
 def frame(eng, cls: str, text: str, window):
-    """The DataFrame form of :func:`call`'s query."""
+    """The DataFrame of one query of class ``cls``: the frame whose
+    collect is the call perfbench's closed loop issues."""
     if cls == "wand_head":
         with eng._pruning(True) as counts:
             return eng._score_terms_df(eng._ranked_terms(text), K, counts=counts)
@@ -102,20 +92,19 @@ def main() -> None:
         print("|---|---|---|---|")
         for cls in corpus.CLASSES:
             qs = queries[cls]
-            call(eng, cls, *qs[0])  # warm-up
-            ms, jobs = [], []
+            frame(eng, cls, *qs[0]).collect()  # warm-up
+            ms, jobs, python = [], [], False
             for i in range(args.calls):
                 group = f"query_jobs-{cls}-{i}"
                 sc.setJobGroup(group, cls)
                 t = time.perf_counter()
-                call(eng, cls, *qs[i % len(qs)])
+                df = frame(eng, cls, *qs[i % len(qs)])
+                df.collect()
                 ms.append((time.perf_counter() - t) * 1000)
                 jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                python = python or "MapInPandas" in plan
             sc.setLocalProperty("spark.jobGroup.id", None)
-            python = any(
-                "MapInPandas" in frame(eng, cls, *q)._jdf.queryExecution().executedPlan().toString()
-                for q in qs
-            )
             print(f"| {cls} | {statistics.median(ms):.0f} | "
                   f"{statistics.median(jobs):g} | {'yes' if python else 'no'} |")
         spark.stop()
